@@ -26,8 +26,7 @@ import graft.train.Estimation
   *     warmup, good/bad Parzen densities over every dimension score a candidate
   *     batch by the l/g expected-improvement ratio — with one seeded RNG threaded
   *     through sampling, bucketing and the search so runs reproduce
-  *     (`searchStrategy = "adaptive"` keeps the earlier perturb-the-top-quartile
-  *     TPE-lite; `"random"` recovers pure random search);
+  *     (`searchStrategy = "random"` recovers pure random search);
   *   - no metastore temp tables to GC (Y15) — intermediates are DataFrames;
   *   - run log returned as a DataFrame instead of MLflow calls (Y19).
   *
@@ -87,6 +86,7 @@ object AutoLinker {
       candidateRuleOverride: Option[Seq[String]] = None,
       uDeterministicOrder: Boolean = false): Result = {
 
+    validateSearch(maxEvals, searchStrategy)
     val rnd = new Random(seed)
     val withId = Cleaning.withUniqueId(data, uidCol)
     val attrs = attributeColumns.getOrElse(
@@ -144,6 +144,7 @@ object AutoLinker {
       uDeterministicOrder: Boolean = false,
       mappingOverride: Option[Seq[(String, String, Long)]] = None): Result = {
 
+    validateSearch(maxEvals, searchStrategy)
     val rnd = new Random(seed)
     val lAttrs = leftAttributes.getOrElse(
       left.columns.filterNot(c => c == uidCol || trueLabelCol.contains(c)).toSeq)
@@ -185,6 +186,18 @@ object AutoLinker {
       nRows = n)
   }
 
+  private val SearchStrategies = Seq("tpe", "random")
+
+  /** Rejects search settings up front, before any Spark job: an unknown strategy
+    * would otherwise draw uniformly without a word, and a search without trials has
+    * no best trial to return.
+    */
+  private def validateSearch(maxEvals: Int, searchStrategy: String): Unit = {
+    require(SearchStrategies.contains(searchStrategy), "searchStrategy must be one of " +
+      s"${SearchStrategies.mkString(", ")}, got '$searchStrategy'")
+    require(maxEvals >= 1, s"maxEvals must be at least 1, got $maxEvals")
+  }
+
   /** Y3 — candidate blocking rules from a ≤10k sample, filtered by estimated cost. */
   private def candidateRules(
       df: DataFrame,
@@ -213,9 +226,7 @@ object AutoLinker {
 
   /** One parameter draw. Uniform during warmup or with `searchStrategy = "random"`;
     * `"tpe"` (the default — full Hyperopt-parity [[Tpe]] draw: Parzen good/bad
-    * densities + l/g-ratio acquisition over a candidate batch); `"adaptive"` keeps
-    * the round-5 TPE-lite (perturb a top-quartile parent with an exploration
-    * floor) for comparison runs.
+    * densities + l/g-ratio acquisition over a candidate batch).
     */
   private def drawParams(
       rnd: Random,
@@ -233,33 +244,12 @@ object AutoLinker {
 
     val warmup = 3
     if (strategy == "random" || past.size < warmup) uniform()
-    else if (strategy == "tpe") {
-      // 10% uniform exploration floor: the l/g acquisition is pure exploitation
-      // and can permanently avoid a region whose only observations landed in the
-      // bad set — the floor bounds that regret (hyperopt gets the same effect
-      // from its annealed prior weight)
-      if (rnd.nextDouble() < 0.1) uniform() else Tpe.draw(rnd, attrs, ruleChoices, past)
-    } else if (strategy != "adaptive") uniform()
-    else if (rnd.nextDouble() < 0.3) uniform()
-    else {
-      val top = past.sortBy(-_.metric).take(math.max(1, past.size / 4 + 1))
-      val parent = top(rnd.nextInt(top.size))
-      val specs = parent.model.comparisons.map { s =>
-        if (rnd.nextDouble() < 0.2) uniformSpec(s.column)
-        else s.metric match {
-          case "levenshtein" =>
-            s.copy(threshold =
-              math.max(1.0, math.min(5.0, s.threshold + (rnd.nextInt(3) - 1))))
-          case _ =>
-            s.copy(threshold =
-              math.max(0.7, math.min(0.99, s.threshold + rnd.nextGaussian() * 0.03)))
-        }
-      }
-      val rule =
-        if (rnd.nextDouble() < 0.7) parent.blockingRule
-        else ruleChoices(rnd.nextInt(ruleChoices.size))
-      (specs, rule)
-    }
+    // 10% uniform exploration floor: the l/g acquisition is pure exploitation
+    // and can permanently avoid a region whose only observations landed in the
+    // bad set — the floor bounds that regret (hyperopt gets the same effect
+    // from its annealed prior weight)
+    else if (rnd.nextDouble() < 0.1) uniform()
+    else Tpe.draw(rnd, attrs, ruleChoices, past)
   }
 
   /** One full trial draw: comparison specs + blocking rule ([[drawParams]]) plus the
@@ -325,17 +315,10 @@ object AutoLinker {
     // rotate below checkpoints the joined pair rows themselves (freeing the
     // intermediate indexed table), so each trial's u pass is one gamma aggregation
     // over ~uTargetPairs checkpointed rows instead of re-running the 4 offset joins
-    val uSource = linkRight match {
-      case Some(right) =>
-        val shared = (trainDf.columns.toSet intersect right.columns.toSet).toSeq.sorted
-        trainDf.select(shared.map(col): _*)
-          .unionByName(right.select(shared.map(col): _*))
-      case None => trainDf
-    }
     val tracker = new graft.util.CheckpointTracker(trainDf.sparkSession)
     val uPairs = tracker.rotate(
-      Estimation.uSamplePairs(uSource, uidCol, attrs, uTargetPairs,
-        hashShuffle = !uDeterministicOrder, seed = 42L, tracker))
+      Estimation.uSamplePairs(Estimation.uSourceTable(trainDf, linkRight), uidCol, attrs,
+        uTargetPairs, hashShuffle = !uDeterministicOrder, seed = 42L, tracker))
 
     // one full trial: train → predict → cluster → metrics. Pure function of its
     // draw (plus the shared loop invariants) — no session-global state, no

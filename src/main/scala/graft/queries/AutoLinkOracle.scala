@@ -29,8 +29,8 @@ import graft.train.Estimation
   *   - J5 EM per training rule: 25 freeze-on-convergence iterations (the
   *     `j5_em_train` done-flag chain), λ chained across the trial's three
   *     sessions, empty-block sessions passing through their inputs exactly as
-  *     `emFromPatterns` does; link-mode pattern pairs CROSS the two tables only
-  *     (no `uid_l < uid_r` — the `l-`/`r-` uid prefixes keep sides disjoint);
+  *     `Estimation.emSessions` does; link-mode pattern pairs CROSS the two tables
+  *     only (no `uid_l < uid_r` — the `l-`/`r-` uid prefixes keep sides disjoint);
   *   - the m/u averaging `Estimation.train` applies across sessions and the
   *     sampled u;
   *   - J6 predict under the drawn blocking rule with weights computed from the
@@ -194,7 +194,8 @@ object AutoLinkOracle {
     if (k == 1) "(SELECT 1.0 / n FROM nr)" else s"(SELECT lam FROM e_${t}_${k - 1})"
 
   /** J5: one EM session — pattern table over the training-rule block, a 25-step
-    * freeze-on-convergence chain, and the `emFromPatterns` empty-block pass-through.
+    * freeze-on-convergence chain, and the `Estimation.emSessions` empty-block
+    * pass-through.
     */
   private def sessionCtes(attrs: Seq[String], mode: Mode, p: TrialPlan, k: Int): String = {
     val sp = p.sessions(k - 1)

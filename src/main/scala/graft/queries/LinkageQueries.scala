@@ -401,11 +401,11 @@ object LinkageQueries {
        |)""".stripMargin
   }
 
-  /** One EM iteration in SQL, mirroring `Estimation.emOverPatterns` exactly: the
-    * gamma ladders, the left-to-right E-step products (λ0·∏DefaultM[γ] over
-    * (1−λ0)·∏u0[γ], null gammas contributing factor 1), the pattern-count-weighted
-    * M-step sums, and the 1e-9 floors. Literals are rendered from the same Scala
-    * doubles the driver loop multiplies.
+  /** One EM iteration in SQL, mirroring `Estimation.emSessions`' driver loop
+    * exactly: the gamma ladders, the left-to-right E-step products (λ0·∏DefaultM[γ]
+    * over (1−λ0)·∏u0[γ], null gammas contributing factor 1), the
+    * pattern-count-weighted M-step sums, and the 1e-9 floors. Literals are
+    * rendered from the same Scala doubles the driver loop multiplies.
     */
   private val emOneIterSql: String = {
     val specs = demoSpecs.zipWithIndex

@@ -223,7 +223,8 @@ object MetricQueries {
       // converged EM — FULL oracle: tol-based stop over a fixed maxIter=25 cap is
       // a closed form once each unrolled iteration FREEZES after the first
       // convergent step (done-flag chain); outputs round to 6 because the
-      // driver loop's pattern-sum order is collect-order-dependent at the ULP
+      // driver loop sums patterns in its own order, not DuckDB's aggregation
+      // order, so the two differ at the ULP
       val df = custTruth(s, dir)
       val specs = Seq(
         ComparisonSpec("c_name", "levenshtein", 3),
@@ -250,7 +251,7 @@ object MetricQueries {
     * (done propagates, frozen params pass through), which replays the driver
     * loop's data-dependent early stop exactly under the fixed maxIter=25 cap.
     * Ladders, floors (1e-9), clamps, and the left-to-right E-step products
-    * mirror `Estimation.emOverPatterns`.
+    * mirror the driver E-step and M-step of `Estimation.emSessions`.
     */
   private def emTrainChainSql(maxIter: Int): String = {
     val specs = Seq(

@@ -21,9 +21,9 @@ object TextQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/documents.parquet")
 
-  /** Round-robin spread for the HEAVY-scan consumers (the bm25 terms explode, the
-    * qrels token join, passage chunking): a single-file source otherwise runs the
-    * whole tokenize/explode/partial-agg pass on ONE task (guide §2.5 input skew).
+  /** Round-robin spread for the HEAVY-scan consumers (the bm25 terms explode,
+    * passage chunking): a single-file source otherwise runs the whole
+    * tokenize/explode/partial-agg pass on ONE task (guide §2.5 input skew).
     * Conditional — a naturally wide scan (the cluster-scale case) short-circuits,
     * so this can only add parallelism where the scan had none. Downstream
     * aggregates are counts/long-sums plus per-row deterministic projections, and
@@ -137,7 +137,8 @@ object TextQueries {
     // NO spread here (r12 measured): the qrels tokenize+explode is the LIGHT leg
     // of its two callers (ndcg, ep13) — both already pay a spread exchange for the
     // bm25 terms pass, and A/B showed the second exchange costs more than the
-    // single-task tokenize it parallelizes (best-of-6 ndcg 3.47→4.01 with it)
+    // single-task tokenize it parallelizes (ndcg 2.91–2.99 s without it vs
+    // 3.33–4.03 s with it across two A/B sessions, OPTIMIZATION_r12.md §7)
     val docTok = docs(s, dir).select(col("doc_id"),
       explode(array_distinct(TextOps.tokens(col("text")))).as("token"))
     val qTok = q.select(col("query_id"),

@@ -121,9 +121,9 @@ object FellegiSunter {
     * that spiked 6.3× in the r10 driver run under co-located memory/disk
     * contention while the quiet record held 5.35 s. The explode form feeds the
     * argmax aggregation straight off the gamma-ladder projection: same symmetric
-    * multiset, zero pair-table materialization (tools/J6Ab: identical output
-    * hash, equal quiet/CPU-loaded time, nothing left for block eviction or spill
-    * to amplify). The only remaining materialization is the |records|-bounded
+    * multiset, zero pair-table materialization (same-JVM A/B in OPTIMIZATION_r11.md,
+    * settled in OPTIMIZATION_r12.md §3: identical output hash, equal quiet/CPU-loaded
+    * time, nothing left for block eviction or spill to amplify). The only remaining materialization is the |records|-bounded
     * argmax list the mutual self-join reads twice.
     */
   def mutualBestPairs(scored: DataFrame, threshold: Double): DataFrame = {

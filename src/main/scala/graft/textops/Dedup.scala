@@ -118,7 +118,8 @@ object Dedup {
     // (id | df, tok), keeping rn ≤ sz − ⌈t·sz⌉ + 1. Plan history (SCALING.md
     // round 10): r9 swapped this for a collect_list → array_sort → slice hash
     // aggregation chasing the 17.9× under-load degradation r8 measured against
-    // concurrent JVMs — but the same-JVM A/B (tools/PrefixAb, sf0.1, second-run)
+    // concurrent JVMs — but the same-JVM A/B (SCALING.md "PPJoin prefix selection",
+    // sf0.1, second-run)
     // shows the window plan 2.6× FASTER on a quiet machine (3.4 vs 8.2–9.1 s)
     // AND flat under a 25 % CPU burner (2.8–3.2 s): Tungsten's radix sort beats
     // per-row struct-array materialization + JVM array_sort, and the r8

@@ -3,6 +3,7 @@ package graft.train
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.blocking.{BlockingRule, PairGenerator}
 import graft.compare.Comparisons
 import graft.model.{ColumnParams, ComparisonSpec, TrainedModel}
 
@@ -130,122 +131,164 @@ object Estimation {
     * would still have scanned them all just to count). Quadratic blow-ups are guarded
     * where they must be: at rule selection, by the E8 cost estimate.
     *
+    * The one-rule case of [[emSessions]].
+    *
     * @return (λ estimate, updated m per column, updated u per column)
     */
   def emTrain(
       df: DataFrame,
       uid: String,
       specs: Seq[ComparisonSpec],
-      trainingRule: graft.blocking.BlockingRule,
+      trainingRule: BlockingRule,
       u: Map[String, Array[Double]],
       initialLambda: Double,
       tol: Double = 0.01,
       maxIter: Int = 25,
-      linkRight: Option[DataFrame] = None,
-      maxDriverPatterns: Long = MaxDriverPatterns): (Double, Map[String, Array[Double]], Map[String, Array[Double]]) = {
+      linkRight: Option[DataFrame] = None)
+      : (Double, Map[String, Array[Double]], Map[String, Array[Double]]) =
+    emSessions(df, uid, specs, Seq(trainingRule), u, initialLambda, tol, maxIter,
+      linkRight).head
 
-    val ruleCols = trainingRule.columns.toSet
-    val freeSpecs = specs.filterNot(s => ruleCols.contains(s.column))
-    // a rule that blocks on every compared column leaves nothing to estimate
-    if (freeSpecs.isEmpty) return (initialLambda, Map.empty, Map.empty)
-    // carry both compared and blocked-on columns through the pair join
-    val attrs = (specs.map(_.column) ++ trainingRule.columns).distinct
-
-    // link mode: pairs cross the two tables only (Splink link_only semantics)
-    val pairs = linkRight match {
-      case Some(right) =>
-        graft.blocking.PairGenerator.linkPairs(df, right, uid, attrs, Seq(trainingRule))
-      case None =>
-        graft.blocking.PairGenerator.dedupePairs(df, uid, attrs, Seq(trainingRule))
-    }
-    val tracker = new graft.util.CheckpointTracker(df.sparkSession)
-    // Agreement-pattern aggregation (the same trick Splink's EM uses): the E- and
-    // M-steps depend only on the gamma VECTOR, so collapse the pairs to distinct
-    // patterns with counts — at most 4^K rows for K free columns, usually a handful —
-    // and iterate over those. The whole EM loop then costs ONE Spark aggregation
-    // regardless of iteration count; with a bounded pattern table the iterations are
-    // pure driver arithmetic (the distributed per-iteration path remains as a
-    // fallback for pathologically wide comparison spaces).
-    val gammaCols = freeSpecs.map(s => col(s"gamma_${s.column}"))
-    val patterns = tracker.rotate(Comparisons.withGammas(pairs, freeSpecs)
-      .groupBy(gammaCols: _*)
-      .agg(count(lit(1)).as("cnt")))
-    try {
-      // one collect with a limit probe replaces the former count + collect pair:
-      // an extra row past the cap proves the table is too wide without counting it
-      // (cap BEFORE the +1 so a Long.MaxValue "no cap" sentinel can't overflow)
-      // 0 is the force-distributed sentinel (cap 0 → any pattern exceeds it)
-      require(maxDriverPatterns >= 0, s"maxDriverPatterns must be >= 0, got $maxDriverPatterns")
-      val cap = math.min(maxDriverPatterns, Int.MaxValue.toLong - 1).toInt
-      val probe = patterns.limit(cap + 1).collect()
-      if (probe.isEmpty)
-        (initialLambda, freeSpecs.map(s => s.column -> DefaultM.clone).toMap,
-          freeSpecs.map(s => s.column -> u(s.column).clone).toMap)
-      else if (probe.length <= cap) {
-        val pats = probe.map { r =>
-          (freeSpecs.indices.map(i => r.getInt(i)).toArray, r.getLong(freeSpecs.length))
-        }
-        emOverPatterns(pats, freeSpecs, u, initialLambda, tol, maxIter)
-      } else emDistributed(patterns, freeSpecs, u, initialLambda, tol, maxIter)
-    } finally tracker.close() // all estimates are driver-side; free the pattern blocks
-  }
+  private type Probs = Map[String, Array[Double]]
 
   private val MaxDriverPatterns = 100000L
 
-  /** EM iterations over a driver-sized agreement-pattern table: per iteration one
-    * tight pass over (gamma vector, count) rows — no Spark jobs at all.
+  /** One EM session per training rule, in order, λ chained from each session to the
+    * next (reference autolinker.py:555-558). Rules blocking on every compared column
+    * have nothing to estimate and pass λ through.
+    *
+    * Agreement-pattern aggregation (the same trick Splink's EM uses): the E- and
+    * M-steps depend only on the gamma VECTOR, so ONE Spark pass collapses every
+    * rule's pairs to (rule, gamma vector, count) rows — at most 4^K per rule for K
+    * compared columns, usually a handful. When that table has at most
+    * `maxDriverPatterns` rows per estimating rule, one probe collects it, each rule
+    * is marginalized to its free columns (summing over the blocked columns' gammas
+    * is exactly a per-rule aggregation over the free ones) and iterated as pure
+    * driver arithmetic. Otherwise the table is checkpointed once and each rule's
+    * slice runs one distributed aggregation per iteration.
+    *
+    * @param maxDriverPatterns pattern rows per estimating rule the driver collects;
+    *                          0 forces the distributed backend
     */
-  private def emOverPatterns(
-      pats: Array[(Array[Int], Long)],
-      freeSpecs: Seq[ComparisonSpec],
-      u0: Map[String, Array[Double]],
+  private[graft] def emSessions(
+      df: DataFrame,
+      uid: String,
+      specs: Seq[ComparisonSpec],
+      rules: Seq[BlockingRule],
+      u: Map[String, Array[Double]],
       initialLambda: Double,
       tol: Double,
-      maxIter: Int): (Double, Map[String, Array[Double]], Map[String, Array[Double]]) = {
-    val total = pats.map(_._2).sum.toDouble
-    val k = freeSpecs.length
+      maxIter: Int,
+      linkRight: Option[DataFrame],
+      maxDriverPatterns: Long = MaxDriverPatterns)
+      : Seq[(Double, Map[String, Array[Double]], Map[String, Array[Double]])] = {
+    val freeIdx =
+      rules.map(r => specs.indices.filterNot(i => r.columns.contains(specs(i).column)))
+    val active = rules.indices.filter(i => freeIdx(i).nonEmpty)
+    val tracker = new graft.util.CheckpointTracker(df.sparkSession)
+    try {
+      // per estimating rule: (Σ pattern counts, E-step) — and no Spark job at all
+      // when no rule estimates anything
+      val backend: Int => (Double, EStep) =
+        if (active.isEmpty) Map.empty
+        else {
+          val patterns = patternTable(df, uid, specs, rules, active, linkRight)
+          // one collect with a limit probe: a row past the cap proves the table is
+          // too wide without counting it
+          val cap = (math.min(maxDriverPatterns, (Int.MaxValue - 1L) / active.size) *
+            active.size).toInt
+          val probe = patterns.limit(cap + 1).collect()
+          if (probe.length <= cap) {
+            val byRule = probe.groupBy(_.getInt(0)).map { case (i, rows) =>
+              i -> rows.map(r => (specs.indices.map(k => r.getInt(k + 1)).toArray,
+                r.getLong(specs.length + 1)))
+            }
+            i => {
+              val pats = byRule.getOrElse(i, Array.empty[(Array[Int], Long)])
+                .groupBy { case (g, _) => freeIdx(i).map(g).toSeq }
+                .map { case (key, rows) => (key.toArray, rows.map(_._2).sum) }
+                .toArray
+              (pats.map(_._2).sum.toDouble, driverEStep(pats, freeIdx(i).map(specs)))
+            }
+          } else {
+            val table = tracker.rotate(patterns)
+            val totals = table.groupBy("_rule_idx").agg(sum("cnt")).collect()
+              .map(r => r.getInt(0) -> r.getLong(1).toDouble).toMap
+            i => (totals.getOrElse(i, 0.0), distributedEStep(
+              table.filter(col("_rule_idx") === i), freeIdx(i).map(specs)))
+          }
+        }
+      var lambda = initialLambda
+      rules.indices.map { i =>
+        val session: (Double, Probs, Probs) =
+          if (freeIdx(i).isEmpty) (lambda, Map.empty, Map.empty)
+          else {
+            val (total, eStep) = backend(i)
+            emLoop(freeIdx(i).map(specs), total, u, lambda, tol, maxIter, eStep)
+          }
+        lambda = session._1
+        session
+      }
+    } finally tracker.close() // all estimates are driver-side; free the pattern blocks
+  }
+
+  /** The tagged agreement-pattern table of the `active` rules in one Spark pass:
+    * each rule's pairs carry its index as `_rule_idx` through a single unioned gamma
+    * aggregation over ALL spec columns. Link mode (`linkRight`) pairs cross the two
+    * tables only (Splink link_only semantics).
+    */
+  private def patternTable(
+      df: DataFrame,
+      uid: String,
+      specs: Seq[ComparisonSpec],
+      rules: Seq[BlockingRule],
+      active: Seq[Int],
+      linkRight: Option[DataFrame]): DataFrame = {
+    // carry both compared and blocked-on columns through the pair joins
+    val attrs = (specs.map(_.column) ++ rules.flatMap(_.columns)).distinct
+    val tagged = active.map { i =>
+      val pairs = linkRight match {
+        case Some(right) => PairGenerator.linkPairs(df, right, uid, attrs, Seq(rules(i)))
+        case None => PairGenerator.dedupePairs(df, uid, attrs, Seq(rules(i)))
+      }
+      pairs.withColumn("_rule_idx", lit(i))
+    }
+    val gammaCols = specs.map(s => col(s"gamma_${s.column}"))
+    Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
+      .groupBy((col("_rule_idx") +: gammaCols): _*)
+      .agg(count(lit(1)).as("cnt"))
+  }
+
+  /** One E-step from the current (λ, m, u): count-weighted match and non-match sums
+    * per free column and gamma level, and Σw over all patterns.
+    */
+  private type EStep = (Double, Probs, Probs) => (Probs, Probs, Double)
+
+  /** The EM iterations shared by both backends: the M-step refit, the 1e-9 floors,
+    * the λ clamp and the convergence delta. An empty block (`total` 0) passes the
+    * initial parameters through.
+    */
+  private def emLoop(
+      freeSpecs: Seq[ComparisonSpec],
+      total: Double,
+      u0: Probs,
+      initialLambda: Double,
+      tol: Double,
+      maxIter: Int,
+      eStep: EStep): (Double, Probs, Probs) = {
     var lambda = initialLambda
     var m = freeSpecs.map(s => s.column -> DefaultM.clone).toMap
     var uEst = freeSpecs.map(s => s.column -> u0(s.column).clone).toMap
+    def refit(sums: Probs): Probs =
+      freeSpecs.map { s =>
+        val arr = sums(s.column)
+        val tot = arr.sum
+        s.column -> arr.map(x => math.max(x / math.max(tot, Floor), Floor))
+      }.toMap
     var delta = Double.MaxValue
     var iter = 0
-    while (delta > tol && iter < maxIter) {
-      val mw = freeSpecs.map(s => s.column -> new Array[Double](s.numLevels)).toMap
-      val uw = freeSpecs.map(s => s.column -> new Array[Double](s.numLevels)).toMap
-      var sumW = 0.0
-      pats.foreach { case (gs, cnt) =>
-        // E-step: P(match | pattern); gamma −1 (null) contributes factor 1 to both sides
-        var num = lambda
-        var den = 1.0 - lambda
-        var i = 0
-        while (i < k) {
-          val g = gs(i)
-          if (g >= 0) {
-            val c = freeSpecs(i).column
-            num *= m(c)(g)
-            den *= uEst(c)(g)
-          }
-          i += 1
-        }
-        val w = num / (num + den)
-        sumW += cnt * w
-        i = 0
-        while (i < k) {
-          val g = gs(i)
-          if (g >= 0) {
-            val c = freeSpecs(i).column
-            mw(c)(g) += cnt * w
-            uw(c)(g) += cnt * (1.0 - w)
-          }
-          i += 1
-        }
-      }
-      def refit(sums: Map[String, Array[Double]]): Map[String, Array[Double]] =
-        freeSpecs.map { s =>
-          val arr = sums(s.column)
-          val tot = arr.sum
-          s.column -> arr.map(x => math.max(x / math.max(tot, Floor), Floor))
-        }.toMap
+    while (total > 0 && delta > tol && iter < maxIter) {
+      val (mw, uw, sumW) = eStep(lambda, m, uEst)
       val newM = refit(mw)
       val newU = refit(uw)
       val newLambda = math.min(math.max(sumW / total, Floor), 1 - Floor)
@@ -263,67 +306,74 @@ object Estimation {
     (lambda, m, uEst)
   }
 
-  /** Distributed EM fallback for pattern tables too large to collect: per iteration
-    * one unpivoted count-weighted aggregation over the pattern table (still a fraction
-    * of the raw pair count). A synthetic '__all__' stack entry with constant gamma 0
-    * makes the same aggregation yield Σw for the λ update — one job per iteration.
+  /** Driver E-step over a collected (gamma vector, count) table: one tight pass, no
+    * Spark jobs.
     */
-  private def emDistributed(
-      patterns: DataFrame,
-      freeSpecs: Seq[ComparisonSpec],
-      u0: Map[String, Array[Double]],
-      initialLambda: Double,
-      tol: Double,
-      maxIter: Int): (Double, Map[String, Array[Double]], Map[String, Array[Double]]) = {
-    val total = patterns.agg(sum("cnt")).collect()(0).getLong(0).toDouble
-    var lambda = initialLambda
-    var m = freeSpecs.map(s => s.column -> DefaultM.clone).toMap
-    var uEst = freeSpecs.map(s => s.column -> u0(s.column).clone).toMap
-    var delta = Double.MaxValue
-    var iter = 0
-    while (delta > tol && iter < maxIter) {
-      val wExpr = matchProbability(freeSpecs, lambda, m, uEst)
-      val weighted = patterns.withColumn("w", wExpr)
-      val stacked = weighted.select(
-        col("w"), col("cnt"),
+  private def driverEStep(pats: Array[(Array[Int], Long)], freeSpecs: Seq[ComparisonSpec])
+      : EStep = (lambda, m, uEst) => {
+    val k = freeSpecs.length
+    val mw = freeSpecs.map(s => s.column -> new Array[Double](s.numLevels)).toMap
+    val uw = freeSpecs.map(s => s.column -> new Array[Double](s.numLevels)).toMap
+    var sumW = 0.0
+    pats.foreach { case (gs, cnt) =>
+      // P(match | pattern); gamma −1 (null) contributes factor 1 to both sides
+      var num = lambda
+      var den = 1.0 - lambda
+      var i = 0
+      while (i < k) {
+        val g = gs(i)
+        if (g >= 0) {
+          val c = freeSpecs(i).column
+          num *= m(c)(g)
+          den *= uEst(c)(g)
+        }
+        i += 1
+      }
+      val w = num / (num + den)
+      sumW += cnt * w
+      i = 0
+      while (i < k) {
+        val g = gs(i)
+        if (g >= 0) {
+          val c = freeSpecs(i).column
+          mw(c)(g) += cnt * w
+          uw(c)(g) += cnt * (1.0 - w)
+        }
+        i += 1
+      }
+    }
+    (mw, uw, sumW)
+  }
+
+  /** Distributed E-step over one rule's slice of the pattern table: one unpivoted
+    * count-weighted aggregation per iteration. A synthetic '__all__' stack entry with
+    * constant gamma 0 makes the same aggregation yield Σw.
+    */
+  private def distributedEStep(patterns: DataFrame, freeSpecs: Seq[ComparisonSpec])
+      : EStep = (lambda, m, uEst) => {
+    val rows = patterns
+      .withColumn("w", matchProbability(freeSpecs, lambda, m, uEst))
+      .select(col("w"), col("cnt"),
         expr(s"stack(${freeSpecs.length + 1}, " +
           (freeSpecs.map(s => s"'${s.column}', gamma_${s.column}") :+ "'__all__', 0")
             .mkString(", ") +
           ") as (column, gamma)"))
-      val rows = stacked
-        .filter(col("gamma") >= 0)
-        .groupBy("column", "gamma")
-        .agg(sum(col("w") * col("cnt")).as("mw"),
-          sum((lit(1.0) - col("w")) * col("cnt")).as("uw"))
-        .collect()
-
-      val sums = rows.groupBy(_.getString(0)).map { case (c, rs) =>
-        c -> rs.map(r => r.getInt(1) -> (r.getDouble(2), r.getDouble(3))).toMap
+      .filter(col("gamma") >= 0)
+      .groupBy("column", "gamma")
+      .agg(sum(col("w") * col("cnt")).as("mw"),
+        sum((lit(1.0) - col("w")) * col("cnt")).as("uw"))
+      .collect()
+    val mw = freeSpecs.map(s => s.column -> new Array[Double](s.numLevels)).toMap
+    val uw = freeSpecs.map(s => s.column -> new Array[Double](s.numLevels)).toMap
+    var sumW = 0.0
+    rows.foreach { r =>
+      if (r.getString(0) == "__all__") sumW = r.getDouble(2)
+      else {
+        mw(r.getString(0))(r.getInt(1)) = r.getDouble(2)
+        uw(r.getString(0))(r.getInt(1)) = r.getDouble(3)
       }
-      val sumW = sums.get("__all__").flatMap(_.get(0)).map(_._1).getOrElse(0.0)
-      def refit(pick: ((Double, Double)) => Double): Map[String, Array[Double]] =
-        freeSpecs.map { s =>
-          val byG = sums.getOrElse(s.column, Map.empty)
-          val tot = byG.values.map(pick).sum
-          s.column -> (0 until s.numLevels).map { g =>
-            math.max(byG.get(g).map(pick).getOrElse(0.0) / math.max(tot, Floor), Floor)
-          }.toArray
-        }.toMap
-      val newM = refit(_._1)
-      val newU = refit(_._2)
-      val newLambda = math.min(math.max(sumW / total, Floor), 1 - Floor)
-      delta = math.max(
-        math.abs(newLambda - lambda),
-        freeSpecs.flatMap(s =>
-          (0 until s.numLevels).map(g =>
-            math.max(math.abs(newM(s.column)(g) - m(s.column)(g)),
-              math.abs(newU(s.column)(g) - uEst(s.column)(g))))).max)
-      lambda = newLambda
-      m = newM
-      uEst = newU
-      iter += 1
     }
-    (lambda, m, uEst)
+    (mw, uw, sumW)
   }
 
   /** P(match | gammas) as a column expression from literal parameters. */
@@ -364,12 +414,7 @@ object Estimation {
       uPairs: Option[DataFrame] = None,
       uHashShuffle: Boolean = true,
       nRows: Option[Long] = None): TrainedModel = {
-    val uSource = linkRight match {
-      case Some(right) =>
-        val shared = (df.columns.toSet intersect right.columns.toSet).toSeq.sorted
-        df.select(shared.map(col): _*).unionByName(right.select(shared.map(col): _*))
-      case None => df
-    }
+    val uSource = uSourceTable(df, linkRight)
     // a search loop calling train per trial passes the loop-invariant row count
     // (nRows) — the prior λ0 = 1/N needs N once, not one count job per trial
     val n = nRows.getOrElse(uSource.count())
@@ -385,23 +430,9 @@ object Estimation {
     val mEstimates = scala.collection.mutable.Map[String, List[Array[Double]]]()
     val uEstimates = scala.collection.mutable.Map[String, List[Array[Double]]](
       specs.map(s => s.column -> List(uSampled(s.column))): _*)
-    var lambda = lambda0
-    // the per-rule EM sessions chain only the scalar λ — the expensive part (pair
-    // join + gamma aggregation) is rule-independent, so collect every rule's
-    // pattern table in ONE Spark pass and run the chained driver EMs over the
-    // collected arrays; falls back to per-rule emTrain when the combined table
-    // exceeds the driver cap (the distributed path handles pathological widths)
-    val parsedRules = trainingRules.map(graft.blocking.BlockingRule.parse)
-    val batched = batchPatternTables(df, uid, specs, parsedRules, linkRight)
-    parsedRules.zipWithIndex.foreach { case (rule, idx) =>
-      val (lam, m, uEm) = batched match {
-        case Some(byRule) =>
-          emFromPatterns(byRule.getOrElse(idx, Array.empty), specs, rule, uSampled,
-            lambda, tol)
-        case None =>
-          emTrain(df, uid, specs, rule, uSampled, lambda, tol, linkRight = linkRight)
-      }
-      lambda = lam
+    val sessions = emSessions(df, uid, specs, trainingRules.map(BlockingRule.parse),
+      uSampled, lambda0, tol, 25, linkRight)
+    sessions.foreach { case (_, m, uEm) =>
       m.foreach { case (c, arr) =>
         mEstimates(c) = arr :: mEstimates.getOrElse(c, Nil)
       }
@@ -417,78 +448,19 @@ object Estimation {
         average(ms, s.numLevels),
         average(uEstimates(s.column), s.numLevels))
     }.toMap
-    TrainedModel(lambda, specs, params, blockingRules)
+    TrainedModel(sessions.lastOption.fold(lambda0)(_._1), specs, params, blockingRules)
   }
 
-  /** Agreement-pattern tables for several training rules in one Spark pass, keyed by
-    * rule index. Each rule's pairs carry a rule tag through a single unioned gamma
-    * aggregation over ALL spec columns; [[emFromPatterns]] marginalizes each table to
-    * the rule's free columns on the driver (summing over the blocked columns' gammas
-    * is exactly the per-rule aggregation [[emTrain]] would have computed). Returns
-    * None when the combined table exceeds [[MaxDriverPatterns]] — callers then fall
-    * back to per-rule [[emTrain]].
+  /** The table u is estimated over: `df`, or in link mode the union of both tables'
+    * shared columns (random pairs are overwhelmingly non-matches either way).
     */
-  private def batchPatternTables(
-      df: DataFrame,
-      uid: String,
-      specs: Seq[ComparisonSpec],
-      rules: Seq[graft.blocking.BlockingRule],
-      linkRight: Option[DataFrame]): Option[Map[Int, Array[(Array[Int], Long)]]] = {
-    // rules blocking on every compared column have nothing to estimate — skip them
-    val active = rules.zipWithIndex.filter { case (r, _) =>
-      val blocked = r.columns.toSet
-      specs.exists(s => !blocked.contains(s.column))
+  private[graft] def uSourceTable(df: DataFrame, linkRight: Option[DataFrame]): DataFrame =
+    linkRight match {
+      case Some(right) =>
+        val shared = (df.columns.toSet intersect right.columns.toSet).toSeq.sorted
+        df.select(shared.map(col): _*).unionByName(right.select(shared.map(col): _*))
+      case None => df
     }
-    if (active.isEmpty) return Some(Map.empty)
-    val attrs = (specs.map(_.column) ++ rules.flatMap(_.columns)).distinct
-    val tagged = active.map { case (rule, i) =>
-      val pairs = linkRight match {
-        case Some(right) =>
-          graft.blocking.PairGenerator.linkPairs(df, right, uid, attrs, Seq(rule))
-        case None =>
-          graft.blocking.PairGenerator.dedupePairs(df, uid, attrs, Seq(rule))
-      }
-      pairs.withColumn("_rule_idx", lit(i))
-    }
-    val gammaCols = specs.map(s => col(s"gamma_${s.column}"))
-    val patterns = Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
-      .groupBy((col("_rule_idx") +: gammaCols): _*)
-      .agg(count(lit(1)).as("cnt"))
-    val cap = math.min(MaxDriverPatterns, Int.MaxValue.toLong - 1).toInt
-    val probe = patterns.limit(cap + 1).collect()
-    if (probe.length > cap) None
-    else Some(probe.groupBy(_.getInt(0)).map { case (i, rows) =>
-      i -> rows.map { r =>
-        (specs.indices.map(k => r.getInt(k + 1)).toArray, r.getLong(specs.length + 1))
-      }
-    })
-  }
-
-  /** One rule's EM session over a pre-collected full-gamma pattern table: marginalize
-    * to the rule's free columns, then iterate driver-side. Mirrors [[emTrain]]'s
-    * outcomes exactly — no-free-columns and empty-block cases included.
-    */
-  private def emFromPatterns(
-      full: Array[(Array[Int], Long)],
-      specs: Seq[ComparisonSpec],
-      rule: graft.blocking.BlockingRule,
-      u: Map[String, Array[Double]],
-      initialLambda: Double,
-      tol: Double): (Double, Map[String, Array[Double]], Map[String, Array[Double]]) = {
-    val blocked = rule.columns.toSet
-    val freeIdx = specs.indices.filter(i => !blocked.contains(specs(i).column))
-    val freeSpecs = freeIdx.map(specs)
-    if (freeSpecs.isEmpty) (initialLambda, Map.empty, Map.empty)
-    else if (full.isEmpty)
-      (initialLambda, freeSpecs.map(s => s.column -> DefaultM.clone).toMap,
-        freeSpecs.map(s => s.column -> u(s.column).clone).toMap)
-    else {
-      val pats = full.groupBy { case (g, _) => freeIdx.map(g).toSeq }
-        .map { case (key, rows) => (key.toArray, rows.map(_._2).sum) }
-        .toArray
-      emOverPatterns(pats, freeSpecs, u, initialLambda, tol, 25)
-    }
-  }
 
   private def gammaCounts(
       gammas: DataFrame,

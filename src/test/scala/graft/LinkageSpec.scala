@@ -212,18 +212,32 @@ class LinkageSpec extends SparkSpec {
     val df = rows.toDF("id", "a", "b", "blk")
     val specs = Seq(ComparisonSpec("a", "levenshtein", 1), ComparisonSpec("b", "levenshtein", 2))
     val u = Map("a" -> Array(0.9, 0.05, 0.05), "b" -> Array(0.9, 0.05, 0.05))
-    val rule = graft.blocking.BlockingRule.parse("l.blk = r.blk")
-    val driver = Estimation.emTrain(df, "id", specs, rule, u, initialLambda = 0.5)
-    // maxDriverPatterns = 0 forces the distributed per-iteration aggregation path
-    val dist = Estimation.emTrain(df, "id", specs, rule, u, initialLambda = 0.5,
-      maxDriverPatterns = 0L)
-    assert(math.abs(driver._1 - dist._1) < 1e-9)
-    specs.foreach { s =>
-      (0 until s.numLevels).foreach { g =>
-        assert(math.abs(driver._2(s.column)(g) - dist._2(s.column)(g)) < 1e-9,
-          s"m ${s.column} $g")
-        assert(math.abs(driver._3(s.column)(g) - dist._3(s.column)(g)) < 1e-9,
-          s"u ${s.column} $g")
+    def sessions(rules: Seq[String], maxDriverPatterns: Long) =
+      Estimation.emSessions(df, "id", specs, rules.map(BlockingRule.parse), u,
+        initialLambda = 0.5, tol = 0.01, maxIter = 25, linkRight = None,
+        maxDriverPatterns = maxDriverPatterns)
+    // one AND rule; an OR rule, whose blocked column's gammas vary, so the driver's
+    // marginalization matters; and the three-rule λ-chained EM call `train` makes
+    Seq(
+      Seq("l.blk = r.blk"),
+      Seq("(l.a = r.a) OR (l.blk = r.blk)"),
+      Seq("l.blk = r.blk", "(l.a = r.a) OR (l.blk = r.blk)", "l.a = r.a")
+    ).foreach { rules =>
+      val driver = sessions(rules, Long.MaxValue)
+      // maxDriverPatterns = 0 forces the distributed per-iteration aggregation path
+      val dist = sessions(rules, 0L)
+      assert(driver.size === rules.size && dist.size === rules.size)
+      driver.zip(dist).zip(rules).foreach { case ((dr, di), rule) =>
+        assert(dr._2.nonEmpty && math.abs(dr._1 - di._1) < 1e-9, s"lambda $rule")
+        assert(dr._2.keySet === di._2.keySet && dr._3.keySet === di._3.keySet)
+        specs.filter(s => dr._2.contains(s.column)).foreach { s =>
+          (0 until s.numLevels).foreach { g =>
+            assert(math.abs(dr._2(s.column)(g) - di._2(s.column)(g)) < 1e-9,
+              s"m ${s.column} $g $rule")
+            assert(math.abs(dr._3(s.column)(g) - di._3(s.column)(g)) < 1e-9,
+              s"u ${s.column} $g $rule")
+          }
+        }
       }
     }
   }

@@ -257,7 +257,7 @@ class MetricsSpec extends SparkSpec {
     assert(found, "no seed produced a cluster spanning both tables")
   }
 
-  test("adaptive search does at least as well as random search at equal budget") {
+  test("native TPE search does at least as well as random search at equal budget") {
     val rnd = new scala.util.Random(11)
     val rows = (0 until 80).flatMap { i =>
       val name = (1 to 10).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
@@ -269,12 +269,31 @@ class MetricsSpec extends SparkSpec {
       attributeColumns = Some(Seq("name", "city", "zip")),
       maxEvals = 5, seed = 3L, comparisonSizeLimit = 1000000L, clusterThreshold = 0.5,
       searchStrategy = strategy).best.metric
-    val adaptive = run("adaptive")
     val random = run("random")
-    assert(adaptive >= random - 1e-9, s"adaptive=$adaptive random=$random")
-    // the native TPE default must also hold its own against random at equal budget
     val tpe = run("tpe")
     assert(tpe >= random - 1e-9, s"tpe=$tpe random=$random")
+  }
+
+  test("auto-link rejects an unknown search strategy and maxEvals = 0 before any Spark job") {
+    val df = Seq(("a1", "x", "p"), ("a2", "y", "q")).toDF("unique_id", "name", "city")
+    val right = Seq(("b1", "x", "p")).toDF("unique_id", "fullname", "town")
+    val calls: Seq[(String, (String, Int) => Any)] = Seq(
+      "autoLink" -> ((strategy, evals) =>
+        AutoLinker.autoLink(df, maxEvals = evals, searchStrategy = strategy)),
+      "autoLinkTables" -> ((strategy, evals) =>
+        AutoLinker.autoLinkTables(df, right, maxEvals = evals, searchStrategy = strategy)))
+    val tracker = spark.sparkContext.statusTracker
+    calls.foreach { case (name, call) =>
+      Seq(("adaptive", 5, Seq("tpe", "random", "adaptive")), ("tpe", 0, Seq("maxEvals", "0")))
+        .foreach { case (strategy, evals, named) =>
+          val group = s"reject-$name-$strategy-$evals"
+          spark.sparkContext.setJobGroup(group, group)
+          val err = try intercept[IllegalArgumentException](call(strategy, evals))
+            finally spark.sparkContext.clearJobGroup()
+          named.foreach(w => assert(err.getMessage.contains(w), s"$name: ${err.getMessage}"))
+          assert(tracker.getJobIdsForGroup(group).isEmpty, s"$name ran a Spark job first")
+        }
+    }
   }
 
   // ---- expectations ---------------------------------------------------------
