@@ -1,5 +1,9 @@
 package graft.auto
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
@@ -109,12 +113,10 @@ object AutoLinker {
       .cache()
     val n = cleaned.count()
 
-    val ruleChoices = candidateRuleOverride.getOrElse(
-      candidateRules(cleaned, n, attrs, ruleCombinationSize, maxOrSize,
-        comparisonSizeLimit, seed))
-    val adjustedBase = EntropyMetrics.maxDistinct(cleaned, attrs).toInt
-
-    runSearch(cleaned, None, cleaned, uidCol, attrs, ruleChoices, adjustedBase,
+    runSearch(cleaned, None, cleaned, uidCol, attrs,
+      () => candidateRuleOverride.getOrElse(
+        candidateRules(cleaned, n, attrs, ruleCombinationSize, maxOrSize,
+          comparisonSizeLimit, seed)),
       maxEvals, rnd, searchStrategy, clusterThreshold,
       uTargetPairs = math.min(n * 4, 100000L), trueLabelCol, uDeterministicOrder,
       nRows = n)
@@ -175,12 +177,10 @@ object AutoLinker {
     val union = cleanedL.unionByName(cleanedR).cache()
     val n = union.count()
 
-    val ruleChoices = candidateRuleOverride.getOrElse(
-      candidateRules(union, n, attrs, ruleCombinationSize, maxOrSize,
-        comparisonSizeLimit, seed))
-    val adjustedBase = EntropyMetrics.maxDistinct(union, attrs).toInt
-
-    runSearch(cleanedL, Some(cleanedR), union, uidCol, attrs, ruleChoices, adjustedBase,
+    runSearch(cleanedL, Some(cleanedR), union, uidCol, attrs,
+      () => candidateRuleOverride.getOrElse(
+        candidateRules(union, n, attrs, ruleCombinationSize, maxOrSize,
+          comparisonSizeLimit, seed)),
       maxEvals, rnd, searchStrategy, clusterThreshold,
       uTargetPairs = math.min(n * 4, 100000L), trueLabelCol, uDeterministicOrder,
       nRows = n)
@@ -288,8 +288,9 @@ object AutoLinker {
     (1 to nTrials).map(_ => drawTrial(rnd, attrs, ruleChoices, Seq.empty, "tpe"))
   }
 
-  /** The trial loop shared by dedupe and link mode: draw params → train → predict →
-    * cluster → unsupervised metric (+ supervised metrics when a label is given).
+  /** The trial loop shared by dedupe and link mode: set up (candidate rules, the Y9
+    * adjusted base, the u pairs) → per trial draw params → train → predict → cluster
+    * → unsupervised metric (+ supervised metrics when a label is given).
     */
   private def runSearch(
       trainDf: DataFrame,
@@ -297,8 +298,7 @@ object AutoLinker {
       clusterBase: DataFrame,
       uidCol: String,
       attrs: Seq[String],
-      ruleChoices: Seq[String],
-      adjustedBase: Int,
+      ruleChoicesOf: () => Seq[String],
       maxEvals: Int,
       rnd: Random,
       strategy: String,
@@ -310,15 +310,25 @@ object AutoLinker {
 
     var best: Option[(Trial, DataFrame, DataFrame)] = None
     val past = scala.collection.mutable.ArrayBuffer[Trial]()
-    // the u-estimation pair table is spec-independent — build AND MATERIALIZE it
-    // ONCE for the whole search (sample + rank + index + offset-join): the second
-    // rotate below checkpoints the joined pair rows themselves (freeing the
-    // intermediate indexed table), so each trial's u pass is one gamma aggregation
-    // over ~uTargetPairs checkpointed rows instead of re-running the 4 offset joins
     val tracker = new graft.util.CheckpointTracker(trainDf.sparkSession)
-    val uPairs = tracker.rotate(
-      Estimation.uSamplePairs(Estimation.uSourceTable(trainDf, linkRight), uidCol, attrs,
-        uTargetPairs, hashShuffle = !uDeterministicOrder, seed = 42L, tracker))
+    try {
+    // The three setup stages read only the counted, cached input and not each
+    // other, so they overlap on driver threads (each is a few small jobs; run one
+    // after another they left cores idle). The u-estimation pair table is
+    // spec-independent — built AND MATERIALIZED once for the whole search (sample +
+    // rank + index + offset-join): the second rotate checkpoints the joined pair
+    // rows themselves (freeing the intermediate indexed table), so each trial's u
+    // counts come from ~uTargetPairs checkpointed rows instead of re-running the
+    // offset joins.
+    val (ruleChoices, adjustedBase, uPairs) = onDriverThreads(Seq[() => Any](
+      ruleChoicesOf,
+      () => EntropyMetrics.maxDistinct(clusterBase, attrs).toInt,
+      () => tracker.rotate(Estimation.uSamplePairs(
+        Estimation.uSourceTable(trainDf, linkRight), uidCol, attrs, uTargetPairs,
+        hashShuffle = !uDeterministicOrder, seed = 42L, tracker)))) match {
+      case Seq(rules: Seq[String] @unchecked, base: Int, pairs: DataFrame @unchecked) =>
+        (rules, base, pairs)
+    }
 
     // one full trial: train → predict → cluster → metrics. Pure function of its
     // draw (plus the shared loop invariants) — no session-global state, no
@@ -353,7 +363,6 @@ object AutoLinker {
       past += trial
     }
 
-    try {
     // Warmup trials (the first ≤3) draw UNIFORMLY — drawParams ignores `past`
     // while past.size < warmup — so their draws can be taken upfront (consuming
     // the seeded RNG in exactly the sequential order; trial execution consumes no
@@ -365,20 +374,8 @@ object AutoLinker {
     val nWarm = math.min(maxEvals, 3)
     val warmDraws =
       (1 to nWarm).map(_ => drawTrial(rnd, attrs, ruleChoices, Seq.empty, strategy))
-    val warmResults =
-      if (nWarm <= 1) warmDraws.map { case (s, r, t) => runTrial(s, r, t) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(nWarm)
-        try {
-          val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val futures = warmDraws.map { case (s, r, t) =>
-            scala.concurrent.Future(runTrial(s, r, t))(ec)
-          }
-          futures.map(f =>
-            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
-      }
-    warmResults.foreach { case (t, c, p) => record(t, c, p) }
+    onDriverThreads(warmDraws.map { case (s, r, t) => () => runTrial(s, r, t) })
+      .foreach { case (t, c, p) => record(t, c, p) }
     // post-warmup trials draw from `past` — inherently sequential
     ((nWarm + 1) to maxEvals).foreach { _ =>
       val (specs, rule, trainingRules) =
@@ -391,6 +388,19 @@ object AutoLinker {
     val (b, clusters, predictions) = best.get
     Result(b, clusters, predictions, past.toSeq)
   }
+
+  /** Runs each thunk on its own driver thread (one thunk runs inline) and returns
+    * the results in input order; a failure is rethrown, the first in input order.
+    */
+  private def onDriverThreads[A](thunks: Seq[() => A]): Seq[A] =
+    if (thunks.size <= 1) thunks.map(_())
+    else {
+      val pool = Executors.newFixedThreadPool(thunks.size)
+      try {
+        val ec = ExecutionContext.fromExecutor(pool)
+        thunks.map(t => Future(t())(ec)).map(Await.result(_, Duration.Inf))
+      } finally pool.shutdown()
+    }
 
   /** First row of a 1-row metric frame as name → double (longs widened). */
   private def rowToMap(df: DataFrame): Map[String, Double] = {

@@ -1,6 +1,7 @@
 package graft.metrics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.clean.Cleaning
@@ -38,77 +39,61 @@ object EntropyMetrics {
     * autolinker.py:597-602 — same number, fewer jobs).
     */
   def maxDistinct(df: DataFrame, attributes: Seq[String]): Long = {
-    val row = df.agg(
-      greatest(attributes.map(c => countDistinct(col(c)).cast("long")): _*).as("u"))
-      .collect()(0)
-    row.getLong(0)
-  }
-
-  /** All four (grouping × base) entropy vectors in ONE aggregation job: the whole-
-    * dataset and per-cluster groupings ride a single GROUPING SETS pass with two
-    * `entropy_agg` buffers each, and the per-cluster means + whole-row picks
-    * collapse in one follow-up aggregate — one job and one scan where the
-    * round-10 shape ran two jobs (each already two-buffer; the original 4-job
-    * form paid the scan four times). Empty input yields the same zeros as the
-    * two-job form: the global grouping-set row carries no attribute keys (every
-    * `getItem` is null → 0.0) and the per-cluster mean averages zero rows
-    * (null → 0.0) — the pow(0, 0) = 1.0 all-singleton contract is untouched.
-    *
-    * Returns ((wholeS, wholeA), (byClusterS, byClusterA)).
-    */
-  private def dualBaseEntropyBoth(
-      df: DataFrame,
-      attributes: Seq[String],
-      baseS: Int,
-      baseA: Int): ((Map[String, Double], Map[String, Double]),
-      (Map[String, Double], Map[String, Double])) = {
-    val grouped = Cleaning.nullSentinel(
-        df.select((attributes.map(c => col(c).cast("string").as(c)) :+
-          col("cluster_id")): _*),
-        attributes)
-      .groupingSets(Seq(Seq.empty, Seq(col("cluster_id"))), col("cluster_id"))
-      .agg(
-        entropy_agg(baseS, attributes.map(c => c -> col(c)): _*).as("ent_s"),
-        entropy_agg(baseA, attributes.map(c => c -> col(c)): _*).as("ent_a"),
-        grouping(col("cluster_id")).as("_g"))
-    val row = grouped
-      .select((attributes.map(c =>
-          max(when(col("_g") === 1, col("ent_s").getItem(c))).as(s"ws_$c")) ++
-        attributes.map(c =>
-          max(when(col("_g") === 1, col("ent_a").getItem(c))).as(s"wa_$c")) ++
-        attributes.map(c =>
-          mean(when(col("_g") === 0, col("ent_s").getItem(c))).as(s"cs_$c")) ++
-        attributes.map(c =>
-          mean(when(col("_g") === 0, col("ent_a").getItem(c))).as(s"ca_$c"))): _*)
-      .collect()(0)
-    def part(off: Int) = attributes.zipWithIndex.map { case (c, i) =>
-      c -> (if (row.isNullAt(off + i)) 0.0 else row.getDouble(off + i))
-    }.toMap
-    val n = attributes.length
-    ((part(0), part(n)), (part(2 * n), part(3 * n)))
+    require(attributes.nonEmpty, "maxDistinct needs at least one attribute column")
+    val counts = attributes.map(c => countDistinct(col(c)).cast("long"))
+    // `greatest` takes two or more arguments
+    val u = if (counts.size == 1) counts.head else greatest(counts: _*)
+    df.agg(u.as("u")).collect()(0).getLong(0)
   }
 
   /** Y8 — information-gain power ratio `I_s ^ I_a` over a clustered dataset:
     * scaled base c = #non-singleton clusters, adjusted base u from the caller (Y9 on the
-    * original data); each I = Σ_cols (whole-matched entropy − mean per-cluster entropy).
-    * Both bases AND both groupings ride one GROUPING SETS aggregation
-    * ([[dualBaseEntropyBoth]]), so the whole metric is 1 entropy job, not 2 (r10)
-    * or 4 (the one-job-per-(grouping × base) original) — and the matched frame
-    * has a single consumer, so its cache is gone too.
+    * original data); each I = Σ_cols (whole-matched entropy − mean per-cluster entropy)
+    * over the rows of non-singleton clusters.
+    *
+    * The whole metric is ONE Spark action. A window count over `cluster_id` keeps the
+    * matched rows; one GROUPING SETS pass computes the whole-matched and per-cluster
+    * entropies, and a final aggregate picks the whole row, averages the cluster rows
+    * and counts them — that count is c. Since c is known only after the pass, the
+    * scaled-base entropies run at base 10 (`entropy_agg` divides by log10(10) = 1.0,
+    * i.e. returns the raw −Σ p·log10 p) and are divided by log10(c) here: the
+    * whole-matched terms are bit-identical to a base-c aggregation, the per-cluster
+    * mean moves by ULPs. The adjusted base is known upfront and stays an
+    * `entropy_agg(adjustedBase)` buffer, so `adjustedBase <= 0` keeps the aggregate's
+    * distinct-count guard. No non-singleton cluster → every term is 0 → 1.0.
     */
   def informationGainPowerRatio(
       clusters: DataFrame,
       attributes: Seq[String],
       adjustedBase: Int): Double = {
-    val counts = clusters.groupBy("cluster_id").count()
-      .withColumnRenamed("count", "_cluster_count")
-    val data = clusters.join(counts, Seq("cluster_id"), "left")
-    val numClusters = counts.filter(col("_cluster_count") > 1).count().toInt
-    val matched = data.filter(col("_cluster_count") > 1)
-    val ((ms, ma), (cs, ca)) =
-      dualBaseEntropyBoth(matched, attributes, numClusters, adjustedBase)
-    val is = attributes.map(c => ms(c) - cs(c)).sum
-    val ia = attributes.map(c => ma(c) - ca(c)).sum
+    val sized = clusters.select((attributes.map(c => col(c).cast("string").as(c)) ++
+      Seq(col("cluster_id"),
+        count(lit(1)).over(Window.partitionBy("cluster_id")).as("_cluster_count"))): _*)
+    val grouped = Cleaning.nullSentinel(
+        sized.filter(col("_cluster_count") > 1).drop("_cluster_count"), attributes)
+      .groupingSets(Seq(Seq.empty, Seq(col("cluster_id"))), col("cluster_id"))
+      .agg(
+        entropy_agg(10, attributes.map(c => c -> col(c)): _*).as("ent_s"),
+        entropy_agg(adjustedBase, attributes.map(c => c -> col(c)): _*).as("ent_a"),
+        grouping(col("cluster_id")).as("_g"))
+    val whole = col("_g") === 1
+    val perCluster = col("_g") === 0
+    val row = grouped
+      .select((count(when(perCluster, lit(1))) +:
+        (attributes.map(c => max(when(whole, col("ent_s").getItem(c)))) ++
+          attributes.map(c => max(when(whole, col("ent_a").getItem(c)))) ++
+          attributes.map(c => mean(when(perCluster, col("ent_s").getItem(c)))) ++
+          attributes.map(c => mean(when(perCluster, col("ent_a").getItem(c)))))): _*)
+      .collect()(0)
+    val numClusters = row.getLong(0)
+    def part(off: Int) = attributes.indices.map { i =>
+      if (row.isNullAt(1 + off + i)) 0.0 else row.getDouble(1 + off + i)
+    }
+    val n = attributes.length
+    val (ws, wa, cs, ca) = (part(0), part(n), part(2 * n), part(3 * n))
+    val scale = if (numClusters > 0) math.log10(numClusters.toDouble) else 1.0
+    val is = attributes.indices.map(i => ws(i) / scale - cs(i) / scale).sum
+    val ia = attributes.indices.map(i => wa(i) - ca(i)).sum
     math.pow(is, ia)
   }
 }

@@ -315,7 +315,7 @@ object AutoLinkOracle {
     // NULLIF keeps LOG10 off zero when a trial yields NO non-singleton clusters
     // (cNum = 0): the NULL rides through is/ia and POWER, and the final COALESCE
     // lands 1.0 — exactly the driver's pow(0, 0) for an all-singleton clustering
-    // (empty-aggregation entropies read back as 0.0 in dualBaseEntropy).
+    // (empty-aggregation entropies read back as 0.0 in informationGainPowerRatio).
     def whole(c: String, b2: String) =
       s"""((SELECT -COALESCE(SUM(pr*LOG10(pr)), 0.0) FROM (
          |  SELECT COUNT(*)::DOUBLE/(SELECT COUNT(*) FROM matched_$t) AS pr

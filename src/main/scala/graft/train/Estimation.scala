@@ -104,11 +104,20 @@ object Estimation {
     }.reduce(_ unionByName _)
   }
 
-  /** u[col][gamma] from a prebuilt pair table (see [[uSamplePairs]]). */
+  /** u[col][gamma] from a prebuilt pair table (see [[uSamplePairs]]). [[train]] takes
+    * the same counts from its EM pattern pass instead.
+    */
   def estimateUFromPairs(
       pairs: DataFrame,
-      specs: Seq[ComparisonSpec]): Map[String, Array[Double]] = {
-    val counts = gammaCounts(Comparisons.withGammas(pairs, specs), specs)
+      specs: Seq[ComparisonSpec]): Map[String, Array[Double]] =
+    uFromCounts(gammaCounts(Comparisons.withGammas(pairs, specs), specs, lit(1L)), specs)
+
+  /** u[col][gamma] from per-column gamma counts: each level's share of the non-null
+    * (gamma ≥ 0) pairs, floored.
+    */
+  private def uFromCounts(
+      counts: Map[String, Map[Int, Long]],
+      specs: Seq[ComparisonSpec]): Map[String, Array[Double]] =
     specs.map { s =>
       val byGamma = counts.getOrElse(s.column, Map.empty)
       val total = byGamma.collect { case (g, c) if g >= 0 => c }.sum.toDouble
@@ -117,7 +126,6 @@ object Estimation {
       }.toArray
       s.column -> u
     }.toMap
-  }
 
   /** J5 — EM over pairs blocked by `trainingRule`. Columns appearing in the training
     * rule are held fixed for this round (their gammas are saturated by construction —
@@ -146,12 +154,15 @@ object Estimation {
       maxIter: Int = 25,
       linkRight: Option[DataFrame] = None)
       : (Double, Map[String, Array[Double]], Map[String, Array[Double]]) =
-    emSessions(df, uid, specs, Seq(trainingRule), u, initialLambda, tol, maxIter,
-      linkRight).head
+    emSessions(df, uid, specs, Seq(trainingRule), Left(u), initialLambda, tol, maxIter,
+      linkRight)._2.head
 
   private type Probs = Map[String, Array[Double]]
 
   private val MaxDriverPatterns = 100000L
+
+  /** Pattern-table tag of the u-pair rows. */
+  private val URows = -1
 
   /** One EM session per training rule, in order, λ chained from each session to the
     * next (reference autolinker.py:555-558). Rules blocking on every compared column
@@ -167,75 +178,100 @@ object Estimation {
     * driver arithmetic. Otherwise the table is checkpointed once and each rule's
     * slice runs one distributed aggregation per iteration.
     *
-    * @param maxDriverPatterns pattern rows per estimating rule the driver collects;
-    *                          0 forces the distributed backend
+    * `u` is either given (`Left`) or estimated (`Right`: the sampled u pairs of
+    * [[uSamplePairs]]). Estimated, the u pairs ride the same pass tagged
+    * `_rule_idx = -1`, and u is their per-column gamma marginal with
+    * [[estimateUFromPairs]]' floors — integer counts, so the same bits, without a
+    * pass of its own.
+    *
+    * @param maxDriverPatterns pattern rows per estimating rule (and at most as many
+    *                          u rows) the driver collects; 0 forces the distributed
+    *                          backend
+    * @return (the u the sessions started from, one (λ, m, u) per rule)
     */
   private[graft] def emSessions(
       df: DataFrame,
       uid: String,
       specs: Seq[ComparisonSpec],
       rules: Seq[BlockingRule],
-      u: Map[String, Array[Double]],
+      u: Either[Probs, DataFrame],
       initialLambda: Double,
       tol: Double,
       maxIter: Int,
       linkRight: Option[DataFrame],
       maxDriverPatterns: Long = MaxDriverPatterns)
-      : Seq[(Double, Map[String, Array[Double]], Map[String, Array[Double]])] = {
+      : (Probs, Seq[(Double, Probs, Probs)]) = {
     val freeIdx =
       rules.map(r => specs.indices.filterNot(i => r.columns.contains(specs(i).column)))
     val active = rules.indices.filter(i => freeIdx(i).nonEmpty)
+    val uPairs = u.toOption
     val tracker = new graft.util.CheckpointTracker(df.sparkSession)
     try {
-      // per estimating rule: (Σ pattern counts, E-step) — and no Spark job at all
-      // when no rule estimates anything
-      val backend: Int => (Double, EStep) =
-        if (active.isEmpty) Map.empty
-        else {
-          val patterns = patternTable(df, uid, specs, rules, active, linkRight)
+      // (u, per estimating rule: (Σ pattern counts, E-step)) — and no Spark job at
+      // all when u is given and no rule estimates anything
+      val (u0, backend): (Probs, Int => (Double, EStep)) = u match {
+        case Left(given) if active.isEmpty => (given, Map.empty)
+        case _ =>
+          val patterns = patternTable(df, uid, specs, rules, active, uPairs, linkRight)
           // one collect with a limit probe: a row past the cap proves the table is
-          // too wide without counting it
-          val cap = (math.min(maxDriverPatterns, (Int.MaxValue - 1L) / active.size) *
-            active.size).toInt
+          // too wide without counting it. The u rows are at most one per gamma
+          // vector ((levels + 1)^K with the null level), so they get their own share.
+          val emCap =
+            if (active.isEmpty) 0L
+            else math.min(maxDriverPatterns, (Int.MaxValue - 1L) / active.size) * active.size
+          val uCap =
+            if (uPairs.isEmpty) 0L
+            else math.min(maxDriverPatterns, specs.foldLeft(1L)((acc, s) =>
+              math.min(acc * (s.numLevels + 1), Int.MaxValue.toLong)))
+          val cap = math.min(emCap + uCap, Int.MaxValue - 1L).toInt
           val probe = patterns.limit(cap + 1).collect()
           if (probe.length <= cap) {
             val byRule = probe.groupBy(_.getInt(0)).map { case (i, rows) =>
               i -> rows.map(r => (specs.indices.map(k => r.getInt(k + 1)).toArray,
                 r.getLong(specs.length + 1)))
             }
-            i => {
-              val pats = byRule.getOrElse(i, Array.empty[(Array[Int], Long)])
+            def rowsOf(i: Int) = byRule.getOrElse(i, Array.empty[(Array[Int], Long)])
+            val u0 = u.left.getOrElse(uFromCounts(specs.indices.map { k =>
+              specs(k).column -> rowsOf(URows).groupMapReduce(_._1(k))(_._2)(_ + _)
+            }.toMap, specs))
+            (u0, i => {
+              val pats = rowsOf(i)
                 .groupBy { case (g, _) => freeIdx(i).map(g).toSeq }
                 .map { case (key, rows) => (key.toArray, rows.map(_._2).sum) }
                 .toArray
               (pats.map(_._2).sum.toDouble, driverEStep(pats, freeIdx(i).map(specs)))
-            }
+            })
           } else {
             val table = tracker.rotate(patterns)
+            val u0 = u.left.getOrElse(uFromCounts(
+              gammaCounts(table.filter(col("_rule_idx") === URows), specs, col("cnt")),
+              specs))
             val totals = table.groupBy("_rule_idx").agg(sum("cnt")).collect()
               .map(r => r.getInt(0) -> r.getLong(1).toDouble).toMap
-            i => (totals.getOrElse(i, 0.0), distributedEStep(
-              table.filter(col("_rule_idx") === i), freeIdx(i).map(specs)))
+            (u0, i => (totals.getOrElse(i, 0.0), distributedEStep(
+              table.filter(col("_rule_idx") === i), freeIdx(i).map(specs))))
           }
-        }
+      }
       var lambda = initialLambda
-      rules.indices.map { i =>
+      val sessions = rules.indices.map { i =>
         val session: (Double, Probs, Probs) =
           if (freeIdx(i).isEmpty) (lambda, Map.empty, Map.empty)
           else {
             val (total, eStep) = backend(i)
-            emLoop(freeIdx(i).map(specs), total, u, lambda, tol, maxIter, eStep)
+            emLoop(freeIdx(i).map(specs), total, u0, lambda, tol, maxIter, eStep)
           }
         lambda = session._1
         session
       }
+      (u0, sessions)
     } finally tracker.close() // all estimates are driver-side; free the pattern blocks
   }
 
   /** The tagged agreement-pattern table of the `active` rules in one Spark pass:
     * each rule's pairs carry its index as `_rule_idx` through a single unioned gamma
-    * aggregation over ALL spec columns. Link mode (`linkRight`) pairs cross the two
-    * tables only (Splink link_only semantics).
+    * aggregation over ALL spec columns; the u pairs, when given, ride along tagged
+    * `_rule_idx = -1`. Link mode (`linkRight`) pairs cross the two tables only
+    * (Splink link_only semantics).
     */
   private def patternTable(
       df: DataFrame,
@@ -243,16 +279,20 @@ object Estimation {
       specs: Seq[ComparisonSpec],
       rules: Seq[BlockingRule],
       active: Seq[Int],
+      uPairs: Option[DataFrame],
       linkRight: Option[DataFrame]): DataFrame = {
     // carry both compared and blocked-on columns through the pair joins
     val attrs = (specs.map(_.column) ++ rules.flatMap(_.columns)).distinct
+    // the gamma ladders read only the compared columns' two sides
+    val sides = specs.flatMap(s => Seq(col(s"${s.column}_l"), col(s"${s.column}_r")))
+    def tag(pairs: DataFrame, i: Int) = pairs.select((lit(i).as("_rule_idx") +: sides): _*)
     val tagged = active.map { i =>
       val pairs = linkRight match {
         case Some(right) => PairGenerator.linkPairs(df, right, uid, attrs, Seq(rules(i)))
         case None => PairGenerator.dedupePairs(df, uid, attrs, Seq(rules(i)))
       }
-      pairs.withColumn("_rule_idx", lit(i))
-    }
+      tag(pairs, i)
+    } ++ uPairs.map(tag(_, URows))
     val gammaCols = specs.map(s => col(s"gamma_${s.column}"))
     Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
       .groupBy((col("_rule_idx") +: gammaCols): _*)
@@ -397,6 +437,8 @@ object Estimation {
 
   /** Full training pipeline: J3 prior + J4 u + J5 EM per training rule, averaging m
     * across rounds for columns estimated more than once (Splink combines estimates).
+    * J4's gamma counts over the sampled u pairs come from the EM pattern pass
+    * ([[emSessions]]), so u costs no Spark pass of its own.
     *
     * `linkRight` switches to link mode (Splink link_only): u is estimated over the
     * union of both tables (random pairs are overwhelmingly non-matches either way) and
@@ -421,17 +463,21 @@ object Estimation {
     val lambda0 = prior(n)
     // a search loop training many candidate models passes the prebuilt sampled
     // pair table (uPairs) — the sample/sort/index pipeline is spec-independent and
-    // re-running it per trial is pure waste
-    val uSampled = uPairs match {
-      case Some(p) => estimateUFromPairs(p, specs)
-      case None => estimateU(uSource, uid, specs, uTargetPairs, uHashShuffle)
+    // re-running it per trial is pure waste. Either way u's gamma counts ride the
+    // EM pattern pass (emSessions), not a pass of their own.
+    val (uSampled, sessions) = {
+      val tracker = new graft.util.CheckpointTracker(df.sparkSession)
+      try {
+        val pairs = uPairs.getOrElse(uSamplePairs(uSource, uid, specs.map(_.column),
+          uTargetPairs, uHashShuffle, seed = 42L, tracker))
+        emSessions(df, uid, specs, trainingRules.map(BlockingRule.parse), Right(pairs),
+          lambda0, tol, 25, linkRight)
+      } finally tracker.close()
     }
 
     val mEstimates = scala.collection.mutable.Map[String, List[Array[Double]]]()
     val uEstimates = scala.collection.mutable.Map[String, List[Array[Double]]](
       specs.map(s => s.column -> List(uSampled(s.column))): _*)
-    val sessions = emSessions(df, uid, specs, trainingRules.map(BlockingRule.parse),
-      uSampled, lambda0, tol, 25, linkRight)
     sessions.foreach { case (_, m, uEm) =>
       m.foreach { case (c, arr) =>
         mEstimates(c) = arr :: mEstimates.getOrElse(c, Nil)
@@ -462,14 +508,16 @@ object Estimation {
       case None => df
     }
 
+  /** Per-column gamma counts over `gammas` rows, each row counted `weight` times. */
   private def gammaCounts(
       gammas: DataFrame,
-      specs: Seq[ComparisonSpec]): Map[String, Map[Int, Long]] = {
-    val stacked = gammas.select(
+      specs: Seq[ComparisonSpec],
+      weight: Column): Map[String, Map[Int, Long]] = {
+    val stacked = gammas.select(weight.as("_w"),
       expr(s"stack(${specs.length}, " +
         specs.map(s => s"'${s.column}', gamma_${s.column}").mkString(", ") +
         ") as (column, gamma)"))
-    stacked.groupBy("column", "gamma").count().collect()
+    stacked.groupBy("column", "gamma").agg(sum("_w")).collect()
       .groupBy(_.getString(0))
       .map { case (c, rows) =>
         c -> rows.map(r => r.getInt(1) -> r.getLong(2)).toMap

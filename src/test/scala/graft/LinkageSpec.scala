@@ -212,10 +212,15 @@ class LinkageSpec extends SparkSpec {
     val df = rows.toDF("id", "a", "b", "blk")
     val specs = Seq(ComparisonSpec("a", "levenshtein", 1), ComparisonSpec("b", "levenshtein", 2))
     val u = Map("a" -> Array(0.9, 0.05, 0.05), "b" -> Array(0.9, 0.05, 0.05))
-    def sessions(rules: Seq[String], maxDriverPatterns: Long) =
+    def sessionsFrom(
+        rules: Seq[String],
+        u: Either[Map[String, Array[Double]], org.apache.spark.sql.DataFrame],
+        maxDriverPatterns: Long) =
       Estimation.emSessions(df, "id", specs, rules.map(BlockingRule.parse), u,
         initialLambda = 0.5, tol = 0.01, maxIter = 25, linkRight = None,
         maxDriverPatterns = maxDriverPatterns)
+    def sessions(rules: Seq[String], maxDriverPatterns: Long) =
+      sessionsFrom(rules, Left(u), maxDriverPatterns)._2
     // one AND rule; an OR rule, whose blocked column's gammas vary, so the driver's
     // marginalization matters; and the three-rule λ-chained EM call `train` makes
     Seq(
@@ -240,6 +245,30 @@ class LinkageSpec extends SparkSpec {
         }
       }
     }
+    // u folded into the pattern pass: the sampled u pairs ride it tagged -1, and on
+    // both backends u must be bit-equal to a separate pass over the same pairs — and
+    // the sessions bit-equal to sessions started from that u. The blocked-on-every-
+    // column rule estimates nothing, so its pattern table holds the u rows alone.
+    def bits(p: Map[String, Array[Double]]) =
+      p.map { case (c, a) => c -> a.map(java.lang.Double.doubleToLongBits).toSeq }
+    val tracker = new graft.util.CheckpointTracker(spark)
+    try {
+      val pairs = tracker.rotate(Estimation.uSamplePairs(df, "id", Seq("a", "b"), 200L,
+        hashShuffle = true, seed = 42L, tracker))
+      val uSeparate = Estimation.estimateUFromPairs(pairs, specs)
+      assert(uSeparate.values.exists(_.exists(_ > 1e-9)))
+      Seq(Seq("l.blk = r.blk", "(l.a = r.a) OR (l.blk = r.blk)", "l.a = r.a"), Seq("a&b"))
+        .foreach { rules =>
+          Seq(Long.MaxValue, 0L).foreach { maxDriverPatterns =>
+            val (uFolded, folded) = sessionsFrom(rules, Right(pairs), maxDriverPatterns)
+            val (_, given) = sessionsFrom(rules, Left(uSeparate), maxDriverPatterns)
+            val where = s"$rules, maxDriverPatterns $maxDriverPatterns"
+            assert(bits(uFolded) === bits(uSeparate), s"u $where")
+            assert(folded.map(t => (t._1, bits(t._2), bits(t._3))) ===
+              given.map(t => (t._1, bits(t._2), bits(t._3))), s"sessions $where")
+          }
+        }
+    } finally tracker.close()
   }
 
   test("EM single-iteration update matches the closed form at double precision") {

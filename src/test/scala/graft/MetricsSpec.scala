@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.auto.AutoLinker
@@ -158,13 +159,106 @@ class MetricsSpec extends SparkSpec {
     }
   }
 
-  test("information gain power ratio is computable and finite on clustered data") {
-    val df = (1 to 200).map { i =>
-      (i.toString, (i % 10).toString, s"seg${i % 4}", s"v${i % 7}")
-    }.toDF("id", "cluster_id", "a", "b")
-    val u = EntropyMetrics.maxDistinct(df, Seq("a", "b")).toInt
-    val m = EntropyMetrics.informationGainPowerRatio(df, Seq("a", "b"), u)
-    assert(!m.isNaN && !m.isInfinite)
+  test("information gain power ratio equals the reference's four-evaluation formula") {
+    // the reference (autolinker.py:149-223), written out independently: cluster sizes
+    // by a count, a left join back, c = #non-singleton clusters, then whole-matched
+    // vs per-cluster datasetEntropy, once in base c and once in the adjusted base
+    def reference(clusters: DataFrame, attrs: Seq[String], adjustedBase: Int): Double = {
+      val counts = clusters.groupBy("cluster_id").count().withColumnRenamed("count", "_n")
+      val matched = clusters.join(counts, Seq("cluster_id"), "left").filter(col("_n") > 1)
+      val numClusters = counts.filter(col("_n") > 1).count().toInt
+      def gain(base: Int) = {
+        val whole = EntropyMetrics.datasetEntropy(matched, attrs, base = base)
+        val perCluster =
+          EntropyMetrics.datasetEntropy(matched, attrs, byCluster = true, base = base)
+        attrs.map(c => whole(c) - perCluster(c)).sum
+      }
+      math.pow(gain(numClusters), gain(adjustedBase))
+    }
+    def table(rows: Seq[(String, String, Option[String], String)]) =
+      rows.toDF("id", "cluster_id", "a", "b")
+    val tenOfTwenty = (1 to 200).map(i =>
+      (i.toString, (i % 10).toString, Some(s"seg${i % 4}"), s"v${i % 7}"))
+    val cases = Seq(
+      "ten clusters of 20" -> table(tenOfTwenty),
+      "seven uneven clusters and singletons" -> table((1 to 150).map(i =>
+        (i.toString, if (i % 5 == 0) s"s$i" else (i % 7).toString,
+          Some(s"seg${i % 4}"), s"v${i % 3}"))),
+      "all singletons" -> table((1 to 30).map(i =>
+        (i.toString, s"c$i", Some(s"seg${i % 4}"), s"v${i % 7}"))),
+      "one non-singleton cluster" -> table((1 to 30).map(i =>
+        (i.toString, if (i <= 12) "big" else s"c$i", Some(s"seg${i % 4}"), s"v${i % 7}"))),
+      "a null attribute value" -> table(tenOfTwenty.map { case (id, c, a, b) =>
+        (id, c, if (id.toInt % 9 == 0) None else a, b)
+      }))
+    val attrs = Seq("a", "b")
+    cases.foreach { case (name, df) =>
+      Seq(EntropyMetrics.maxDistinct(df, attrs).toInt, 0).foreach { u =>
+        val got = EntropyMetrics.informationGainPowerRatio(df, attrs, u)
+        val want = reference(df, attrs, u)
+        assert((got.isNaN && want.isNaN) ||
+          math.abs(got - want) <= 1e-12 * math.max(math.abs(got), math.abs(want)),
+          s"$name, adjusted base $u: $got vs reference $want")
+        if (name == "all singletons") assert(got === 1.0)
+        if (name == "ten clusters of 20") assert(!got.isNaN && !got.isInfinite)
+      }
+    }
+  }
+
+  test("maxDistinct and auto-link accept a single attribute column") {
+    val rnd = new scala.util.Random(13)
+    val names = (0 until 30).map(_ => (1 to 8).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
+    val df = names.zipWithIndex.flatMap { case (n, i) => Seq((s"a$i", n), (s"b$i", n + "x")) }
+      .toDF("unique_id", "name")
+    assert(EntropyMetrics.maxDistinct(df, Seq("name")) === 60L)
+    intercept[IllegalArgumentException](EntropyMetrics.maxDistinct(df, Nil))
+    val dedupe = AutoLinker.autoLink(df, maxEvals = 2, seed = 1L,
+      comparisonSizeLimit = 1000000L, clusterThreshold = 0.5)
+    assert(dedupe.trials.size === 2 && dedupe.clusters.count() === 60)
+    // the schema match needs shared values: half the right names are exact copies
+    val right = names.zipWithIndex
+      .map { case (n, i) => (s"R$i", if (i % 2 == 0) n else n + "x") }
+      .toDF("unique_id", "fullname")
+    val linked = AutoLinker.autoLinkTables(df.filter(col("unique_id").startsWith("a")),
+      right, maxEvals = 2, seed = 1L, comparisonSizeLimit = 1000000L, clusterThreshold = 0.5)
+    assert(linked.trials.size === 2 && linked.clusters.count() === 60)
+  }
+
+  test("concurrent auto-link calls on one session return what sequential calls return") {
+    val rnd = new scala.util.Random(17)
+    val ents = (0 until 40).map { i =>
+      ((1 to 10).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString, s"city${i % 5}",
+        s"z${i % 12}")
+    }
+    val people = ents.zipWithIndex.flatMap { case ((n, c, z), i) =>
+      Seq((s"a$i", n, c, z), (s"b$i", n + "x", c, z))
+    }.toDF("unique_id", "name", "city", "zip")
+    val left = ents.zipWithIndex.map { case ((n, c, z), i) => (s"L$i", n, c, z) }
+      .toDF("id", "name", "city", "zip")
+    val right = ents.zipWithIndex.map { case ((n, c, z), i) =>
+      (s"R$i", n, if (i % 3 == 0) c + "x" else c, z)
+    }.toDF("id", "fullname", "town", "postcode")
+    // trial-metric bits, best rule, record → cluster; four trials = three concurrent
+    // warmup trials plus one sequential TPE trial per call
+    def outcome(r: AutoLinker.Result, uid: String) =
+      (r.trials.map(t => java.lang.Double.doubleToLongBits(t.metric)), r.best.blockingRule,
+        r.clusters.select(uid, "cluster_id").collect()
+          .map(row => row.getString(0) -> row.getString(1)).toMap)
+    def dedupe() = outcome(AutoLinker.autoLink(people, maxEvals = 4, seed = 5L,
+      comparisonSizeLimit = 1000000L, clusterThreshold = 0.5), "unique_id")
+    def link() = outcome(AutoLinker.autoLinkTables(left, right, uidCol = "id",
+      maxEvals = 4, seed = 3L, comparisonSizeLimit = 1000000L, clusterThreshold = 0.5), "id")
+    def twice[A](call: () => A): Seq[A] = {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      Seq(Future(call()), Future(call())).map(Await.result(_, Duration.Inf))
+    }
+    Seq[(String, () => Any)]("autoLink" -> (() => dedupe()), "autoLinkTables" -> (() => link()))
+      .foreach { case (name, call) =>
+        val sequential = call()
+        twice(call).foreach(out => assert(out === sequential, s"$name concurrent call"))
+      }
   }
 
   test("auto-link end-to-end on planted duplicates finds them") {
