@@ -173,16 +173,9 @@ object Bench {
       System.err.println(s"[bench] WARNING: $jvmsAtStart other JVM(s) running — " +
         s"timings will not be quiet-machine comparable (loadavg $loadAtStart)")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.util.Sessions.cpus
     val filter = args.headOption.map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-bench", cpus)
     // untimed JVM/codegen warm-up: without it the alphabetically-first query absorbs
     // classloading + whole-stage-codegen compiler start-up and reads several× slower
     // than steady state
@@ -199,7 +192,7 @@ object Bench {
     // calibration probes AFTER warm-up (codegen/classloading out of the way),
     // BEFORE the suite; CPU probe repeats at the end to expose in-session drift
     val calCpuS = calCpu()
-    val calMtS = calMt(cpus.toInt)
+    val calMtS = calMt(cpus)
     val calShuffleS = calShuffle(spark)
     val calIoS = calIo()
     System.err.println(
@@ -286,7 +279,7 @@ object Bench {
         s""""retimed_queries":${retimedNames.map(jstr).mkString("[", ",", "]")},""" +
         s""""cal_cpu_s":$calCpuS,"cal_mt_s":$calMtS,"cal_shuffle_s":$calShuffleS,""" +
         s""""cal_cpu_end_s":$calCpuEndS,"cal_io_s":$calIoS,"cal_io_end_s":$calIoEndS,""" +
-        s""""cpus":${jstr(cpus)}}"""
+        s""""cpus":${jstr(cpus.toString)}}"""
     }
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"n_failed":${failed.size},"sf":"$sfDir","run":$run}"""
@@ -322,7 +315,7 @@ object Bench {
     }
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},""" +
-        s""""n_failed":${failed.size},"sf":"$sfDir","cpus":${jstr(cpus)},""" +
+        s""""n_failed":${failed.size},"sf":"$sfDir","cpus":${jstr(cpus.toString)},""" +
         s""""contaminated":${!quiet},"retimed":$retimed,""" +
         s""""queries_file":${jstr(perCpuOut.getOrElse(outPath))}}""")
     spark.stop()

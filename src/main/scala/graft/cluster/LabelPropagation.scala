@@ -40,7 +40,7 @@ object LabelPropagation {
     val tracker = new graft.util.CheckpointTracker(edges.sparkSession)
     var labels = nodes.select(col("node"), col("node").as("label"))
     // label-vector-sized loop shuffles (util.Partitioning — the PageRank note)
-    graft.util.Partitioning.withShufflePartitions(edges.sparkSession,
+    graft.util.Sessions.withShufflePartitions(edges.sparkSession,
       graft.util.Partitioning.adaptive(edges.sparkSession, nodes.count())) {
       (1 to iters).foreach { _ =>
         val neighborLabels = sym

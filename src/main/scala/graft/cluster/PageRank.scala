@@ -50,7 +50,7 @@ object PageRank {
     // loop shuffles sized from the rank vector, not the machine (util.Partitioning:
     // the 10-iteration loop otherwise launches its ~30 micro-stages at the session
     // constant — measured ~9 jobs × 32+ tasks per iteration of a 100k-node graph)
-    graft.util.Partitioning.withShufflePartitions(
+    graft.util.Sessions.withShufflePartitions(
       spark, graft.util.Partitioning.adaptive(spark, n)) {
       (1 to iters).foreach { i =>
         val withDeg = ranks
@@ -123,7 +123,7 @@ object PageRank {
     val tracker = new graft.util.CheckpointTracker(edges.sparkSession)
     var ranks: DataFrame = withS.select(col("node"), col("s").as("rank"))
     // rank-vector-sized loop shuffles, as in [[pageRank]]
-    graft.util.Partitioning.withShufflePartitions(edges.sparkSession,
+    graft.util.Sessions.withShufflePartitions(edges.sparkSession,
       graft.util.Partitioning.adaptive(edges.sparkSession, nodes.count())) {
       (1 to iters).foreach { _ =>
         val withDeg = ranks
@@ -197,7 +197,7 @@ object PageRank {
     var hubsN: DataFrame = nodes.select(col("node"), lit(1.0).as("hub"))
     var authN: DataFrame = null
     // vector-sized loop shuffles, as in [[pageRank]]
-    graft.util.Partitioning.withShufflePartitions(edges.sparkSession,
+    graft.util.Sessions.withShufflePartitions(edges.sparkSession,
       graft.util.Partitioning.adaptive(edges.sparkSession, nodes.count())) {
       (1 to iters).foreach { _ =>
         val aRaw = aTracker.rotate(

@@ -150,7 +150,7 @@ object Preference {
     val tracker = new graft.util.CheckpointTracker(spark)
     var s: DataFrame = items.select(col("item"), lit(1.0).as("score"))
     // score-vector-sized loop shuffles (util.Partitioning — the PageRank note)
-    graft.util.Partitioning.withShufflePartitions(spark,
+    graft.util.Sessions.withShufflePartitions(spark,
       graft.util.Partitioning.adaptive(spark, n)) {
       (1 to iters).foreach { _ =>
         val denom = games

@@ -72,7 +72,7 @@ object AutoLinkOracle {
     // slice keeps two full trials ~O(seconds) at sf0.1 while the operators'
     // own queries carry the scale burden (low-threshold giant-closure behavior
     // is pinned by j7_threshold_sweep; here the serve threshold is 0.5)
-    val df = s.read.parquet(s"$dir/customer.parquet")
+    val df = Fixtures.cust(s, dir)
       .filter(col("c_custkey") % 3 === 0)
       .select(col("c_custkey").cast("string").as("uid"),
         col("c_name"), col("c_mktsegment"),
@@ -92,7 +92,7 @@ object AutoLinkOracle {
   def twoTrialsLinkQuery(s: SparkSession, dir: String): DataFrame = {
     // same every-3rd slice as twoTrialsQuery (parity split stays mixed: %3=0
     // custkeys alternate even/odd)
-    val c = s.read.parquet(s"$dir/customer.parquet")
+    val c = Fixtures.cust(s, dir)
       .filter(col("c_custkey") % 3 === 0)
     val left = c.filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey").cast("string").as("id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.textops.{Curation, TextOps}
 import graft.util.Caching.CacheSyntax
+import graft.queries.Fixtures.docs
 
 /** SparkEntry query + oracle entries for corpus curation: repetition metrics,
   * deterministic domain mixing / splits, token-budget sequence packing, boilerplate
@@ -15,9 +16,6 @@ import graft.util.Caching.CacheSyntax
   * both sides, and regexes are restricted to the Java-regex ∩ RE2 subset.
   */
 object CurationQueries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Domain-mixing target rates (en is over-represented in the synthetic corpus). */
   private val MixRates: Map[String, Double] =

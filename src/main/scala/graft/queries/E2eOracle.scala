@@ -46,7 +46,7 @@ object E2eOracle {
     // count-based, so the result is partition-layout-proof). Conditional (r12):
     // a naturally wide scan skips the shuffle entirely.
     val df = graft.util.Partitioning.spreadNarrowScan(
-      s.read.parquet(s"$dir/customer.parquet")
+      Fixtures.cust(s, dir)
         .withColumn("uid", col("c_custkey").cast("string"))
         .withColumn("c_nationkey", col("c_nationkey").cast("string"))
         .withColumn("k", (col("c_custkey") % 100).cast("string")))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{combinations => arc_combinations, _}
+import graft.queries.Fixtures.cust
 
 /** SparkEntry query + oracle entries for the custom expression layer (SURVEY §2.1, E1-E8).
   *
@@ -12,9 +13,6 @@ import graft.functions.{combinations => arc_combinations, _}
   * table and are oracled by equivalent DuckDB group-bys.
   */
 object ExpressionQueries {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
 
   /** customer attributes, stringified the way the engine canonicalizes them. */
   private def custAttrs(df: DataFrame): DataFrame =
@@ -25,7 +23,7 @@ object ExpressionQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "e1_combinatorial_count_agg" -> { (s, dir) =>
-      val a = custAttrs(t(s, dir, "customer"))
+      val a = custAttrs(cust(s, dir))
       a.agg(combinatorial_count_agg(2, 0L, 1000000,
           "c_mktsegment" -> col("c_mktsegment"),
           "c_nationkey" -> col("c_nationkey"),
@@ -35,7 +33,7 @@ object ExpressionQueries {
     },
     "e2_merge_count_map_agg" -> { (s, dir) =>
       // per-bucket partial maps merged into the global counts — the P1 two-phase shape
-      val a = custAttrs(t(s, dir, "customer"))
+      val a = custAttrs(cust(s, dir))
         .withColumn("bucket", pmod(col("c_nationkey").cast("int"), lit(8)))
       a.groupBy(col("bucket"))
         .agg(combinatorial_count_agg(1, 0L, 1000000,
@@ -45,7 +43,7 @@ object ExpressionQueries {
         .orderBy("key")
     },
     "e3_entropy_agg" -> { (s, dir) =>
-      val a = custAttrs(t(s, dir, "customer"))
+      val a = custAttrs(cust(s, dir))
       a.agg(entropy_agg(0,
           "c_mktsegment" -> col("c_mktsegment"),
           "c_nationkey" -> col("c_nationkey")).as("e"))

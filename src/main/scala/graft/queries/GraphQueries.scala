@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cluster.PageRank
+import graft.queries.Fixtures.docs
 
 /** SparkEntry query + oracle entries for link-graph analytics
   * ([[graft.cluster.PageRank]]): the authority prior a web-scale curation pipeline
@@ -15,9 +16,6 @@ import graft.cluster.PageRank
   * source) — replicated verbatim in the oracle SQL.
   */
 object GraphQueries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Deterministic doc-link edges; N rides the plan as a literal (1-row count). */
   private def linkEdges(s: SparkSession, dir: String): DataFrame = {

@@ -6,15 +6,13 @@ import org.apache.spark.sql.functions._
 import graft.blocking.{BlockingRule, PairGenerator}
 import graft.schemamatch.SchemaMatch
 import graft.textops.Dedup
+import graft.queries.Fixtures.cust
 
 /** Link-mode (two-table) operators and remaining SURVEY §2 entries: J1 link pairs,
   * Y4 deterministic-rule pick, Y10+link end-to-end column mapping, SimHash-collision
   * dedup pairs.
   */
 object LinkQueries {
-
-  private def cust(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/customer.parquet")
 
   /** Two halves of customer with different column names — the Y10/link fixture
     * (mirrors the reference's linking integration test, which splits FEBRL and
@@ -67,7 +65,7 @@ object LinkQueries {
     },
     "dedup_simhash64" -> { (s, dir) =>
       Dedup.simhash64(
-          s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text")),
+          Fixtures.docs(s, dir).select(col("doc_id"), col("text")),
           "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id")
@@ -81,7 +79,7 @@ object LinkQueries {
 
   /** documents ∪ exact copies (doc_id+100000 for doc_id%7=0) — the SimHash fixture. */
   private def plantedDocs(s: SparkSession, dir: String): DataFrame = {
-    val d = s.read.parquet(s"$dir/documents.parquet").select(col("doc_id"), col("text"))
+    val d = Fixtures.docs(s, dir).select(col("doc_id"), col("text"))
     d.unionByName(
       d.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 100000).as("doc_id"), col("text")))

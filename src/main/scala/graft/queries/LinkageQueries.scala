@@ -10,6 +10,7 @@ import graft.compare.Comparisons
 import graft.model.{ColumnParams, ComparisonSpec, TrainedModel}
 import graft.score.FellegiSunter
 import graft.train.Estimation
+import graft.queries.Fixtures.cust
 
 /** SparkEntry query + oracle entries for blocking and linkage (SURVEY §2.2 P1-P4 and
   * §2.4 J1-J7) over the testdata `customer` table.
@@ -19,9 +20,6 @@ import graft.train.Estimation
   * literal arithmetic (addition order matches too) before the final round(6).
   */
 object LinkageQueries {
-
-  private def cust(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/customer.parquet")
 
   // fixed demo model for the deterministic predict/score oracles
   private val demoSpecs = Seq(

@@ -10,14 +10,12 @@ import graft.model.ComparisonSpec
 import graft.schemamatch.SchemaMatch
 import graft.score.FellegiSunter
 import graft.train.Estimation
+import graft.queries.Fixtures.cust
 
 /** SparkEntry query + oracle entries for cleaning, metrics, schema matching and training
   * (SURVEY §2.3 Y1-Y18, §2.4 J4-J5).
   */
 object MetricQueries {
-
-  private def cust(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/customer.parquet")
 
   private def custTruth(s: SparkSession, dir: String): DataFrame =
     cust(s, dir)

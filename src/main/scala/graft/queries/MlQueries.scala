@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.metrics.{Evaluation, GenEval}
 import graft.textops.{QualityClassifier, TextOps}
+import graft.queries.Fixtures.docs
 
 /** SparkEntry query + oracle entries for the quality classifier: scoring with a fixed
   * pretrained weight vector is DuckDB-oracle-checked (identical feature arithmetic and
@@ -12,9 +13,6 @@ import graft.textops.{QualityClassifier, TextOps}
   * pinned by CurationSpec accuracy/loss tests.
   */
 object MlQueries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   /** Feature names, index-aligned with [[QualityClassifier.textFeatures]]. */
   private val FeatureNames: Seq[String] =

@@ -25,7 +25,7 @@ object PipelineQueries {
     * with the uid-ordered pairing its oracle replays.
     */
   def e2eDedupe(s: SparkSession, dir: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/customer.parquet")
+    val df = Fixtures.cust(s, dir)
       .withColumn("uid", col("c_custkey").cast("string"))
       .withColumn("c_nationkey", col("c_nationkey").cast("string"))
       .withColumn("k", (col("c_custkey") % 100).cast("string"))

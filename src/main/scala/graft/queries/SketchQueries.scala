@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.metrics.Sketches
 import graft.textops.TextOps
+import graft.queries.Fixtures.docs
 
 /** SparkEntry query + oracle entries for the mergeable-sketch layer
   * ([[graft.metrics.Sketches]]): HLL distinct estimation, count-min heavy hitters,
@@ -12,9 +13,6 @@ import graft.textops.TextOps
   * register deterministic, so DuckDB replays the sketch cell-for-cell.
   */
 object SketchQueries {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   private def langTokens(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(col("lang"), explode(TextOps.tokens(col("text"))).as("tok"))

@@ -26,7 +26,7 @@ object SourceQueries {
       // small-file compaction planning (the OPTIMIZE half of table maintenance):
       // per-lang partition, files <= 300 bytes pack into ~1000-byte bins by one
       // next-fit-decreasing window pass — full oracle
-      val manifest = s.read.parquet(s"$dir/documents.parquet")
+      val manifest = Fixtures.docs(s, dir)
         .select(concat(lit("f"), col("doc_id")).as("path"), col("lang"),
           col("n_chars").as("bytes"))
       Compaction.planCompaction(manifest, "lang", "path", "bytes",
@@ -36,7 +36,7 @@ object SourceQueries {
     "src_vacuum_plan" -> { (s, dir) =>
       // version-retention vacuum planning (the VACUUM...RETAIN half): per shard
       // keep the 3 newest versions, emit what deletion reclaims — full oracle
-      val manifest = s.read.parquet(s"$dir/documents.parquet")
+      val manifest = Fixtures.docs(s, dir)
         .select((col("doc_id") % 16).as("shard"),
           floor(col("doc_id") / 16).cast("long").as("version"),
           col("n_chars").as("bytes"))
@@ -46,7 +46,7 @@ object SourceQueries {
     "src_bucketed_join" -> { (s, dir) =>
       // stage both sides bucketed on the join key, then join + aggregate; the join
       // itself reads co-located buckets (no Exchange — pinned by SourcesSpec)
-      val customer = s.read.parquet(s"$dir/customer.parquet")
+      val customer = Fixtures.cust(s, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
       val orders = s.read.parquet(s"$dir/orders.parquet")
         .select(col("o_custkey").as("c_custkey"), col("o_totalprice"))
@@ -67,7 +67,7 @@ object SourceQueries {
       // files add (lang, n_chars); one mergeSchema read unions the generations
       // (missing columns become nulls) — the 100 TB reality where a corpus's
       // parquet schema grows across ingestion batches
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Fixtures.docs(s, dir)
       val path = graft.util.Scratch.deleteOnExit(
         s"${System.getProperty("java.io.tmpdir")}/graft_evo/$RunToken") + "/documents"
       docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
@@ -86,7 +86,7 @@ object SourceQueries {
       // table as gzip JSONL, read it back with an EXPLICIT schema (schema inference
       // costs a full extra pass at corpus scale), and prove the round-trip lossless
       // by aggregating content hashes of what is actually on disk
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Fixtures.docs(s, dir)
       // per-JVM token (concurrent-run safe) + delete-at-exit (no tmp accumulation)
       val path = graft.util.Scratch.deleteOnExit(
         s"${System.getProperty("java.io.tmpdir")}/graft_jsonl/$RunToken") + "/documents"
@@ -103,7 +103,7 @@ object SourceQueries {
       // when the corpus flows through Hive-era infrastructure): write zlib ORC,
       // read back, prove losslessness with the same on-disk content aggregate as
       // the JSONL roundtrip (shared oracle)
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Fixtures.docs(s, dir)
       val path = graft.util.Scratch.deleteOnExit(
         s"${System.getProperty("java.io.tmpdir")}/graft_orc/$RunToken") + "/documents"
       docs.write.mode("overwrite").option("compression", "zlib").orc(path)
@@ -119,7 +119,7 @@ object SourceQueries {
       // format most external corpora arrive in; explicit schema on read (inference
       // is a full extra pass at corpus scale), quotes cover embedded delimiters
       // and newlines, and the content aggregate proves byte fidelity
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+      val docs = Fixtures.docs(s, dir)
       val path = graft.util.Scratch.deleteOnExit(
         s"${System.getProperty("java.io.tmpdir")}/graft_csv/$RunToken") + "/documents"
       docs.write.mode("overwrite")

@@ -46,7 +46,18 @@ object Events {
     * legacy nanos conf first so BOTH historical physical schemas load.
     */
   def load(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    allowLegacyNanos(spark)
     normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
   }
+
+  /** Turn on `spark.sql.legacy.parquet.nanosAsLong`, so a `TIMESTAMP(NANOS)` column
+    * loads as BIGINT epoch nanos instead of failing the read. Call it before the
+    * schema inference of any events read. This is the one session setting an
+    * operator leaves set rather than scoping it with
+    * [[graft.util.Sessions.withConf]]: the reader consults it again when the
+    * lazily returned frame executes, after any scope around the call has closed, so
+    * no scope can put it back. It changes nothing for files without nanos columns.
+    */
+  def allowLegacyNanos(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 }

@@ -17,11 +17,11 @@ object StreamOps {
     * readStream with `maxFilesPerTrigger` — see the dedup ops.)
     */
   private def fileStream(spark: SparkSession, path: String): DataFrame = {
-    // set BEFORE the batch schema inference: a legacy TIMESTAMP(NANOS) events file
+    // BEFORE the batch schema inference: a legacy TIMESTAMP(NANOS) events file
     // fails schema inference itself without the conf, i.e. before normalizeTs could
     // ever see it — and streaming paths must work standalone, not only after some
     // batch events query happened to set the conf on the shared session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.sources.Events.allowLegacyNanos(spark)
     val schema = spark.read.parquet(path).schema
     val f = new java.io.File(path)
     spark.readStream
@@ -30,42 +30,6 @@ object StreamOps {
       .parquet(f.getParent)
   }
 
-  /** Set `spark.sql.shuffle.partitions` for the duration of `body` (streaming picks
-    * the value up at query start), restoring the session default after. `n = None`
-    * leaves the session default in place.
-    */
-  private def withStatePartitions[A](spark: SparkSession, n: Option[Int])(body: => A): A =
-    n match {
-      case None => body
-      case Some(parts) =>
-        val key = "spark.sql.shuffle.partitions"
-        val prev = spark.conf.get(key)
-        spark.conf.set(key, parts.toString)
-        try body finally spark.conf.set(key, prev)
-    }
-
-  /** Drive a streaming DataFrame to completion into a uniquely-named memory sink and
-    * return the sink table — the synchronous verification harness for every
-    * streaming operator here.
-    *
-    * `statePartitions` pins `spark.sql.shuffle.partitions` for this query: unlike
-    * batch shuffles (AQE coalesces empty partitions at runtime), streaming state
-    * partitions are FIXED at the first micro-batch and each costs a state-store
-    * instance — file create + delta write + commit per partition PER BATCH — so an
-    * oversized count is fixed overhead no optimizer claws back. Operators whose
-    * per-batch state work is small relative to that fixed cost (the stream-stream
-    * join runs FOUR stores per partition) pass a count sized to the stream volume;
-    * ops that chew real per-row state keep the session default for parallelism.
-    *
-    * r11 sizing pass: EVERY op here passes an explicit count, because the per-row
-    * state work of all of these streams is small against the store-commit fixed
-    * cost (measured on stream_dedup, quiet, JIT-warm: 32 partitions ≈ 7.4 s,
-    * 8 partitions ≈ 4.0 s per drive). r12: the counts are DERIVED from the
-    * source's size ([[heavyState]]/[[lightState]]) rather than per-op constants,
-    * so a production feed with orders more volume gets proportionally more
-    * stores, saturating at the session parallelism — the same derive-from-data
-    * rule as the iterative graph loops.
-    */
   /** r12 (verdict #7): state partition counts DERIVED from the source's on-disk
     * size ([[graft.util.Partitioning.stateFromSource]]) instead of the r11 per-op
     * constants — identical values at the r11-measured optima for the events-sized
@@ -75,18 +39,32 @@ object StreamOps {
     * keyed aggregates (per-lang / per-segment / per-bin) whose state is bounded
     * far below the stream size.
     */
-  private def heavyState(spark: SparkSession, path: String): Option[Int] =
-    Some(graft.util.Partitioning.stateFromSource(spark, path, 256L << 10))
-  private def lightState(spark: SparkSession, path: String): Option[Int] =
-    Some(graft.util.Partitioning.stateFromSource(spark, path, 512L << 10))
+  private def heavyState(spark: SparkSession, path: String): Int =
+    graft.util.Partitioning.stateFromSource(spark, path, 256L << 10)
+  private def lightState(spark: SparkSession, path: String): Int =
+    graft.util.Partitioning.stateFromSource(spark, path, 512L << 10)
 
+  /** Drive a streaming DataFrame to completion into a uniquely-named memory sink and
+    * return the sink table — the synchronous verification harness for every
+    * streaming operator here.
+    *
+    * `statePartitions` pins `spark.sql.shuffle.partitions` for this query: unlike
+    * batch shuffles (AQE coalesces empty partitions at runtime), streaming state
+    * partitions are FIXED at the first micro-batch and each costs a state-store
+    * instance — file create + delta write + commit per partition PER BATCH — so an
+    * oversized count is fixed overhead no optimizer claws back. Every op here passes
+    * a count sized to its source ([[heavyState]]/[[lightState]]): the per-row state
+    * work of these streams is small against the store-commit fixed cost (measured
+    * on stream_dedup, quiet, JIT-warm: 32 partitions ≈ 7.4 s, 8 partitions ≈ 4.0 s
+    * per drive).
+    */
   private def driveToMemory(
       stream: DataFrame,
       mode: String,
       prefix: String,
-      statePartitions: Option[Int] = None): DataFrame = {
+      statePartitions: Int): DataFrame = {
     val name = s"${prefix}_${System.nanoTime()}"
-    withStatePartitions(stream.sparkSession, statePartitions) {
+    graft.util.Sessions.withShufflePartitions(stream.sparkSession, statePartitions) {
       val q = stream.writeStream
         .outputMode(mode)
         .format("memory")
@@ -296,7 +274,7 @@ object StreamOps {
     // so partition count changes file counts only, never content.
     val batchParts = graft.util.Partitioning.stateFromSource(
       spark, incomingDir, 256L << 10)
-    graft.util.Partitioning.withShufflePartitions(spark, batchParts) {
+    graft.util.Sessions.withShufflePartitions(spark, batchParts) {
       val q = stream.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
           graft.util.Caching.withCached {
@@ -381,15 +359,16 @@ object StreamOps {
   /** Streaming dedup with BOUNDED state: `dropDuplicatesWithinWatermark` evicts a
     * key's state once the watermark passes its event time + `delay`, so state holds
     * only the dedup horizon — the production shape for unbounded streams (plain
-    * `dropDuplicates` state grows forever). Expects `ts` as long nanoseconds (the
-    * events schema); dedup key = (user_id, event_type, ts). Emits the deduplicated
-    * rows (append mode — each key exactly once).
+    * `dropDuplicates` state grows forever). `ts` may be either events shape
+    * ([[graft.sources.Events]]: native `timestamp[us]` or legacy long nanos);
+    * dedup key = (user_id, event_type, ts at its native resolution). Emits the
+    * deduplicated rows (append mode — each key exactly once).
     */
   def streamingDedupWithinWatermark(
       spark: SparkSession,
       eventsDir: String,
       delay: String = "365 days"): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true") // before inference
+    graft.sources.Events.allowLegacyNanos(spark) // before inference
     val schema = spark.read.parquet(eventsDir).schema
     val raw = spark.readStream
       .schema(schema)
@@ -440,8 +419,9 @@ object StreamOps {
     * range, both buffers grow forever on a real stream. Append mode (the only mode
     * stream-stream joins support); the per-user rollup happens on the sink table.
     *
-    * `ts` arrives as long nanos (legacy parquet nanos source) and joins at
-    * microsecond precision — the DuckDB oracle replicates with `epoch_ns // 1000`.
+    * `ts` (either events shape, normalized by [[graft.sources.Events.normalizeTs]])
+    * joins at microsecond precision — the DuckDB oracle replicates with
+    * `epoch_ns // 1000`.
     */
   def streamStreamIntervalJoin(
       spark: SparkSession,
@@ -612,11 +592,8 @@ object StreamOps {
     */
   def statefulUserTotalsTws(spark: SparkSession, eventsPath: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.util.Sessions.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val raw = fileStream(spark, eventsPath)
         .select(col("user_id").cast("long").as("user_id"),
           col("value").cast("double").as("value"))
@@ -631,11 +608,6 @@ object StreamOps {
         .agg(max("n_events").as("n_events"), max("value_sum").as("value_sum"))
         .select(col("user_id"), col("n_events"),
           round(col("value_sum"), 4).as("value_sum"))
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
   }
 

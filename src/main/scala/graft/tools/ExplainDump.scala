@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the before/after
   * plan evidence for optimization rounds (`plans/rNN/<query>_{before,after}.txt`).
   *
@@ -21,14 +19,7 @@ object ExplainDump {
     val pattern = args(2).r
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-explain")
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => pattern.findFirstIn(name).isDefined }
       .foreach { case (name, fn) =>

@@ -1,34 +1,28 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
-/** One-off diagnostic main (r11 optimization): per-JOB wall/task breakdown of one
-  * declared query — where a composed pipeline's seconds go when the data is small
+/** Per-query profiler: where a declared query's seconds go when the data is small
   * and the cost is job-count-bound (scheduling + materialization overhead) rather
   * than data-bound.
   *
-  * Usage: `sbt "runMain graft.tools.JobProfile <query_name> [runs]"`; reads
-  * SPARK_GRAFT_SF_DIR (default sf0.1). Prints one line per job (wall ms, summed
-  * task ms, callsite) and a total per run; run 2+ is JIT-warm.
+  * Usage: `sbt "runMain graft.tools.JobProfile <query_name>... [runs]"`; reads
+  * SPARK_GRAFT_SF_DIR (default sf0.1) and SPARK_GRAFT_CPUS (default: every core).
+  * For each query and run it prints one line per job (wall, summed task-s, tasks,
+  * callsite) and a one-line summary (wall, rows, jobs, stages, task-s; the gap
+  * between wall and task-s over cores is scheduler/launch overhead); run 2+ is
+  * JIT-warm.
   */
 object JobProfile {
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: JobProfile <query_name> [runs]")
-    val name = args(0)
-    val runs = if (args.length > 1) args(1).toInt else 2
+    val (names, runs) = args.lastOption.filter(_.matches("\\d+")) match {
+      case Some(n) => (args.init.toSeq, n.toInt)
+      case None => (args.toSeq, 2)
+    }
+    require(names.nonEmpty, "usage: JobProfile <query_name>... [runs]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val fn = graft.SparkEntry.queries(name)
+    val spark = graft.util.Sessions.local("graft-jobprofile")
 
     case class Job(id: Int, started: Long, site: String) {
       var ended: Long = 0L
@@ -37,6 +31,7 @@ object JobProfile {
     }
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
     // stage → job from SparkListenerJobStart.stageInfos: broadcast-exchange and AQE
     // subquery jobs overlap the main job even on a single-threaded driver, so the
     // former "most recent unfinished job" heuristic mis-binned their tasks (r11
@@ -53,10 +48,11 @@ object JobProfile {
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         val j = jobs.get(e.jobId); if (j != null) j.ended = e.time
       }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         if (e.taskMetrics != null) {
-          val jid = stageToJob.get(e.stageId)
-          val j = if (jid != null) jobs.get(jid) else null
+          val j = jobs.get(stageToJob.getOrDefault(e.stageId, -1))
           if (j != null) {
             j.taskMs += e.taskMetrics.executorRunTime
             j.tasks += 1
@@ -65,10 +61,11 @@ object JobProfile {
       }
     })
 
-    (1 to runs).foreach { r =>
-      jobs.clear(); order.clear(); stageToJob.clear()
+    for (name <- names; r <- 1 to runs) {
+      val fn = graft.SparkEntry.queries(name)
+      jobs.clear(); order.clear(); stageToJob.clear(); stages.set(0)
       val t0 = System.nanoTime()
-      graft.util.Caching.withCached { fn(spark, sfDir).count() }
+      val rows = graft.util.Caching.withCached { fn(spark, sfDir).count() }
       val wall = (System.nanoTime() - t0) / 1e9
       graft.util.Caching.releaseAll()
       spark.sqlContext.clearCache()
@@ -81,14 +78,15 @@ object JobProfile {
         while (it.hasNext) { val j = jobs.get(it.next()); if (j != null) buf += j }
         buf
       }
-      System.err.println(f"[jobprofile] === $name run $r: $wall%.2f s wall, ${js.size} jobs ===")
+      val taskS = js.map(_.taskMs).sum / 1000.0
+      System.err.println(f"[jobprofile] $name run $r: $wall%.3f s wall, rows=$rows " +
+        f"jobs=${js.size} stages=${stages.get} task-s=$taskS%.2f")
       js.foreach { j =>
         val w = (j.ended - j.started).toDouble / 1000
         System.err.println(f"[jobprofile]   job ${j.id}%4d ${w}%7.3f s wall ${j.taskMs / 1000.0}%8.2f task-s ${j.tasks}%5d tasks  ${j.site}")
       }
       val sumW = js.map(j => (j.ended - j.started).toDouble / 1000).sum
-      val gaps = wall - sumW
-      System.err.println(f"[jobprofile]   sum job wall ${sumW}%.2f s; driver gaps ${gaps}%.2f s")
+      System.err.println(f"[jobprofile]   sum job wall ${sumW}%.2f s; driver gaps ${wall - sumW}%.2f s")
     }
     spark.stop()
   }

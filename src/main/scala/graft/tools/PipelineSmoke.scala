@@ -51,14 +51,7 @@ object PipelineSmoke {
   def main(args: Array[String]): Unit = {
     val factors = if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(1, 10)
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.local("graft-pipeline-smoke")
     val outRoot = Files.createTempDirectory("graft_pipeline_smoke").toString
 
     // untimed warm-up (JVM + codegen), smallest factor

@@ -108,14 +108,7 @@ object ScaleSmoke {
     println(s"[scale] sizes=${sizes.mkString(",")}" +
       only.map(p => s" filter=$p").getOrElse(""))
     require(pats.length <= 1, s"at most one name filter, got: ${pats.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = graft.util.Sessions.local("graft-scale-smoke")
     for (n <- sizes) {
       val docs = corpus(spark, n).persist()
       docs.count() // materialize outside the timed section

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize a `factor`-times-larger copy of the sf0.1 tables the five most
@@ -25,13 +25,7 @@ object SynthScale {
     val factor = args(1).toInt
     require(factor >= 1 && factor <= 16, s"factor in [1,16], got $factor")
     val src = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Sessions.local("graft-synth-scale")
 
     // cast the shifted key back to the source type: `col + lit(long)` widens an INT
     // key to BIGINT for every replica (k=0 included), and a drifted physical schema

@@ -66,23 +66,4 @@ object Partitioning {
     val cores = spark.sparkContext.defaultParallelism.toLong
     math.max(1L, math.min(cores, bytes / math.max(bytesPerPartition, 1L) + 1)).toInt
   }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `n`, restoring the
-    * session value after — plans compiled inside (an iterative loop's rounds)
-    * pick `n` up; everything outside is untouched.
-    *
-    * NOT thread-safe across queries: the setting is session-global, so two queries
-    * planned concurrently on ONE SparkSession can each observe the other's pinned
-    * value. Fine for sequential drivers (the bench); concurrent callers must
-    * serialize these loops or run them on separate sessions
-    * (`spark.newSession()`). Operators that may legitimately run on concurrent
-    * driver threads (the auto-link trial loop) must NOT use this — size their
-    * frames with explicit `repartition(adaptive(...))` instead.
-    */
-  def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
 }

@@ -63,8 +63,8 @@ class PushdownSpec extends SparkSpec {
 
   test("funnel stage filters push down on the lazily-planned stage inputs") {
     import org.apache.spark.sql.functions.col
-    // events store ts as parquet nanos — read as long, like the event queries do
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events may store ts as parquet nanos — read as long, like the event queries do
+    graft.sources.Events.allowLegacyNanos(spark)
     // the funnel's per-stage input shape: a filtered+projected events scan
     val stage = spark.read.parquet(s"$sf/events.parquet")
       .filter(col("event_type") === "view")

@@ -175,13 +175,10 @@ class SourcesSpec extends SparkSpec {
     BucketedTables.writeBucketed(orders, "spec_bkt_orders",
       s"$base/orders", "c_custkey", 4, Seq("c_custkey"))
 
-    val conf = spark.conf
-    val (aqe, bcast) = (conf.get("spark.sql.adaptive.enabled"),
-      conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    try {
-      // forbid broadcast + AQE so the plan must stand on bucketing alone
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // forbid broadcast + AQE so the plan must stand on bucketing alone
+    try graft.util.Sessions.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = BucketedTables.colocatedJoin(spark,
         "spec_bkt_customer", "spec_bkt_orders", Seq("c_custkey"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -196,8 +193,6 @@ class SourcesSpec extends SparkSpec {
         .map(r => (r.getString(0), r.getLong(1))).sorted
       assert(viaBuckets === direct)
     } finally {
-      conf.set("spark.sql.adaptive.enabled", aqe)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
       spark.sql("DROP TABLE IF EXISTS spec_bkt_customer")
       spark.sql("DROP TABLE IF EXISTS spec_bkt_orders")
     }
@@ -273,15 +268,17 @@ class SourcesSpec extends SparkSpec {
     // the two arbitrary-state APIs run the same fold over the same stream — any
     // divergence (state init, batch boundaries, provider behavior) shows here
     val dir = "/root/testdata/sf0.001/events.parquet"
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    spark.conf.unset(providerKey)
     val a = graft.streaming.StreamOps.statefulUserTotals(spark, dir)
       .orderBy("user_id").collect().toSeq
     val b = graft.streaming.StreamOps.statefulUserTotalsTws(spark, dir)
       .orderBy("user_id").collect().toSeq
     assert(a.nonEmpty)
     assert(a === b)
-    // the RocksDB provider override must not leak into the session
-    assert(spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .forall(!_.contains("RocksDB")))
+    // the RocksDB provider override must not leak into the session: the key was
+    // absent before, so it is absent after (not pinned to the default provider)
+    assert(!spark.conf.getAll.contains(providerKey))
   }
 
   test("left-outer stream-stream join ≡ batch replay with the eviction predicate") {

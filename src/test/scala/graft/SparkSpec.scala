@@ -5,17 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for every suite (object = JVM-wide singleton). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.util.Sessions.local("graft-test", cpus = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Test-scoped fixture freezer (never ships): runs one `SparkEntry.queries` entry
   * at sf0.001 and prints its rows as VALUES-style tuples for pinning an oracle.
   * Run: sbt 'Test/runMain graft.tools.FreezeQuery <query_name>'.
@@ -10,13 +8,7 @@ object FreezeQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: FreezeQuery <query_name> [sfDir]"))
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("freeze-query")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.Sessions.local("freeze-query")
     val df = graft.SparkEntry.queries(name)(spark, dir)
     println("FROZEN ROWS:")
     df.collect().foreach { r =>
