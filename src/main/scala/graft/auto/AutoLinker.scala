@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.blocking.RuleGen
+import graft.blocking.{PairGenerator, RuleGen}
 import graft.clean.Cleaning
 import graft.cluster.ConnectedComponents
 import graft.metrics.{ClusteringMetrics, EntropyMetrics, PairwiseMetrics}
@@ -62,17 +62,19 @@ object AutoLinker {
       * autolinker.py:1069-1094): filter the scored pairs, run connected components,
       * re-attach to the records carried in `clusters` (minus their old assignment).
       */
-    def clustersAtThreshold(uidCol: String, threshold: Double): DataFrame = {
-      // predictions carry the pipeline's canonical pair columns uid_l/uid_r
-      // (the same ones the search loop clusters on), whatever the caller's uid name
-      val edges = predictions
-        .filter(org.apache.spark.sql.functions.col("match_probability") >= threshold)
-        .select(org.apache.spark.sql.functions.col("uid_l").as("src"),
-          org.apache.spark.sql.functions.col("uid_r").as("dst"))
-      graft.cluster.ConnectedComponents.assignClusters(
-        clusters.drop("cluster_id"), uidCol, edges)
-    }
+    def clustersAtThreshold(uidCol: String, threshold: Double): DataFrame =
+      clusterAt(clusters.drop("cluster_id"), uidCol, predictions, threshold)
   }
+
+  /** `records` + `cluster_id`: connected components over the scored pairs at or above
+    * `threshold`. Pairs carry the pipeline's canonical `uid_l`/`uid_r` columns,
+    * whatever the caller's uid name.
+    */
+  private def clusterAt(records: DataFrame, uidCol: String, predictions: DataFrame,
+      threshold: Double): DataFrame =
+    ConnectedComponents.assignClusters(records, uidCol, predictions
+      .filter(col("match_probability") >= threshold)
+      .select(col("uid_l").as("src"), col("uid_r").as("dst")))
 
   def autoLink(
       data: DataFrame,
@@ -83,43 +85,18 @@ object AutoLinker {
       comparisonSizeLimit: Long = 100000L,
       clusterThreshold: Double = 0.8,
       cleaningMode: String = "all",
-      ruleCombinationSize: Int = 1,
-      maxOrSize: Int = 2,
       trueLabelCol: Option[String] = None,
       searchStrategy: String = "tpe",
       candidateRuleOverride: Option[Seq[String]] = None,
       uDeterministicOrder: Boolean = false): Result = {
 
     validateSearch(maxEvals, searchStrategy)
-    val rnd = new Random(seed)
-    val withId = Cleaning.withUniqueId(data, uidCol)
-    val attrs = attributeColumns.getOrElse(
-      withId.columns.filterNot(c => c == uidCol || trueLabelCol.contains(c)).toSeq)
-    val stringified = withId.select(
-      (col(uidCol).cast("string").as(uidCol) +:
-        attrs.map(c => col(c).cast("string").as(c))) ++
-        trueLabelCol.map(c => col(c).cast("string").as(c)).toSeq: _*)
-    // spread the cached records over the cluster BEFORE anything joins them: the
-    // loop's pair joins are EXPANSION joins (tiny inputs, large pair output, the
-    // gamma ladder pipelined into the join stage) and the planner broadcasts one
-    // side — so join parallelism IS the stream side's partitioning, which for a
-    // single-file source is ONE task grinding every trial's expansion (measured
-    // 6.6 s single-task jobs inside ep1_auto_link at sf0.1). Round-robin is
-    // deterministic (sort-before-repartition) and the loop's aggregates are
-    // count-based (patterns, entropies), so results are partition-layout-proof.
-    // Conditional (r12): a naturally wide scan skips the shuffle entirely.
-    val cleaned = graft.util.Partitioning
-      .spreadNarrowScan(Cleaning.cleanColumns(stringified, attrs, cleaningMode))
-      .cache()
-    val n = cleaned.count()
-
-    runSearch(cleaned, None, cleaned, uidCol, attrs,
-      () => candidateRuleOverride.getOrElse(
-        candidateRules(cleaned, n, attrs, ruleCombinationSize, maxOrSize,
-          comparisonSizeLimit, seed)),
-      maxEvals, rnd, searchStrategy, clusterThreshold,
-      uTargetPairs = math.min(n * 4, 100000L), trueLabelCol, uDeterministicOrder,
-      nRows = n)
+    val attrs = attributeColumns.getOrElse(attributesOf(data, uidCol, trueLabelCol))
+    val cleaned = prepare(data, uidCol, None, attrs.map(a => a -> a), trueLabelCol,
+      cleaningMode)
+    runSearch(cleaned, None, cleaned, uidCol, attrs, candidateRuleOverride,
+      comparisonSizeLimit, maxEvals, seed, searchStrategy, clusterThreshold, trueLabelCol,
+      uDeterministicOrder)
   }
 
   /** Link-mode end-to-end: recover the left↔right column correspondence (Y10), align
@@ -138,8 +115,6 @@ object AutoLinker {
       comparisonSizeLimit: Long = 100000L,
       clusterThreshold: Double = 0.8,
       cleaningMode: String = "all",
-      ruleCombinationSize: Int = 1,
-      maxOrSize: Int = 2,
       trueLabelCol: Option[String] = None,
       searchStrategy: String = "tpe",
       candidateRuleOverride: Option[Seq[String]] = None,
@@ -147,11 +122,8 @@ object AutoLinker {
       mappingOverride: Option[Seq[(String, String, Long)]] = None): Result = {
 
     validateSearch(maxEvals, searchStrategy)
-    val rnd = new Random(seed)
-    val lAttrs = leftAttributes.getOrElse(
-      left.columns.filterNot(c => c == uidCol || trueLabelCol.contains(c)).toSeq)
-    val rAttrs = rightAttributes.getOrElse(
-      right.columns.filterNot(c => c == uidCol || trueLabelCol.contains(c)).toSeq)
+    val lAttrs = leftAttributes.getOrElse(attributesOf(left, uidCol, trueLabelCol))
+    val rAttrs = rightAttributes.getOrElse(attributesOf(right, uidCol, trueLabelCol))
 
     // Y10 — recover the column correspondence, keep left's names for the mapped
     // pairs. A caller that already computed the same greedy mapping (the oracle
@@ -162,28 +134,44 @@ object AutoLinker {
     require(mapping.nonEmpty, "autoLinkTables: no column correspondence found")
     val attrs = mapping.map(_._1)
 
-    def prep(df: DataFrame, tag: String, sel: Seq[(String, String)]) =
-      df.select((concat(lit(tag), col(uidCol).cast("string")).as(uidCol) +:
-        sel.map { case (out, in) => col(in).cast("string").as(out) }) ++
-        trueLabelCol.map(c => col(c).cast("string").as(c)).toSeq: _*)
-    val lSel = prep(Cleaning.withUniqueId(left, uidCol), "l-", attrs.map(a => a -> a))
-    val rSel = prep(Cleaning.withUniqueId(right, uidCol), "r-",
-      mapping.map { case (lc, rc, _) => lc -> rc })
-    // same expansion-join parallelism reasoning as autoLink's spread above
-    val cleanedL = graft.util.Partitioning
-      .spreadNarrowScan(Cleaning.cleanColumns(lSel, attrs, cleaningMode)).cache()
-    val cleanedR = graft.util.Partitioning
-      .spreadNarrowScan(Cleaning.cleanColumns(rSel, attrs, cleaningMode)).cache()
-    val union = cleanedL.unionByName(cleanedR).cache()
-    val n = union.count()
+    val cleanedL = prepare(left, uidCol, Some("l-"), attrs.map(a => a -> a), trueLabelCol,
+      cleaningMode)
+    val cleanedR = prepare(right, uidCol, Some("r-"),
+      mapping.map { case (lc, rc, _) => lc -> rc }, trueLabelCol, cleaningMode)
+    runSearch(cleanedL, Some(cleanedR), cleanedL.unionByName(cleanedR).cache(), uidCol,
+      attrs, candidateRuleOverride, comparisonSizeLimit, maxEvals, seed, searchStrategy,
+      clusterThreshold, trueLabelCol, uDeterministicOrder)
+  }
 
-    runSearch(cleanedL, Some(cleanedR), union, uidCol, attrs,
-      () => candidateRuleOverride.getOrElse(
-        candidateRules(union, n, attrs, ruleCombinationSize, maxOrSize,
-          comparisonSizeLimit, seed)),
-      maxEvals, rnd, searchStrategy, clusterThreshold,
-      uTargetPairs = math.min(n * 4, 100000L), trueLabelCol, uDeterministicOrder,
-      nRows = n)
+  /** Every column but the uid and the label. */
+  private def attributesOf(df: DataFrame, uidCol: String, trueLabelCol: Option[String])
+      : Seq[String] =
+    df.columns.filterNot(c => c == uidCol || trueLabelCol.contains(c)).toSeq
+
+  /** One input table as the search reads it, cached: the uid (synthesized when
+    * absent, prefixed with `tag`), the `(output, input)` attributes and the label as
+    * strings, cleaned, and spread over the cluster BEFORE anything joins it — the
+    * loop's pair joins are EXPANSION joins whose parallelism is the stream side's
+    * partitioning, which for a single-file source is ONE task grinding every
+    * trial's expansion (measured 6.6 s single-task jobs inside ep1_auto_link at
+    * sf0.1). Round-robin is deterministic and the loop's aggregates are count-based,
+    * so results are partition-layout-proof; a naturally wide scan skips the shuffle.
+    */
+  private def prepare(
+      df: DataFrame,
+      uidCol: String,
+      tag: Option[String],
+      attrs: Seq[(String, String)],
+      trueLabelCol: Option[String],
+      cleaningMode: String): DataFrame = {
+    val uid = col(uidCol).cast("string")
+    val selected = Cleaning.withUniqueId(df, uidCol).select(
+      (tag.fold(uid)(t => concat(lit(t), uid)).as(uidCol) +:
+        attrs.map { case (out, in) => col(in).cast("string").as(out) }) ++
+        trueLabelCol.map(c => col(c).cast("string").as(c)).toSeq: _*)
+    graft.util.Partitioning
+      .spreadNarrowScan(Cleaning.cleanColumns(selected, attrs.map(_._1), cleaningMode))
+      .cache()
   }
 
   private val SearchStrategies = Seq("tpe", "random")
@@ -198,20 +186,20 @@ object AutoLinker {
     require(maxEvals >= 1, s"maxEvals must be at least 1, got $maxEvals")
   }
 
-  /** Y3 — candidate blocking rules from a ≤10k sample, filtered by estimated cost. */
+  /** Y3 — candidate blocking rules from a ≤10k sample, filtered by estimated cost:
+    * single-column AND terms, up to two of them OR-ed together.
+    */
   private def candidateRules(
       df: DataFrame,
       n: Long,
       attrs: Seq[String],
-      ruleCombinationSize: Int,
-      maxOrSize: Int,
       comparisonSizeLimit: Long,
       seed: Long): Seq[String] = {
     val sample =
       if (n > 10000) df.sample(withReplacement = false, 10000.0 / n, seed)
       else df
     val candidates = RuleGen
-      .generateBlockingRules(sample, ruleCombinationSize, maxOrSize, attrs, seed)
+      .generateBlockingRules(sample, n = 1, k = 2, attrs, seed)
       .cache()
     try {
       val accepted = candidates
@@ -288,9 +276,10 @@ object AutoLinker {
     (1 to nTrials).map(_ => drawTrial(rnd, attrs, ruleChoices, Seq.empty, "tpe"))
   }
 
-  /** The trial loop shared by dedupe and link mode: set up (candidate rules, the Y9
-    * adjusted base, the u pairs) → per trial draw params → train → predict → cluster
-    * → unsupervised metric (+ supervised metrics when a label is given).
+  /** The trial loop shared by dedupe and link mode: set up (row count, candidate
+    * rules, the Y9 adjusted base, the u pairs) → per trial draw params → train →
+    * predict → cluster → unsupervised metric (+ supervised metrics when a label is
+    * given). `clusterBase` holds every record (the union of both tables in link mode).
     */
   private def runSearch(
       trainDf: DataFrame,
@@ -298,36 +287,37 @@ object AutoLinker {
       clusterBase: DataFrame,
       uidCol: String,
       attrs: Seq[String],
-      ruleChoicesOf: () => Seq[String],
+      candidateRuleOverride: Option[Seq[String]],
+      comparisonSizeLimit: Long,
       maxEvals: Int,
-      rnd: Random,
+      seed: Long,
       strategy: String,
       clusterThreshold: Double,
-      uTargetPairs: Long,
       trueLabelCol: Option[String],
-      uDeterministicOrder: Boolean = false,
-      nRows: Long): Result = {
+      uDeterministicOrder: Boolean): Result = {
 
+    val nRows = clusterBase.count()
+    // λ0 = 1/N: an empty input has no prior and nothing to link
+    require(nRows > 0, "auto-link needs at least one input row")
+    val uTargetPairs = math.min(nRows * 4, 100000L)
+    val rnd = new Random(seed)
     var best: Option[(Trial, DataFrame, DataFrame)] = None
     val past = scala.collection.mutable.ArrayBuffer[Trial]()
     val tracker = new graft.util.CheckpointTracker(trainDf.sparkSession)
     try {
     // The three setup stages read only the counted, cached input and not each
-    // other, so they overlap on driver threads (each is a few small jobs; run one
-    // after another they left cores idle). The u-estimation pair table is
-    // spec-independent — built AND MATERIALIZED once for the whole search (sample +
-    // rank + index + offset-join): the second rotate checkpoints the joined pair
-    // rows themselves (freeing the intermediate indexed table), so each trial's u
-    // counts come from ~uTargetPairs checkpointed rows instead of re-running the
-    // offset joins.
-    val (ruleChoices, adjustedBase, uPairs) = onDriverThreads(Seq[() => Any](
-      ruleChoicesOf,
-      () => EntropyMetrics.maxDistinct(clusterBase, attrs).toInt,
-      () => tracker.rotate(Estimation.uSamplePairs(
-        Estimation.uSourceTable(trainDf, linkRight), uidCol, attrs, uTargetPairs,
-        hashShuffle = !uDeterministicOrder, seed = 42L, tracker)))) match {
-      case Seq(rules: Seq[String] @unchecked, base: Int, pairs: DataFrame @unchecked) =>
-        (rules, base, pairs)
+    // other, so they overlap on driver threads (one after another they left cores
+    // idle). The u pair table is spec-independent: built and checkpointed once for
+    // the whole search, so each trial's u counts read ~uTargetPairs checkpointed rows
+    // instead of re-running the sample/rank/offset joins.
+    val (ruleChoices, adjustedBase, uPairs) = onDriverThreads(3) { implicit ec =>
+      val rules = Future(candidateRuleOverride.getOrElse(
+        candidateRules(clusterBase, nRows, attrs, comparisonSizeLimit, seed)))
+      val base = Future(EntropyMetrics.maxDistinct(clusterBase, attrs).toInt)
+      val pairs = Future(tracker.rotate(Estimation.uSamplePairs(
+        PairGenerator.recordPool(trainDf, linkRight), uidCol, attrs, uTargetPairs,
+        hashShuffle = !uDeterministicOrder, seed = 42L, tracker)))
+      (await(rules), await(base), await(pairs))
     }
 
     // one full trial: train → predict → cluster → metrics. Pure function of its
@@ -339,14 +329,8 @@ object AutoLinker {
       val model = Estimation.train(trainDf, uidCol, specs, Seq(rule), trainingRules,
         uTargetPairs = uTargetPairs, linkRight = linkRight, uPairs = Some(uPairs),
         nRows = Some(nRows))
-      val predictions = linkRight match {
-        case Some(right) => FellegiSunter.predictLink(trainDf, right, uidCol, model)
-        case None => FellegiSunter.predict(trainDf, uidCol, model)
-      }
-      val edges = predictions
-        .filter(col("match_probability") >= clusterThreshold)
-        .select(col("uid_l").as("src"), col("uid_r").as("dst"))
-      val clusters = ConnectedComponents.assignClusters(clusterBase, uidCol, edges)
+      val predictions = FellegiSunter.predict(trainDf, uidCol, model, right = linkRight)
+      val clusters = clusterAt(clusterBase, uidCol, predictions, clusterThreshold)
       val metric = EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase)
       val supervised = trueLabelCol.map { label =>
         val labelDf = clusterBase.select(col(uidCol), col(label))
@@ -363,19 +347,18 @@ object AutoLinker {
       past += trial
     }
 
-    // Warmup trials (the first ≤3) draw UNIFORMLY — drawParams ignores `past`
-    // while past.size < warmup — so their draws can be taken upfront (consuming
-    // the seeded RNG in exactly the sequential order; trial execution consumes no
-    // RNG) and the trials themselves OVERLAPPED on driver threads (guide §2.6:
-    // a composed trial is dozens of small jobs with straggler tails, and the
-    // scheduler back-fills idle cores with the sibling trial's tasks). Each
-    // trial's values are deterministic and `record` folds in draw order, so the
+    // Warmup trials (the first ≤3) draw UNIFORMLY — drawParams ignores `past` while
+    // past.size < warmup — so their draws are taken upfront, consuming the seeded RNG
+    // in the sequential order, and the trials overlap on driver threads: a trial is
+    // dozens of small jobs with straggler tails, and the scheduler back-fills idle
+    // cores with the sibling trial's tasks. `record` folds in draw order, so the
     // result is bit-identical to the sequential loop.
     val nWarm = math.min(maxEvals, 3)
     val warmDraws =
       (1 to nWarm).map(_ => drawTrial(rnd, attrs, ruleChoices, Seq.empty, strategy))
-    onDriverThreads(warmDraws.map { case (s, r, t) => () => runTrial(s, r, t) })
-      .foreach { case (t, c, p) => record(t, c, p) }
+    onDriverThreads(nWarm) { implicit ec =>
+      warmDraws.map { case (s, r, t) => Future(runTrial(s, r, t)) }.map(await)
+    }.foreach { case (t, c, p) => record(t, c, p) }
     // post-warmup trials draw from `past` — inherently sequential
     ((nWarm + 1) to maxEvals).foreach { _ =>
       val (specs, rule, trainingRules) =
@@ -389,18 +372,19 @@ object AutoLinker {
     Result(b, clusters, predictions, past.toSeq)
   }
 
-  /** Runs each thunk on its own driver thread (one thunk runs inline) and returns
-    * the results in input order; a failure is rethrown, the first in input order.
+  /** Runs `body` with `threads` driver threads to start its futures on; one thread
+    * runs them inline on the caller's. Await futures in input order so a failure
+    * rethrows the first in input order.
     */
-  private def onDriverThreads[A](thunks: Seq[() => A]): Seq[A] =
-    if (thunks.size <= 1) thunks.map(_())
+  private def onDriverThreads[A](threads: Int)(body: ExecutionContext => A): A =
+    if (threads <= 1) body(ExecutionContext.parasitic)
     else {
-      val pool = Executors.newFixedThreadPool(thunks.size)
-      try {
-        val ec = ExecutionContext.fromExecutor(pool)
-        thunks.map(t => Future(t())(ec)).map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
+      val pool = Executors.newFixedThreadPool(threads)
+      try body(ExecutionContext.fromExecutor(pool))
+      finally pool.shutdown()
     }
+
+  private def await[A](f: Future[A]): A = Await.result(f, Duration.Inf)
 
   /** First row of a 1-row metric frame as name → double (longs widened). */
   private def rowToMap(df: DataFrame): Map[String, Double] = {

@@ -1,6 +1,6 @@
 package graft.blocking
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** J1 — candidate-pair generation from blocking rules (reference semantics: Splink 3.9.4
@@ -8,110 +8,91 @@ import org.apache.spark.sql.functions._
   *
   * For each OR branch (an AND of column equalities) we run one equi-join; branches are
   * unioned and deduped on the pair key. SQL `=` semantics mean null block keys never
-  * match. Dedupe mode self-joins with `uid_l < uid_r` so mirror pairs collapse.
+  * match. Dedupe mode (no right table) self-joins with `uid_l < uid_r` so mirror pairs
+  * collapse; link mode pairs across the two tables only. This object is the one place
+  * that tells the two modes apart — every other linkage layer passes `right` along.
   *
   * Scale design: each branch is a shuffled equi-join on its block key (sort-merge or,
-  * with AQE, shuffled-hash; a small link-side is broadcast by Catalyst automatically);
+  * with AQE, shuffled-hash; a small side is broadcast by Catalyst automatically);
   * the final `dropDuplicates` is one more hash shuffle on the pair key. Attribute
   * columns are carried through the join (suffixed `_l`/`_r`) so downstream gamma
   * computation needs no extra join back to the inputs.
   */
 object PairGenerator {
 
-  /** Dedupe mode: candidate pairs within one table. Output columns: `uid_l`, `uid_r`,
-    * and `<attr>_l` / `<attr>_r` for every attribute column.
+  /** Candidate pairs: within `left` when `right` is `None` (`uid_l < uid_r`), else
+    * across the two (schema-aligned, Y10) tables only. Output columns: `uid_l`,
+    * `uid_r`, and `<attr>_l` / `<attr>_r` for every attribute column, followed by
+    * the blocked-on columns not among them.
+    *
+    * @param saltFactor > 1 salts each block key `saltFactor` ways — the left side gets
+    *        `salt = hash(uid) % s`, the right side is replicated across all salts — so
+    *        one giant block spreads over `s` tasks instead of pinning a single reducer.
+    *        Same pair set (salting balances the quadratic block work, it cannot reduce
+    *        it); AQE's skew-join handles moderate skew automatically, this is the
+    *        explicit control for low-cardinality keys.
     */
-  def dedupePairs(
-      df: DataFrame,
-      uid: String,
-      attributes: Seq[String],
-      rules: Seq[BlockingRule]): DataFrame = {
-    val l = sideProjection(df, uid, attributes, "_l").alias("l")
-    val r = sideProjection(df, uid, attributes, "_r").alias("r")
-    val branches = rules.flatMap(_.branches).distinct
-    val joined = branches.map { branch =>
-      val cond = branch
-        .map(c => col(s"l.${c}_l") === col(s"r.${c}_r"))
-        .reduce(_ && _) && col(s"l.uid_l") < col(s"r.uid_r")
-      l.join(r, cond, "inner")
-    }
-    // a single equi-join branch cannot emit duplicate pairs — skip the dedup shuffle
-    if (joined.size == 1) joined.head
-    else joined.reduce(_ unionByName _).dropDuplicates("uid_l", "uid_r")
-  }
-
-  /** Link mode: candidate pairs across two tables (same schema after Y10 matching). */
-  def linkPairs(
+  def pairs(
       left: DataFrame,
-      right: DataFrame,
-      uid: String,
-      attributes: Seq[String],
-      rules: Seq[BlockingRule]): DataFrame = {
-    val l = sideProjection(left, uid, attributes, "_l").alias("l")
-    val r = sideProjection(right, uid, attributes, "_r").alias("r")
-    val branches = rules.flatMap(_.branches).distinct
-    val joined = branches.map { branch =>
-      val cond = branch
-        .map(c => col(s"l.${c}_l") === col(s"r.${c}_r"))
-        .reduce(_ && _)
-      l.join(r, cond, "inner")
-    }
-    if (joined.size == 1) joined.head
-    else joined.reduce(_ unionByName _).dropDuplicates("uid_l", "uid_r")
-  }
-
-  /** Skew-balanced dedupe pairs: same output as [[dedupePairs]], but each block key is
-    * salted `saltFactor` ways — the left side gets `salt = hash(uid) % s`, the right
-    * side is replicated across all salts — so one giant block spreads over `s` tasks
-    * instead of pinning a single reducer. Output cardinality is unchanged (salting
-    * balances the quadratic block work, it cannot reduce it); AQE's skew-join handles
-    * moderate skew automatically, this is the explicit control for pathological keys.
-    */
-  def dedupePairsSalted(
-      df: DataFrame,
+      right: Option[DataFrame],
       uid: String,
       attributes: Seq[String],
       rules: Seq[BlockingRule],
-      saltFactor: Int): DataFrame = {
-    require(saltFactor >= 1)
-    // pair joins are EXPANSION joins: tiny inputs, huge output, and the gamma
-    // ladder pipelines into the join stage — so join parallelism IS scoring
-    // parallelism. Left to itself the planner broadcasts one tiny side and
-    // streams the other at its scan partitioning (often 1 file = 1 task), and
-    // AQE's size-based coalescing makes it worse (input bytes are tiny; output
-    // work is not). Pin the shape instead: both sides explicitly hash-
-    // repartitioned on (block key, salt) to defaultParallelism — a numbered
-    // user repartition AQE never coalesces — and a merge-join hint so the join
-    // reuses exactly those exchanges.
-    val parallelism = df.sparkSession.sparkContext.defaultParallelism
-    val l0 = sideProjection(df, uid, attributes, "_l")
-      .withColumn("_salt", pmod(xxhash64(col("uid_l")), lit(saltFactor)))
-    val r0 = sideProjection(df, uid, attributes, "_r")
-      .withColumn("_salt", explode(array((0 until saltFactor).map(lit): _*)))
-    val branches = rules.flatMap(_.branches).distinct
-    val joined = branches.map { branch =>
-      val l = l0.repartition(parallelism,
-        (branch.map(c => col(s"${c}_l")) :+ col("_salt")): _*).alias("l")
-      val r = r0.repartition(parallelism,
-        (branch.map(c => col(s"${c}_r")) :+ col("_salt")): _*).alias("r")
-      val cond = (branch.map(c => col(s"l.${c}_l") === col(s"r.${c}_r")) :+
-        (col("l._salt") === col("r._salt"))).reduce(_ && _) &&
-        col(s"l.uid_l") < col(s"r.uid_r")
-      l.hint("merge").join(r, cond, "inner").drop("_salt")
+      saltFactor: Int = 1): DataFrame = {
+    require(saltFactor >= 1, s"saltFactor must be at least 1, got $saltFactor")
+    val salted = saltFactor > 1
+    val carried = (attributes ++ rules.flatMap(_.columns)).distinct
+    def side(df: DataFrame, suffix: String, salt: Column) = {
+      val projected = df.select((col(uid).cast("string").as(s"uid$suffix") +:
+        carried.map(a => col(a).cast("string").as(s"$a$suffix"))): _*)
+      if (salted) projected.withColumn("_salt", salt) else projected
     }
-    // the l-side salt is a FUNCTION of uid_l, so within one branch every pair
-    // lands in exactly one salt bucket — a single branch needs no dedup shuffle
-    // (same reasoning as the unsalted path above)
+    val lSide = side(left, "_l", pmod(xxhash64(col("uid_l")), lit(saltFactor)))
+    val rSide = side(right.getOrElse(left), "_r",
+      explode(array((0 until saltFactor).map(lit): _*)))
+    // salted pair joins are EXPANSION joins (tiny inputs, huge output, the gamma
+    // ladder pipelined into the join stage), so join parallelism IS scoring
+    // parallelism. Left alone the planner broadcasts one tiny side and streams the
+    // other at its scan partitioning (often 1 file = 1 task). Pin the shape: both
+    // sides hash-repartitioned on (block key, salt) to defaultParallelism — a
+    // numbered repartition AQE never coalesces — and a merge-join hint so the join
+    // reuses exactly those exchanges.
+    def spread(df: DataFrame, branch: Seq[String], suffix: String) =
+      if (!salted) df
+      else df.repartition(left.sparkSession.sparkContext.defaultParallelism,
+        (branch.map(c => col(s"$c$suffix")) :+ col("_salt")): _*)
+    val joined = rules.flatMap(_.branches).distinct.map { branch =>
+      val l = spread(lSide, branch, "_l").alias("l")
+      val r = spread(rSide, branch, "_r").alias("r")
+      val keys = branch.map(c => col(s"l.${c}_l") === col(s"r.${c}_r")) ++
+        (if (salted) Seq(col("l._salt") === col("r._salt")) else Nil)
+      val cond =
+        if (right.isEmpty) keys.reduce(_ && _) && col("l.uid_l") < col("r.uid_r")
+        else keys.reduce(_ && _)
+      if (salted) l.hint("merge").join(r, cond, "inner").drop("_salt")
+      else l.join(r, cond, "inner")
+    }
+    // one equi-join branch cannot emit duplicate pairs, salted or not (the l-side
+    // salt is a function of uid_l) — skip the dedup shuffle
     if (joined.size == 1) joined.head
     else joined.reduce(_ unionByName _).dropDuplicates("uid_l", "uid_r")
   }
 
-  private def sideProjection(
-      df: DataFrame,
-      uid: String,
-      attributes: Seq[String],
-      suffix: String): DataFrame =
-    df.select(
-      (col(uid).cast("string").as(s"uid$suffix") +:
-        attributes.map(a => col(a).cast("string").as(s"$a$suffix"))): _*)
+  /** Dedupe-mode [[pairs]]. */
+  def dedupePairs(df: DataFrame, uid: String, attributes: Seq[String],
+      rules: Seq[BlockingRule]): DataFrame = pairs(df, None, uid, attributes, rules)
+
+  /** Link-mode [[pairs]]. */
+  def linkPairs(left: DataFrame, right: DataFrame, uid: String, attributes: Seq[String],
+      rules: Seq[BlockingRule]): DataFrame = pairs(left, Some(right), uid, attributes, rules)
+
+  /** The records random (u-estimation) pairs are drawn from: `left`, or in link mode
+    * the union of both tables' shared columns (random pairs are overwhelmingly
+    * non-matches either way).
+    */
+  private[graft] def recordPool(left: DataFrame, right: Option[DataFrame]): DataFrame =
+    right.fold(left) { r =>
+      val shared = (left.columns.toSet intersect r.columns.toSet).toSeq.sorted
+      left.select(shared.map(col): _*).unionByName(r.select(shared.map(col): _*))
+    }
 }

@@ -10,6 +10,9 @@ object Cleaning {
 
   val NullSentinel = "null_"
 
+  /** Y1's strip rule: runs of characters outside `[A-Za-z0-9 ]`. */
+  val NonAlphanumeric = "[^A-Za-z0-9 ]+"
+
   /** Y1 — lowercase + strip everything but `[A-Za-z0-9 ]` on the given string columns.
     * `mode`: "all" cleans every listed column, "none" is identity; per-column overrides
     * via `perColumn` ("lower_only" keeps punctuation).
@@ -25,7 +28,7 @@ object Cleaning {
         case "none" => acc
         case "lower_only" => acc.withColumn(c, lower(col(c)))
         case _ =>
-          acc.withColumn(c, lower(regexp_replace(col(c), "[^A-Za-z0-9 ]+", "")))
+          acc.withColumn(c, lower(regexp_replace(col(c), NonAlphanumeric, "")))
       }
     }
   }

@@ -20,6 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
+  /** Cap on the distributed loop's large-star/small-star rounds. */
+  private val MaxIter = 30
+
   /** @param edges two string columns `src`, `dst` (one row per predicted matching pair)
     * @param localThreshold deduped edge sets at or below this size short-circuit to a
     *        driver union-find (the count is already paid by the first checkpoint; the
@@ -30,7 +33,7 @@ object ConnectedComponents {
     * @return mapping `node` → `cluster_id` covering every node present in `edges`
     *         (callers left-join records and default missing nodes to their own id)
     */
-  def run(edges: DataFrame, maxIter: Int = 30, localThreshold: Long = 500000L): DataFrame = {
+  def run(edges: DataFrame, localThreshold: Long = 500000L): DataFrame = {
     val dedup = edges
       .select(col("src").cast("string"), col("dst").cast("string"))
       .filter(col("src") =!= col("dst"))
@@ -57,7 +60,7 @@ object ConnectedComponents {
     var converged = false
     var iter = 0
     var prevSig = signature(e)
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       // rotate frees the previous round's blocks once this round is materialized;
       // the FINAL checkpoint stays alive for the caller (freed by harness cleanup)
       val next = tracker.rotate(smallStar(largeStar(e)))
@@ -152,8 +155,7 @@ object ConnectedComponents {
     *        treated as fresh singleton nodes
     * @return updated `node → cluster_id` covering base nodes ∪ new-edge endpoints
     */
-  def incremental(base: DataFrame, newEdges: DataFrame, maxIter: Int = 30,
-      localThreshold: Long = 500000L): DataFrame = {
+  def incremental(base: DataFrame, newEdges: DataFrame): DataFrame = {
     val b = base.select(col("node").cast("string").as("node"),
       col("cluster_id").cast("string").as("cluster_id"))
     val e = newEdges.select(col("src").cast("string").as("src"),
@@ -169,7 +171,7 @@ object ConnectedComponents {
         coalesce(col("c_dst"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
     // CC over the contracted graph: work ∝ batch size, never corpus size
-    val remap = run(contracted, maxIter, localThreshold)
+    val remap = run(contracted)
     // remap is bounded by the batch's endpoints — broadcast it so the corpus-size
     // base is never shuffled (at extreme batch sizes AQE would fall back to a
     // shuffled hash join on the same plan shape)

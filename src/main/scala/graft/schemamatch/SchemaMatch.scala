@@ -3,6 +3,8 @@ package graft.schemamatch
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.clean.Cleaning
+
 /** Y10 — column matching for linking tables with different schemas
   * (reference: autolinker.py:961-1020).
   *
@@ -25,7 +27,7 @@ object SchemaMatch {
       val stacked = df.select(expr(
         s"stack(${cols.length}, " +
           cols.map(c =>
-            s"'$c', lower(regexp_replace(cast($c as string), '[^A-Za-z0-9 ]+', ''))")
+            s"'$c', lower(regexp_replace(cast($c as string), '${Cleaning.NonAlphanumeric}', ''))")
             .mkString(", ") +
           s") as ($colName, value)"))
       stacked.filter(col("value").isNotNull)

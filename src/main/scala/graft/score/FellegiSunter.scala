@@ -3,6 +3,8 @@ package graft.score
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.blocking.{BlockingRule, PairGenerator}
+import graft.compare.Comparisons
 import graft.model.{ColumnParams, ComparisonSpec, TrainedModel}
 
 /** J6 — Fellegi-Sunter match weight / probability as pure column arithmetic over the
@@ -154,41 +156,25 @@ object FellegiSunter {
         col("a.mw").as("match_weight"))
   }
 
-  /** Blocking → gammas → score in one shot.
+  /** Blocking → gammas → score in one shot, in dedupe or (with `right`) link mode.
     *
-    * @param saltFactor > 1 routes pair generation through the salted skew variant
-    *        ([[graft.blocking.PairGenerator.dedupePairsSalted]]): identical pair
-    *        set, but each block spreads over `saltFactor` tasks. Use when the
-    *        blocking keys have LOW CARDINALITY relative to the cluster (e.g. 25
-    *        nation blocks on 32 cores leave the gamma ladder wall-bound by the
-    *        biggest block on one thread) — the scoring projection is pipelined
-    *        into the pair join, so join parallelism IS scoring parallelism.
+    * @param saltFactor > 1 salts pair generation ([[PairGenerator.pairs]]). Use when the
+    *        blocking keys have LOW CARDINALITY relative to the cluster (e.g. 25 nation
+    *        blocks on 32 cores leave the gamma ladder, pipelined into the pair join,
+    *        wall-bound by the biggest block on one thread).
     */
   def predict(
       df: DataFrame,
       uid: String,
       model: TrainedModel,
-      saltFactor: Int = 1): DataFrame = {
-    val rules = model.blockingRules.map(graft.blocking.BlockingRule.parse)
-    // carry both compared and blocked-on columns through the pair join
-    val attrs = (model.comparisons.map(_.column) ++ rules.flatMap(_.columns)).distinct
-    val pairs =
-      if (saltFactor <= 1) graft.blocking.PairGenerator.dedupePairs(df, uid, attrs, rules)
-      else graft.blocking.PairGenerator.dedupePairsSalted(df, uid, attrs, rules, saltFactor)
-    val gammas = graft.compare.Comparisons.withGammas(pairs, model.comparisons)
-    score(gammas, model)
+      saltFactor: Int = 1,
+      right: Option[DataFrame] = None): DataFrame = {
+    val pairs = PairGenerator.pairs(df, right, uid, model.comparisons.map(_.column),
+      model.blockingRules.map(BlockingRule.parse), saltFactor)
+    score(Comparisons.withGammas(pairs, model.comparisons), model)
   }
 
-  /** Link-mode predict: candidate pairs cross the two (schema-aligned) tables only. */
-  def predictLink(
-      left: DataFrame,
-      right: DataFrame,
-      uid: String,
-      model: TrainedModel): DataFrame = {
-    val rules = model.blockingRules.map(graft.blocking.BlockingRule.parse)
-    val attrs = (model.comparisons.map(_.column) ++ rules.flatMap(_.columns)).distinct
-    val pairs = graft.blocking.PairGenerator.linkPairs(left, right, uid, attrs, rules)
-    val gammas = graft.compare.Comparisons.withGammas(pairs, model.comparisons)
-    score(gammas, model)
-  }
+  /** Link-mode [[predict]]. */
+  def predictLink(left: DataFrame, right: DataFrame, uid: String, model: TrainedModel)
+      : DataFrame = predict(left, uid, model, right = Some(right))
 }

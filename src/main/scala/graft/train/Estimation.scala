@@ -22,6 +22,8 @@ object Estimation {
   val DefaultM: Array[Double] = Array(0.1, 0.3, 0.6)   // gamma 0, 1, 2
   val DefaultU: Array[Double] = Array(0.8, 0.15, 0.05)
   private val Floor = 1e-9
+  /** EM convergence: the parameter change that ends a session (autolinker.py:544). */
+  private val Tol = 0.01
 
   /** J4 — u[col][gamma] from deterministically sampled record pairs.
     *
@@ -150,7 +152,7 @@ object Estimation {
       trainingRule: BlockingRule,
       u: Map[String, Array[Double]],
       initialLambda: Double,
-      tol: Double = 0.01,
+      tol: Double = Tol,
       maxIter: Int = 25,
       linkRight: Option[DataFrame] = None)
       : (Double, Map[String, Array[Double]], Map[String, Array[Double]]) =
@@ -270,8 +272,7 @@ object Estimation {
   /** The tagged agreement-pattern table of the `active` rules in one Spark pass:
     * each rule's pairs carry its index as `_rule_idx` through a single unioned gamma
     * aggregation over ALL spec columns; the u pairs, when given, ride along tagged
-    * `_rule_idx = -1`. Link mode (`linkRight`) pairs cross the two tables only
-    * (Splink link_only semantics).
+    * `_rule_idx = -1`.
     */
   private def patternTable(
       df: DataFrame,
@@ -281,17 +282,11 @@ object Estimation {
       active: Seq[Int],
       uPairs: Option[DataFrame],
       linkRight: Option[DataFrame]): DataFrame = {
-    // carry both compared and blocked-on columns through the pair joins
-    val attrs = (specs.map(_.column) ++ rules.flatMap(_.columns)).distinct
     // the gamma ladders read only the compared columns' two sides
     val sides = specs.flatMap(s => Seq(col(s"${s.column}_l"), col(s"${s.column}_r")))
     def tag(pairs: DataFrame, i: Int) = pairs.select((lit(i).as("_rule_idx") +: sides): _*)
     val tagged = active.map { i =>
-      val pairs = linkRight match {
-        case Some(right) => PairGenerator.linkPairs(df, right, uid, attrs, Seq(rules(i)))
-        case None => PairGenerator.dedupePairs(df, uid, attrs, Seq(rules(i)))
-      }
-      tag(pairs, i)
+      tag(PairGenerator.pairs(df, linkRight, uid, specs.map(_.column), Seq(rules(i))), i)
     } ++ uPairs.map(tag(_, URows))
     val gammaCols = specs.map(s => col(s"gamma_${s.column}"))
     Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
@@ -440,9 +435,8 @@ object Estimation {
     * J4's gamma counts over the sampled u pairs come from the EM pattern pass
     * ([[emSessions]]), so u costs no Spark pass of its own.
     *
-    * `linkRight` switches to link mode (Splink link_only): u is estimated over the
-    * union of both tables (random pairs are overwhelmingly non-matches either way) and
-    * EM pairs cross the two tables only.
+    * `linkRight` switches to link mode (Splink link_only): u pairs come from
+    * [[PairGenerator.recordPool]], EM pairs from [[PairGenerator.pairs]].
     */
   def train(
       df: DataFrame,
@@ -451,12 +445,11 @@ object Estimation {
       blockingRules: Seq[String],
       trainingRules: Seq[String],
       uTargetPairs: Long = 100000L,
-      tol: Double = 0.01,
       linkRight: Option[DataFrame] = None,
       uPairs: Option[DataFrame] = None,
       uHashShuffle: Boolean = true,
       nRows: Option[Long] = None): TrainedModel = {
-    val uSource = uSourceTable(df, linkRight)
+    val uSource = PairGenerator.recordPool(df, linkRight)
     // a search loop calling train per trial passes the loop-invariant row count
     // (nRows) — the prior λ0 = 1/N needs N once, not one count job per trial
     val n = nRows.getOrElse(uSource.count())
@@ -471,7 +464,7 @@ object Estimation {
         val pairs = uPairs.getOrElse(uSamplePairs(uSource, uid, specs.map(_.column),
           uTargetPairs, uHashShuffle, seed = 42L, tracker))
         emSessions(df, uid, specs, trainingRules.map(BlockingRule.parse), Right(pairs),
-          lambda0, tol, 25, linkRight)
+          lambda0, Tol, 25, linkRight)
       } finally tracker.close()
     }
 
@@ -496,17 +489,6 @@ object Estimation {
     }.toMap
     TrainedModel(sessions.lastOption.fold(lambda0)(_._1), specs, params, blockingRules)
   }
-
-  /** The table u is estimated over: `df`, or in link mode the union of both tables'
-    * shared columns (random pairs are overwhelmingly non-matches either way).
-    */
-  private[graft] def uSourceTable(df: DataFrame, linkRight: Option[DataFrame]): DataFrame =
-    linkRight match {
-      case Some(right) =>
-        val shared = (df.columns.toSet intersect right.columns.toSet).toSeq.sorted
-        df.select(shared.map(col): _*).unionByName(right.select(shared.map(col): _*))
-      case None => df
-    }
 
   /** Per-column gamma counts over `gammas` rows, each row counted `weight` times. */
   private def gammaCounts(

@@ -35,13 +35,32 @@ class LinkageSpec extends SparkSpec {
     val df = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
       .select(col("c_custkey").cast("string").as("id"),
         col("c_mktsegment").as("seg"), col("c_nationkey").cast("string").as("nat"))
-    val rule = BlockingRule.parse("l.seg = r.seg")
-    val plain = PairGenerator.dedupePairs(df, "id", Seq("seg", "nat"), Seq(rule))
-      .select("uid_l", "uid_r").as[(String, String)].collect().toSet
-    val salted = PairGenerator.dedupePairsSalted(df, "id", Seq("seg", "nat"), Seq(rule), 8)
-      .select("uid_l", "uid_r").as[(String, String)].collect().toSet
-    assert(salted === plain)
-    assert(plain.nonEmpty)
+    // one branch, and two OR branches (the salted union + dedup leg)
+    Seq("l.seg = r.seg", "(l.seg = r.seg) OR (l.nat = r.nat)").foreach { text =>
+      val rule = BlockingRule.parse(text)
+      val plain = PairGenerator.dedupePairs(df, "id", Seq("seg", "nat"), Seq(rule))
+        .select("uid_l", "uid_r").as[(String, String)].collect().toSet
+      val salted = PairGenerator.pairs(df, None, "id", Seq("seg", "nat"), Seq(rule),
+          saltFactor = 8)
+        .select("uid_l", "uid_r").as[(String, String)].collect().toSet
+      assert(salted === plain, text)
+      assert(plain.nonEmpty, text)
+    }
+  }
+
+  test("link pairs: cross the tables only, keep uid_l > uid_r, dedup across OR branches") {
+    val left = Seq(("1", "x", "p"), ("5", "y", "q"), ("7", null, null), ("8", "x", "r"))
+      .toDF("id", "k1", "k2")
+    val right = Seq(("2", "x", "p"), ("3", "y", "p"), ("4", "z", "q"), ("6", null, null))
+      .toDF("id", "k1", "k2")
+    val rule = BlockingRule.parse("(l.k1 = r.k1) OR (l.k2 = r.k2)")
+    val pairs = PairGenerator.linkPairs(left, right, "id", Seq("k1", "k2"), Seq(rule))
+      .select("uid_l", "uid_r").as[(String, String)].collect().toSeq
+    // k1: (1,2), (8,2), (5,3); k2: (1,2) again, (1,3), (5,4). Same-table rows that
+    // share a key — left (1,8), right (2,3) — never pair, and the null-keyed left 7
+    // and right 6 match nothing.
+    assert(pairs.sorted ===
+      Seq(("1", "2"), ("1", "3"), ("5", "3"), ("5", "4"), ("8", "2")))
   }
 
   test("null block keys never match") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.auto.AutoLinker
 import graft.clean.Cleaning
 import graft.metrics.{ClusteringMetrics, EntropyMetrics, PairwiseMetrics, Profile}
+import graft.model.TrainedModel
 import graft.schemamatch.SchemaMatch
 
 class MetricsSpec extends SparkSpec {
@@ -387,6 +388,56 @@ class MetricsSpec extends SparkSpec {
           named.foreach(w => assert(err.getMessage.contains(w), s"$name: ${err.getMessage}"))
           assert(tracker.getJobIdsForGroup(group).isEmpty, s"$name ran a Spark job first")
         }
+    }
+  }
+
+  test("auto-link degenerate inputs: a defined result or a clear error, in both modes") {
+    val rnd = new scala.util.Random(23)
+    val names = (0 until 25).map(_ => (1 to 8).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
+    // 25 entities, each once per table (half the right names exact copies, so the
+    // link-mode schema match finds value overlap); `country` holds one value, `note` none
+    def table(prefix: String, fuzz: Int => String) = names.zipWithIndex.map { case (n, i) =>
+      (s"$prefix$i", n + fuzz(i), s"city${i % 5}", "uk", Option.empty[String])
+    }.toDF("unique_id", "name", "city", "country", "note")
+    val left = table("a", _ => "")
+    val right = table("b", i => if (i % 2 == 0) "" else "x")
+    val both = left.unionByName(right)
+    def one(df: DataFrame, id: String) = df.filter(col("unique_id") === id)
+    // (case, dedupe input, link inputs, attribute columns, candidate-rule override)
+    val cases = Seq(
+      ("empty table", both.limit(0), (left, right.limit(0)), None, None),
+      ("single row", one(both, "a0"), (one(left, "a0"), one(right, "b0")), None, None),
+      ("all-null column", both, (left, right), Some(Seq("name", "note")), None),
+      ("single-distinct column", both, (left, right), Some(Seq("name", "country")), None),
+      ("one block holding every row", both, (left, right), None,
+        Some(Seq("l.country = r.country"))))
+    cases.foreach { case (name, data, (l, r), attrs, rules) =>
+      val calls = Seq(
+        "autoLink" -> (() => AutoLinker.autoLink(data, attributeColumns = attrs,
+          maxEvals = 1, seed = 1L, candidateRuleOverride = rules)),
+        "autoLinkTables" -> (() => AutoLinker.autoLinkTables(l, r, leftAttributes = attrs,
+          rightAttributes = attrs, maxEvals = 1, seed = 1L, candidateRuleOverride = rules)))
+      calls.foreach { case (mode, call) =>
+        val what = s"$name, $mode"
+        if (name == "empty table") {
+          // dedupe stops at the row count (λ0 = 1/N is undefined for N = 0); link
+          // mode earlier, at the schema match, which finds no shared value
+          val err = intercept[IllegalArgumentException](call())
+          assert(err.getMessage.contains(
+            if (mode == "autoLink") "at least one input row" else "no column correspondence"),
+            s"$what: ${err.getMessage}")
+        } else {
+          val res = call()
+          val rows = if (mode == "autoLink") data.count() else l.count() + r.count()
+          assert(res.trials.size === 1, what)
+          assert(!res.best.metric.isNaN && !res.best.metric.isInfinite, what)
+          assert(res.clusters.count() === rows, what)
+          // the model serializes to JSON that reads back (no NaN / Infinity)
+          val model = res.best.model
+          assert(model.lambda > 0 && model.lambda <= 1, s"$what: λ = ${model.lambda}")
+          assert(TrainedModel.fromJson(model.toJson).toJson === model.toJson, what)
+        }
+      }
     }
   }
 
