@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.blocking.{PairGenerator, RuleGen}
+import graft.blocking.{BlockingRule, PairGenerator, RuleGen}
 import graft.clean.Cleaning
 import graft.cluster.ConnectedComponents
 import graft.metrics.{ClusteringMetrics, EntropyMetrics, PairwiseMetrics}
@@ -71,10 +71,57 @@ object AutoLinker {
     * whatever the caller's uid name.
     */
   private def clusterAt(records: DataFrame, uidCol: String, predictions: DataFrame,
-      threshold: Double): DataFrame =
-    ConnectedComponents.assignClusters(records, uidCol, predictions
+      threshold: Double, localCap: Int = ConnectedComponents.LocalCap): DataFrame =
+    ConnectedComponents.attach(records, uidCol, ConnectedComponents.run(predictions
       .filter(col("match_probability") >= threshold)
-      .select(col("uid_l").as("src"), col("uid_r").as("dst")))
+      .select(col("uid_l").as("src"), col("uid_r").as("dst")), localCap))
+
+  /** A trial's cluster-and-score step: [[clusterAt]] and the Y8 information-gain power
+    * ratio of that clustering. One bounded probe collects the matched pairs with both
+    * sides' attribute values; when it holds at most `localCap` rows, connected
+    * components ([[ConnectedComponents.components]]) and the metric
+    * ([[EntropyMetrics.powerRatio]]) run on the driver from those rows, so a trial's
+    * Spark work after training is this one collect. The matched pairs need no dedup
+    * ([[PairGenerator.pairs]] emits each pair once), and every node of a matched pair
+    * is a matched row whose values the pair carries (`uidCol` identifies a record).
+    * Above the cap the distributed connected components and the GROUPING SETS metric
+    * run. Either way `clusters` is `records` left-joined to the node → cluster id
+    * mapping, and the metric equals [[EntropyMetrics.informationGainPowerRatio]] of it.
+    *
+    * @param localCap tests pass 0 to force the distributed path
+    */
+  private[graft] def clusterAndScore(
+      records: DataFrame,
+      uidCol: String,
+      predictions: DataFrame,
+      threshold: Double,
+      attrs: Seq[String],
+      adjustedBase: Int,
+      localCap: Int = ConnectedComponents.LocalCap): (DataFrame, Double) = {
+    val sides = Seq("_l", "_r")
+    val probe = predictions
+      .filter(col("match_probability") >= threshold)
+      .select(sides.map(s => col(s"uid$s")) ++ sides.flatMap(s => attrs.map(a => col(s"$a$s"))): _*)
+      .limit(localCap + 1).collect()
+    if (probe.length > localCap) {
+      val clusters = clusterAt(records, uidCol, predictions, threshold, localCap)
+      return (clusters,
+        EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase, localCap))
+    }
+    val n = attrs.size
+    val values = scala.collection.mutable.HashMap.empty[String, IndexedSeq[String]]
+    probe.foreach { r =>
+      values(r.getString(0)) = (0 until n).map(i => r.getString(2 + i))
+      values(r.getString(1)) = (0 until n).map(i => r.getString(2 + n + i))
+    }
+    val mapping =
+      ConnectedComponents.components(probe.map(r => (r.getString(0), r.getString(1))))
+    val spark = records.sparkSession
+    import spark.implicits._
+    (ConnectedComponents.attach(records, uidCol, mapping.toDF("node", "cluster_id")),
+      EntropyMetrics.powerRatio(mapping.map { case (node, c) => (c, values(node)) },
+        adjustedBase))
+  }
 
   def autoLink(
       data: DataFrame,
@@ -187,7 +234,7 @@ object AutoLinker {
   }
 
   /** Y3 — candidate blocking rules from a ≤10k sample, filtered by estimated cost:
-    * single-column AND terms, up to two of them OR-ed together.
+    * single-column AND terms, up to two of them OR-ed together. May be empty.
     */
   private def candidateRules(
       df: DataFrame,
@@ -202,13 +249,10 @@ object AutoLinker {
       .generateBlockingRules(sample, n = 1, k = 2, attrs, seed)
       .cache()
     try {
-      val accepted = candidates
+      candidates
         .filter(col("rule_squared_count") < comparisonSizeLimit)
         .select("splink_rule")
         .collect().map(_.getString(0)).toSeq
-      if (accepted.nonEmpty) accepted
-      // robustness fallback (the reference would raise): single-column rules
-      else attrs.map(c => s"l.$c = r.$c")
     } finally candidates.unpersist()
   }
 
@@ -310,15 +354,25 @@ object AutoLinker {
     // idle). The u pair table is spec-independent: built and checkpointed once for
     // the whole search, so each trial's u counts read ~uTargetPairs checkpointed rows
     // instead of re-running the sample/rank/offset joins.
-    val (ruleChoices, adjustedBase, uPairs) = onDriverThreads(3) { implicit ec =>
+    val (rules, distinct, uPairs) = onDriverThreads(3) { implicit ec =>
       val rules = Future(candidateRuleOverride.getOrElse(
         candidateRules(clusterBase, nRows, attrs, comparisonSizeLimit, seed)))
-      val base = Future(EntropyMetrics.maxDistinct(clusterBase, attrs).toInt)
+      val distinct = Future(EntropyMetrics.distinctCounts(clusterBase, attrs))
       val pairs = Future(tracker.rotate(Estimation.uSamplePairs(
         PairGenerator.recordPool(trainDf, linkRight), uidCol, attrs, uTargetPairs,
         hashShuffle = !uDeterministicOrder, seed = 42L, tracker)))
-      (await(rules), await(base), await(pairs))
+      (await(rules), await(distinct), await(pairs))
     }
+    val adjustedBase = distinct.values.max.toInt
+    // a rule on a column without a non-null value pairs nothing (SQL `=` never
+    // matches null keys): drop it before any draw
+    def pairsSomething(rule: String) =
+      BlockingRule.parse(rule).columns.forall(c => distinct.get(c).forall(_ > 0))
+    val ruleChoices = Some(rules.filter(pairsSomething)).filter(_.nonEmpty)
+      // robustness fallback (the reference would raise): single-column rules
+      .getOrElse(attrs.map(c => s"l.$c = r.$c").filter(pairsSomething))
+    require(ruleChoices.nonEmpty,
+      "auto-link needs an attribute column with at least one non-null value")
 
     // one full trial: train → predict → cluster → metrics. Pure function of its
     // draw (plus the shared loop invariants) — no session-global state, no
@@ -330,8 +384,8 @@ object AutoLinker {
         uTargetPairs = uTargetPairs, linkRight = linkRight, uPairs = Some(uPairs),
         nRows = Some(nRows))
       val predictions = FellegiSunter.predict(trainDf, uidCol, model, right = linkRight)
-      val clusters = clusterAt(clusterBase, uidCol, predictions, clusterThreshold)
-      val metric = EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase)
+      val (clusters, metric) = clusterAndScore(clusterBase, uidCol, predictions,
+        clusterThreshold, attrs, adjustedBase)
       val supervised = trueLabelCol.map { label =>
         val labelDf = clusterBase.select(col(uidCol), col(label))
         rowToMap(PairwiseMetrics.confusionMetrics(

@@ -3,6 +3,8 @@ package graft.cluster
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Utf8Order
+
 /** J7 — connected components over record pairs, as an iterative DataFrame algorithm
   * (reference semantics: Splink's `cluster_pairwise_predictions_at_threshold`, called at
   * autolinker.py:604,1065; algorithm: alternating large-star/small-star from
@@ -23,17 +25,23 @@ object ConnectedComponents {
   /** Cap on the distributed loop's large-star/small-star rounds. */
   private val MaxIter = 30
 
+  /** Rows a driver-side probe collects at most before its operator falls back to the
+    * distributed path (~50 MB of short string rows): this object's edge probe, the
+    * auto-link trial probe and the information-gain probe all use it.
+    */
+  val LocalCap = 500000
+
   /** @param edges two string columns `src`, `dst` (one row per predicted matching pair)
     * @param localThreshold deduped edge sets at or below this size short-circuit to a
     *        driver union-find (the count is already paid by the first checkpoint; the
-    *        collect is bounded by this parameter — ~50 MB at the default). Identical
-    *        output: component minimum ids either way. At cluster scale the loop runs
-    *        distributed; the fallback only removes ~log(diameter) rounds of tiny
-    *        shuffles when the graph is small anyway.
+    *        collect is bounded by this parameter). Identical output: component
+    *        minimum ids either way. At cluster scale the loop runs distributed; the
+    *        fallback only removes ~log(diameter) rounds of tiny shuffles when the
+    *        graph is small anyway.
     * @return mapping `node` → `cluster_id` covering every node present in `edges`
     *         (callers left-join records and default missing nodes to their own id)
     */
-  def run(edges: DataFrame, localThreshold: Long = 500000L): DataFrame = {
+  def run(edges: DataFrame, localThreshold: Long = LocalCap): DataFrame = {
     val dedup = edges
       .select(col("src").cast("string"), col("dst").cast("string"))
       .filter(col("src") =!= col("dst"))
@@ -41,17 +49,18 @@ object ConnectedComponents {
     // ONE limit-probe job decides local vs distributed AND, in the local case,
     // already holds every edge: the former checkpoint + count + collect triple
     // paid three jobs and a full checkpoint write just to reach the driver
-    // union-find (r12; the auto-link loop runs this once per trial). A probe row
-    // past the threshold proves the set is too big without counting it; at or
-    // under the threshold the probe IS the complete deduped edge set (collect
-    // order does not matter — union-find output is order-independent). The
-    // distributed path recomputes `dedup` into its first rotation, as any
-    // over-threshold graph must pay its edge materialization anyway.
+    // union-find (r12). A probe row past the threshold proves the set is too big
+    // without counting it; at or under the threshold the probe IS the complete
+    // deduped edge set (collect order does not matter — union-find output is
+    // order-independent). The distributed path recomputes `dedup` into its first
+    // rotation, as any over-threshold graph must pay its edge materialization anyway.
     val cap = math.min(localThreshold, Int.MaxValue.toLong - 1).toInt
     val probe = dedup.limit(cap + 1).collect()
     if (probe.length <= cap) {
-      return localRun(edges.sparkSession,
-        probe.map(r => (r.getString(0), r.getString(1))))
+      val spark = edges.sparkSession
+      import spark.implicits._
+      return components(probe.map(r => (r.getString(0), r.getString(1))))
+        .toDF("node", "cluster_id")
     }
 
     val tracker = new graft.util.CheckpointTracker(edges.sparkSession)
@@ -76,14 +85,13 @@ object ConnectedComponents {
     asMember.union(asRoot).groupBy("node").agg(min("cluster_id").as("cluster_id"))
   }
 
-  /** Driver union-find (path compression + union by rank) over a bounded edge list;
-    * cluster id = lexicographic minimum node id of the component, exactly as the
-    * distributed fixpoint produces.
+  /** Driver union-find (path compression + union by rank) over a bounded edge list:
+    * `(node, cluster_id)` for every node, in order of first appearance, with cluster
+    * id = the component's minimum node id in Spark's string order — exactly what the
+    * distributed fixpoint produces. Duplicate and self edges are harmless.
     */
-  private def localRun(
-      spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
+  private[graft] def components(pairs: collection.Seq[(String, String)])
+      : IndexedSeq[(String, String)] = {
     val index = scala.collection.mutable.HashMap.empty[String, Int]
     val nodes = scala.collection.mutable.ArrayBuffer.empty[String]
     def idOf(s: String): Int = index.getOrElseUpdate(s, { nodes += s; nodes.length - 1 })
@@ -109,28 +117,9 @@ object ConnectedComponents {
     nodes.indices.foreach { i =>
       val r = find(i)
       val s = nodes(i)
-      if (!minOfRoot.get(r).exists(m => cpCompare(m, s) <= 0)) minOfRoot(r) = s
+      if (!minOfRoot.get(r).exists(m => Utf8Order.compare(m, s) <= 0)) minOfRoot(r) = s
     }
     nodes.indices.map(i => (nodes(i), minOfRoot(find(i))))
-      .toDF("node", "cluster_id")
-  }
-
-  /** Code-point order — identical to Spark's UTF8String binary (UTF-8 byte) order.
-    * Java's String.compareTo is UTF-16 order, which ranks supplementary characters
-    * BELOW U+E000..U+FFFF and would pick a different component minimum than the
-    * distributed path for such ids.
-    */
-  private def cpCompare(a: String, b: String): Int = {
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i)
-      val cb = b.codePointAt(j)
-      if (ca != cb) return Integer.compare(ca, cb)
-      i += Character.charCount(ca)
-      j += Character.charCount(cb)
-    }
-    Integer.compare(a.length - i, b.length - j)
   }
 
   /** Incremental connected components: fold a batch of NEW edges into an existing
@@ -194,13 +183,15 @@ object ConnectedComponents {
   /** Attaches records: adds `cluster_id` (own uid for singletons) — the reference's
     * output shape (input ∪ cluster_id, autolinker.py:133,195-196).
     */
-  def assignClusters(records: DataFrame, uid: String, edges: DataFrame): DataFrame = {
-    val mapping = run(edges)
+  def assignClusters(records: DataFrame, uid: String, edges: DataFrame): DataFrame =
+    attach(records, uid, run(edges))
+
+  /** [[assignClusters]] from a computed `node` → `cluster_id` mapping. */
+  private[graft] def attach(records: DataFrame, uid: String, mapping: DataFrame): DataFrame =
     records
       .join(mapping, records(uid).cast("string") === mapping("node"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(uid).cast("string")))
       .drop("node")
-  }
 
   /** Per-cluster audit stats over an assignment and its edge set — Splink's cluster
     * metrics natively: node count, distinct undirected edge count, and graph density

@@ -111,17 +111,22 @@ case class EntropyAgg(
 }
 
 object EntropyAgg {
-  /** Closed-form entropy used by both the aggregate and driver-side metrics. */
+  /** Closed-form entropy used by both the aggregate and driver-side metrics. The
+    * terms are summed over the counts in ascending order, so the value depends only
+    * on the multiset of counts, never on the map's insertion or merge order.
+    */
   def entropy(counts: collection.Map[String, Long], base: Int): Double = {
-    val total = counts.valuesIterator.sum.toDouble
+    val sorted = counts.valuesIterator.toArray
+    java.util.Arrays.sort(sorted)
+    val total = sorted.sum.toDouble
     if (total == 0) return 0.0
-    val distinct = counts.size
+    val distinct = sorted.length
     val logDivisor =
       if (base > 0) math.log10(base.toDouble)
       else if (distinct < 2 || distinct == 10) 1.0
       else math.log10(distinct.toDouble)
     var acc = 0.0
-    counts.valuesIterator.foreach { c =>
+    sorted.foreach { c =>
       val p = c / total
       if (p > 0) acc -= p * math.log10(p)
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.clean.Cleaning
+import graft.util.Utf8Order
 
 /** Y10 — column matching for linking tables with different schemas
   * (reference: autolinker.py:961-1020).
@@ -41,7 +42,9 @@ object SchemaMatch {
   }
 
   /** Greedy best-partner pick per left column (reference :1004-1013): order pairings by
-    * count descending, take each left column's best unused right column.
+    * count descending, take each left column's best unused right column. The ≤ C²
+    * pairings are ranked on the driver — (count desc, left_col, right_col), names in
+    * Spark's string order — which saves the sort's jobs on the call's setup path.
     */
   def greedyMapping(
       left: DataFrame,
@@ -49,12 +52,13 @@ object SchemaMatch {
       leftCols: Seq[String],
       rightCols: Seq[String]): Seq[(String, String, Long)] = {
     val ranked = pairingCounts(left, right, leftCols, rightCols)
-      .orderBy(desc("match_count"), asc("left_col"), asc("right_col"))
-      .collect() // ≤ C² rows — driver-sized
+      .collect()
+      .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
+      .sorted(Ordering.by[(String, String, Long), Long](-_._3)
+        .orElseBy(_._1)(Utf8Order).orElseBy(_._2)(Utf8Order))
     val usedL = scala.collection.mutable.Set[String]()
     val usedR = scala.collection.mutable.Set[String]()
-    ranked.flatMap { row =>
-      val (lc, rc, n) = (row.getString(0), row.getString(1), row.getLong(2))
+    ranked.flatMap { case (lc, rc, n) =>
       if (!usedL.contains(lc) && !usedR.contains(rc)) {
         usedL += lc; usedR += rc
         Some((lc, rc, n))

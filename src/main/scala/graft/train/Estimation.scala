@@ -17,7 +17,10 @@ import graft.model.{ColumnParams, ComparisonSpec, TrainedModel}
   */
 object Estimation {
 
-  def prior(rowCount: Long): Double = 1.0 / rowCount
+  /** λ0 = 1/N, clamped to [1e-9, 1 − 1e-9] as the EM loop clamps λ: a single row
+    * would otherwise give λ = 1 and an infinite prior weight.
+    */
+  def prior(rowCount: Long): Double = math.min(math.max(1.0 / rowCount, Floor), 1 - Floor)
 
   val DefaultM: Array[Double] = Array(0.1, 0.3, 0.6)   // gamma 0, 1, 2
   val DefaultU: Array[Double] = Array(0.8, 0.15, 0.05)
@@ -87,7 +90,9 @@ object Estimation {
       if (hashShuffle) sampled.orderBy(xxhash64(col("uid"), lit(seed)))
       else sampled.orderBy("uid")
     val n = if (sampled eq base) nAll else projected.count()
-    val offsets = math.max(1L, math.min(n - 1, targetPairs / math.max(n, 1L))).toInt
+    // a single row has no partner: 0 offsets (offset 1 mod 1 would pair it with itself)
+    val offsets = math.max(0L, math.min(n - 1, math.max(1L, targetPairs / math.max(n, 1L))))
+      .toInt
 
     val indexed = tracker.rotate(spark.createDataFrame(
       projected.rdd.zipWithIndex().map { case (row, idx) =>
@@ -100,10 +105,11 @@ object Estimation {
     val r = indexed.select(
       (col("rn").as("rn_r") +: col("uid").as("uid_r") +: attrs.map(a => col(a).as(s"${a}_r"))): _*)
 
-    (1 to offsets).map { off =>
+    val paired = (1 to math.max(offsets, 1)).map { off =>
       l.withColumn("rn_r", pmod(col("rn") + lit(off.toLong), lit(n)))
         .join(r, "rn_r")
     }.reduce(_ unionByName _)
+    if (offsets > 0) paired else paired.limit(0)
   }
 
   /** u[col][gamma] from a prebuilt pair table (see [[uSamplePairs]]). [[train]] takes

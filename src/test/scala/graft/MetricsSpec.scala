@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.auto.AutoLinker
+import graft.blocking.BlockingRule
 import graft.clean.Cleaning
+import graft.cluster.ConnectedComponents
 import graft.metrics.{ClusteringMetrics, EntropyMetrics, PairwiseMetrics, Profile}
 import graft.model.TrainedModel
 import graft.schemamatch.SchemaMatch
@@ -204,6 +206,104 @@ class MetricsSpec extends SparkSpec {
         if (name == "ten clusters of 20") assert(!got.isNaN && !got.isInfinite)
       }
     }
+  }
+
+  /** Equal, or both NaN, or within 1e-12 of the larger magnitude. */
+  private def close(a: Double, b: Double): Boolean =
+    (a.isNaN && b.isNaN) || a == b || math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+
+  private def bits(x: Double): Long = java.lang.Double.doubleToLongBits(x)
+
+  test("information gain power ratio: the same bits whatever the partitioning or row order") {
+    val rnd = new scala.util.Random(41)
+    // 60 cluster ids over 400 rows: clusters of several rows, a few singletons, nulls
+    val rows = (1 to 400).map { i =>
+      (i.toString, s"c${rnd.nextInt(60)}",
+        if (rnd.nextInt(9) == 0) None else Some(s"v${rnd.nextInt(6)}"), s"w${rnd.nextInt(25)}")
+    }
+    val attrs = Seq("a", "b")
+    def table(rs: Seq[(String, String, Option[String], String)]) =
+      rs.toDF("id", "cluster_id", "a", "b")
+    def driverRows(rs: Seq[(String, String, Option[String], String)]) =
+      rs.map { case (_, c, a, b) => (c, IndexedSeq(a.orNull, b)) }
+    val df = table(rows)
+    Seq(EntropyMetrics.maxDistinct(df, attrs).toInt, 0).foreach { u =>
+      val driver = EntropyMetrics.powerRatio(driverRows(rows), u)
+      assert(!driver.isNaN && driver != 1.0, s"adjusted base $u: $driver")
+      val shuffled = rnd.shuffle(rows)
+      assert(bits(EntropyMetrics.powerRatio(driverRows(shuffled), u)) === bits(driver))
+      Seq(df.repartition(1), df.repartition(7), table(shuffled).repartition(3)).foreach { v =>
+        assert(bits(EntropyMetrics.informationGainPowerRatio(v, attrs, u)) === bits(driver),
+          s"adjusted base $u, ${v.rdd.getNumPartitions} partitions")
+      }
+      // above the driver cap: the GROUPING SETS pass sums its cluster means in
+      // partition order, which moves ULPs only
+      val grouped = EntropyMetrics.informationGainPowerRatio(df.repartition(7), attrs, u, 0)
+      assert(close(grouped, driver), s"adjusted base $u: GROUPING SETS $grouped vs $driver")
+    }
+  }
+
+  test("trial cluster-and-score: the driver path equals the distributed path") {
+    val rnd = new scala.util.Random(31)
+    def word(k: Int) = (1 to k).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    // linkbench's link_many_trials shape, smaller: renamed right columns, the right
+    // side's dates day-first, one attribute of each right copy corrupted or null
+    val ents = (0 until 150).map(_ => (word(5), word(7),
+      f"${1930 + rnd.nextInt(75)}%04d-${1 + rnd.nextInt(12)}%02d-${1 + rnd.nextInt(28)}%02d",
+      s"town${rnd.nextInt(12)}", f"${rnd.nextInt(60)}%04d"))
+    val left = ents.zipWithIndex.map { case ((f, s, d, t, z), i) => (f"l$i%04d", f, s, d, t, z) }
+      .toDF("uid", "first", "surname", "dob", "city", "postcode")
+    val right = ents.zipWithIndex.map { case ((f, s, d, t, z), i) =>
+      val fields = Array(f, s, s"${d.substring(8)}/${d.substring(5, 7)}/${d.substring(0, 4)}", t, z)
+      val k = rnd.nextInt(5)
+      fields(k) = rnd.nextInt(3) match {
+        case 0 => fields(k).updated(0, 'z')
+        case 1 => fields(k).dropRight(1)
+        case _ => null
+      }
+      (f"r$i%04d", fields(0), fields(1), fields(2), fields(3), fields(4))
+    }.toDF("uid", "given", "family", "birth", "town", "zip")
+    val results = Seq(
+      "link" -> AutoLinker.autoLinkTables(left, right, uidCol = "uid", maxEvals = 2, seed = 42L),
+      "dedupe" -> AutoLinker.autoLink(left.unionByName(right.toDF(left.columns: _*)),
+        uidCol = "uid", maxEvals = 2, seed = 42L))
+    results.foreach { case (mode, res) =>
+      val attrs = res.best.model.comparisons.map(_.column)
+      val records = res.clusters.drop("cluster_id")
+      val base = EntropyMetrics.maxDistinct(records, attrs).toInt
+      def step(cap: Int) = {
+        val (clusters, metric) =
+          AutoLinker.clusterAndScore(records, "uid", res.predictions, 0.8, attrs, base, cap)
+        (clusters, clusters.select("uid", "cluster_id").as[(String, String)].collect().toMap,
+          metric)
+      }
+      val (clusters, driverMap, driverMetric) = step(ConnectedComponents.LocalCap)
+      val (_, distributedMap, distributedMetric) = step(0)
+      assert(driverMap.size === records.count(), mode)
+      assert(driverMap.values.groupBy(identity).exists(_._2.size > 1), s"$mode: no merge")
+      assert(driverMap === distributedMap, mode)
+      assert(close(driverMetric, distributedMetric),
+        s"$mode: driver $driverMetric vs distributed $distributedMetric")
+      // the search ran the same step; the DataFrame metric of its clusters agrees exactly
+      assert(bits(driverMetric) === bits(res.best.metric), mode)
+      assert(bits(EntropyMetrics.informationGainPowerRatio(clusters, attrs, base)) ===
+        bits(driverMetric), mode)
+    }
+  }
+
+  test("schema match ranks pairings on the driver exactly as Spark's orderBy does") {
+    // every pairing ties on its count, so the names decide: "Z" < "a" < "b" in
+    // Spark's string order
+    val left = Seq(("x", "x", "x"), ("y", "y", "y")).toDF("b", "a", "Z")
+    val right = Seq(("x", "x"), ("y", "y")).toDF("d", "c")
+    val ranked = SchemaMatch.pairingCounts(left, right, left.columns, right.columns)
+      .orderBy(desc("match_count"), asc("left_col"), asc("right_col"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val expected = ranked.foldLeft(Seq.empty[(String, String, Long)]) { case (acc, p) =>
+      if (acc.exists(m => m._1 == p._1 || m._2 == p._2)) acc else acc :+ p
+    }
+    assert(expected.map(m => (m._1, m._2)) === Seq(("Z", "c"), ("a", "d")))
+    assert(SchemaMatch.greedyMapping(left, right, left.columns, right.columns) === expected)
   }
 
   test("maxDistinct and auto-link accept a single attribute column") {
@@ -432,13 +532,23 @@ class MetricsSpec extends SparkSpec {
           assert(res.trials.size === 1, what)
           assert(!res.best.metric.isNaN && !res.best.metric.isInfinite, what)
           assert(res.clusters.count() === rows, what)
-          // the model serializes to JSON that reads back (no NaN / Infinity)
+          // the model serializes to JSON that reads back (no NaN / Infinity), and its
+          // prior weight log2(λ/(1−λ)) is finite — also for a single row
           val model = res.best.model
-          assert(model.lambda > 0 && model.lambda <= 1, s"$what: λ = ${model.lambda}")
+          assert(model.lambda > 0 && model.lambda < 1, s"$what: λ = ${model.lambda}")
+          val priorWeight = math.log(model.lambda / (1 - model.lambda))
+          assert(!priorWeight.isNaN && !priorWeight.isInfinite, s"$what: λ = ${model.lambda}")
           assert(TrainedModel.fromJson(model.toJson).toJson === model.toJson, what)
+          // a rule on the all-null column would pair nothing
+          assert(res.trials.forall(t => !BlockingRule.parse(t.blockingRule).columns
+            .contains("note")), s"$what: ${res.trials.map(_.blockingRule)}")
         }
       }
     }
+    // no attribute with a non-null value leaves no rule to draw
+    val err = intercept[IllegalArgumentException](AutoLinker.autoLink(both,
+      attributeColumns = Some(Seq("note")), maxEvals = 1, seed = 1L))
+    assert(err.getMessage.contains("non-null value"), err.getMessage)
   }
 
   // ---- expectations ---------------------------------------------------------
