@@ -201,7 +201,18 @@ object Bench {
     val selected = SparkEntry.queries
       .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
       .toSeq.sortBy(_._1)
-    val prior = priorTimings(sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_FULL.json"))
+    // the retime prior comes from this core count's record: BENCH_FULL.json holds
+    // whichever core count ran last
+    val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", {
+      val perCpu = s"BENCH_FULL_c$cpus.json"
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(perCpu))) perCpu
+      else "BENCH_FULL.json"
+    })
+    System.err.println(s"[bench] retime prior: $priorPath" +
+      (if (priorPath == "BENCH_FULL.json")
+        s" (no BENCH_FULL_c$cpus.json; its core count may differ from $cpus)"
+      else ""))
+    val prior = priorTimings(priorPath)
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()

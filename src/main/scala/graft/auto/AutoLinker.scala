@@ -234,7 +234,9 @@ object AutoLinker {
   }
 
   /** Y3 — candidate blocking rules from a ≤10k sample, filtered by estimated cost:
-    * single-column AND terms, up to two of them OR-ed together. May be empty.
+    * single-column AND terms, up to two of them OR-ed together, in
+    * [[RuleGen.orRules]] order. May be empty. The unsampled input reuses the search's
+    * row count `n`.
     */
   private def candidateRules(
       df: DataFrame,
@@ -242,18 +244,11 @@ object AutoLinker {
       attrs: Seq[String],
       comparisonSizeLimit: Long,
       seed: Long): Seq[String] = {
-    val sample =
-      if (n > 10000) df.sample(withReplacement = false, 10000.0 / n, seed)
-      else df
-    val candidates = RuleGen
-      .generateBlockingRules(sample, n = 1, k = 2, attrs, seed)
-      .cache()
-    try {
-      candidates
-        .filter(col("rule_squared_count") < comparisonSizeLimit)
-        .select("splink_rule")
-        .collect().map(_.getString(0)).toSeq
-    } finally candidates.unpersist()
+    val (sample, rowCount) =
+      if (n > 10000) (df.sample(withReplacement = false, 10000.0 / n, seed), None)
+      else (df, Some(n))
+    RuleGen.blockingRules(sample, n = 1, k = 2, attrs, seed, rowCount)
+      .collect { case (rule, cost) if cost < comparisonSizeLimit => rule }
   }
 
   /** One parameter draw. Uniform during warmup or with `searchStrategy = "random"`;
@@ -351,16 +346,16 @@ object AutoLinker {
     try {
     // The three setup stages read only the counted, cached input and not each
     // other, so they overlap on driver threads (one after another they left cores
-    // idle). The u pair table is spec-independent: built and checkpointed once for
-    // the whole search, so each trial's u counts read ~uTargetPairs checkpointed rows
-    // instead of re-running the sample/rank/offset joins.
+    // idle). The u pair table is spec-independent: built on the driver and
+    // checkpointed once for the whole search, so each trial's u counts read
+    // ~uTargetPairs checkpointed rows.
     val (rules, distinct, uPairs) = onDriverThreads(3) { implicit ec =>
       val rules = Future(candidateRuleOverride.getOrElse(
         candidateRules(clusterBase, nRows, attrs, comparisonSizeLimit, seed)))
       val distinct = Future(EntropyMetrics.distinctCounts(clusterBase, attrs))
       val pairs = Future(tracker.rotate(Estimation.uSamplePairs(
         PairGenerator.recordPool(trainDf, linkRight), uidCol, attrs, uTargetPairs,
-        hashShuffle = !uDeterministicOrder, seed = 42L, tracker)))
+        hashShuffle = !uDeterministicOrder, seed = 42L)))
       (await(rules), await(distinct), await(pairs))
     }
     val adjustedBase = distinct.values.max.toInt

@@ -4,19 +4,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expressions.{EstimateSquaredCountOR, PartialCombinations, ToSplinkRule}
 import graft.functions._
 
 /** Candidate blocking-rule generation — the P1-P4 pipelines of SURVEY §2.2
-  * (reference: scala/.../arc/ARC.scala:10-113), re-expressed as declarative DataFrame
-  * programs so Catalyst handles pushdown/pruning and `orderBy+limit` becomes
-  * TakeOrderedAndProject.
+  * (reference: scala/.../arc/ARC.scala:10-113).
   *
-  * Scale design: P1's random pre-bucketing bounds each partial count-map to one bucket's
-  * keys before the single merge; the in-aggregate threshold prune and top-1000 cap bound
-  * memory regardless of input size; P2-P4 operate on a driver-collected map of at most
-  * ~1000 entries (an intentional, size-bounded driver boundary — reference ARC.scala:107-110).
+  * Scale design: P1 is a DataFrame program — random pre-bucketing bounds each partial
+  * count-map to one bucket's keys before the single merge, and the in-aggregate
+  * threshold prune and top-1000 cap bound memory regardless of input size. Its
+  * collected map holds one entry per candidate AND-rule (at most 1000·C values before
+  * the per-rule grouping, C = attribute count), so the P2/P3 expansion over it runs on
+  * the driver ([[orRules]]) with the same E4–E8 functions (combinations,
+  * [[PartialCombinations.extend]], [[ToSplinkRule.render]],
+  * [[EstimateSquaredCountOR.estimate]]) — an intentional, size-bounded driver
+  * boundary (reference ARC.scala:107-110). The DataFrame forms wrap its result in a
+  * local table.
   */
 object RuleGen {
+
+  /** The two beams of P2 keep this many combinations each. */
+  private val Beam = 1000
 
   /** P1 — per candidate AND-rule (column combination of size exactly `k`), robust block
     * statistics `(n = #blocks, avg_k = trimmed mean of blockCount²)`.
@@ -25,6 +33,8 @@ object RuleGen {
     *             (ARC.scala:19) — we thread a seed for reproducibility.
     * @param exactPercentiles use exact `percentile` instead of `percentile_approx`
     *             (the oracle path at small SF; approx is the default at scale).
+    * @param rowCount `df`'s row count when the caller already holds it (it sets the
+    *             prune threshold); counted otherwise.
     */
   def generateCountLookup(
       df: DataFrame,
@@ -33,10 +43,11 @@ object RuleGen {
       seed: Long = 42L,
       exactPercentiles: Boolean = false,
       deterministicBuckets: Boolean = false,
-      thresholdOverride: Option[Int] = None): DataFrame = {
-    val dfSize = df.count()
+      thresholdOverride: Option[Int] = None,
+      rowCount: Option[Long] = None): DataFrame = {
     val partitions = math.max(df.rdd.getNumPartitions, 1)
-    val threshold = thresholdOverride.getOrElse(((dfSize * 0.2) / partitions).toInt)
+    val threshold = thresholdOverride.getOrElse(
+      ((rowCount.getOrElse(df.count()) * 0.2) / partitions).toInt)
 
     val attrCols = attributes.map(a => a -> col(a).cast("string"))
     val bucket =
@@ -68,59 +79,67 @@ object RuleGen {
       .select(col("rule"), struct(col("n"), col("avg_k")).as("rule_stats"))
   }
 
-  /** P2 — expand the rule alphabet into OR-combinations of size `n`, beam-pruned by the
-    * estimated pair cost (limit 1000 twice, matching the reference's beam).
+  /** P2/P3 on the driver — every OR-combination of size 1..`k` of the count map's
+    * rules, as `(splink_rule, rule_squared_count)` ordered by
+    * `(rule_squared_count desc, splink_rule)`. Per size `n`: the `n`-combinations of
+    * the sorted rule keys, beam-pruned to the [[Beam]] costliest, extended by `n − 2`
+    * more keys ([[PartialCombinations.extend]]; `n ≤ 2` passes through), deduplicated
+    * and pruned to the [[Beam]] costliest again — the reference's two limit-1000
+    * beams. Ties break by rule text in both beams.
     */
-  def generateRules(df: DataFrame, n: Int, countMap: Map[String, (Long, Long)]): DataFrame = {
-    val partials = df
-      .select(generate_combinations(lit(n), col("rules")).as("combinations"), col("rules"))
-      .withColumn("partial_count", estimate_squared_count_or(col("combinations"), countMap))
-      .orderBy(desc("partial_count"))
-      .limit(1000)
-
-    val combinations =
-      if (n > 1)
-        partials.select(
-          generate_partial_combinations(lit(n - 2), col("combinations"), col("rules"))
-            .as("combinations"))
-      else partials
-
-    combinations
-      .distinct()
-      .select(
-        to_splink_rule(col("combinations")).as("splink_rule"),
-        estimate_squared_count_or(col("combinations"), countMap).as("rule_squared_count"))
-      .orderBy(col("rule_squared_count").desc)
-      .limit(1000)
+  def orRules(countMap: Map[String, (Long, Long)], k: Int): Seq[(String, Long)] = {
+    val keys = countMap.keys.toSeq.sorted
+    val order = Ordering.Tuple2(Ordering.Long.reverse, graft.util.Utf8Order)
+    def top(combos: Iterator[Seq[String]]): Seq[(Seq[String], String, Long)] =
+      combos.map(c => (c, ToSplinkRule.render(c), EstimateSquaredCountOR.estimate(c, countMap)))
+        .toSeq.sortBy(t => (t._3, t._2))(order).take(Beam)
+    (1 to k).flatMap { n =>
+      val beam = top(keys.combinations(n))
+      val extended =
+        if (n > 1) beam.flatMap(b => PartialCombinations.extend(n - 2, b._1, keys)).distinct
+        else beam.map(_._1)
+      top(extended.iterator).map(t => (t._2, t._3))
+    }.distinct.sortBy(t => (t._2, t._1))(order)
   }
 
-  /** P3 — fold [[generateRules]] over OR-sizes 1..k and union the candidates. */
+  /** P3 — [[orRules]] as a local table `(splink_rule, rule_squared_count)`. */
   def generateORRules(
       spark: SparkSession,
       countMap: Map[String, (Long, Long)],
       k: Int): DataFrame = {
     import spark.implicits._
-    val baseDf = Seq((1, countMap.keys.toSeq.sorted)).toDF("id", "rules")
-    val dfN1 = generateRules(baseDf, 1, countMap)
-    if (k > 1)
-      (2 to k).foldLeft(dfN1)((df, i) => df.union(generateRules(baseDf, i, countMap)))
-        .distinct()
-    else dfN1.distinct()
+    orRules(countMap, k).toDF("splink_rule", "rule_squared_count")
   }
 
-  /** P4 — end to end: count stats → driver-collected map (≤1000·C entries) → candidates. */
+  /** P4 — end to end: count stats → driver-collected map (≤1000·C entries) → candidates
+    * in [[orRules]] order.
+    */
+  def blockingRules(
+      df: DataFrame,
+      n: Int,
+      k: Int,
+      attributes: Seq[String],
+      seed: Long = 42L,
+      rowCount: Option[Long] = None): Seq[(String, Long)] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val countMap = generateCountLookup(df, n, attributes, seed, rowCount = rowCount)
+      .as[(String, (Long, Long))]
+      .collect()
+      .toMap
+    orRules(countMap, k)
+  }
+
+  /** P4 — [[blockingRules]] as a local table `(splink_rule, rule_squared_count)`. */
   def generateBlockingRules(
       df: DataFrame,
       n: Int,
       k: Int,
       attributes: Seq[String],
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L,
+      rowCount: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val countMap = generateCountLookup(df, n, attributes, seed)
-      .as[(String, (Long, Long))]
-      .collect()
-      .toMap
-    generateORRules(spark, countMap, k)
+    blockingRules(df, n, k, attributes, seed, rowCount).toDF("splink_rule", "rule_squared_count")
   }
 }

@@ -43,19 +43,22 @@ case class PartialCombinations(first: Expression, second: Expression, third: Exp
   extends TernaryExpression with CodegenFallback {
   override def dataType: DataType = ArrayType(ArrayType(StringType))
   override def nullSafeEval(n: Any, partial: Any, elements: Any): Any = {
-    val k = n.asInstanceOf[Int]
-    val part = ComboUtil.toStrings(partial)
-    val els = ComboUtil.toStrings(elements)
-    val remaining = els.diff(part)
-    val out: Seq[Seq[String]] =
-      if (k < 1 || remaining.isEmpty) Seq(part)
-      else remaining.combinations(k).map(c => (part ++ c).sorted).toSeq
+    val out = PartialCombinations.extend(n.asInstanceOf[Int],
+      ComboUtil.toStrings(partial), ComboUtil.toStrings(elements))
     new GenericArrayData(out.map(c =>
       new GenericArrayData(c.map(UTF8String.fromString).toArray[Any]): Any).toArray)
   }
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): PartialCombinations =
     copy(first = f, second = s, third = t)
+}
+
+object PartialCombinations {
+  def extend(k: Int, partial: Seq[String], elements: Seq[String]): Seq[Seq[String]] = {
+    val remaining = elements.diff(partial)
+    if (k < 1 || remaining.isEmpty) Seq(partial)
+    else remaining.combinations(k).map(c => (partial ++ c).sorted).toSeq
+  }
 }
 
 /** Renders a rule combination to the engine's blocking-rule SQL dialect:

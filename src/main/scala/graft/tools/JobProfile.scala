@@ -1,6 +1,8 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-query profiler: where a declared query's seconds go when the data is small
   * and the cost is job-count-bound (scheduling + materialization overhead) rather
@@ -10,8 +12,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * SPARK_GRAFT_SF_DIR (default sf0.1) and SPARK_GRAFT_CPUS (default: every core).
   * For each query and run it prints one line per job (wall, summed task-s, tasks,
   * callsite) and a one-line summary (wall, rows, jobs, stages, task-s; the gap
-  * between wall and task-s over cores is scheduler/launch overhead); run 2+ is
-  * JIT-warm.
+  * between wall and task-s over cores is scheduler/launch overhead; `compiles` and
+  * `compile-s` are the whole-stage codegen classes compiled during the run and their
+  * compile seconds, JVM-wide); run 2+ is JIT-warm.
   */
 object JobProfile {
 
@@ -64,9 +67,13 @@ object JobProfile {
     for (name <- names; r <- 1 to runs) {
       val fn = graft.SparkEntry.queries(name)
       jobs.clear(); order.clear(); stageToJob.clear(); stages.set(0)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       val rows = graft.util.Caching.withCached { fn(spark, sfDir).count() }
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
       graft.util.Caching.releaseAll()
       spark.sqlContext.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -80,7 +87,8 @@ object JobProfile {
       }
       val taskS = js.map(_.taskMs).sum / 1000.0
       System.err.println(f"[jobprofile] $name run $r: $wall%.3f s wall, rows=$rows " +
-        f"jobs=${js.size} stages=${stages.get} task-s=$taskS%.2f")
+        f"jobs=${js.size} stages=${stages.get} task-s=$taskS%.2f " +
+        f"compiles=$compiles compile-s=$compileS%.2f")
       js.foreach { j =>
         val w = (j.ended - j.started).toDouble / 1000
         System.err.println(f"[jobprofile]   job ${j.id}%4d ${w}%7.3f s wall ${j.taskMs / 1000.0}%8.2f task-s ${j.tasks}%5d tasks  ${j.site}")

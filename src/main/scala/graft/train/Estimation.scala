@@ -33,10 +33,9 @@ object Estimation {
     * Rows are ranked by a salted hash of the uid (a deterministic shuffle — adjacent
     * rows of sorted input files are correlated, and pairing them would inflate u with
     * true matches), then row `i` is paired with rows `i+offset (mod N)` for
-    * `offset = 1..ceil(targetPairs/N)` — reproducible, uniformly spread, and built via
-    * `zipWithIndex` + equi-join (no global window, no cartesian), so it scales linearly.
-    * Tables larger than ~2·targetPairs are seeded-sampled down to ~targetPairs rows
-    * first, so the ranking sort is O(targetPairs), never a full-table sort.
+    * `offset = 1..ceil(targetPairs/N)` — reproducible and uniformly spread. Tables
+    * larger than ~2·targetPairs are seeded-sampled down to ~targetPairs rows first,
+    * so the ranking and pairing stay O(targetPairs) whatever the corpus size.
     *
     * @param hashShuffle disable only for oracle tests that need a SQL-reproducible order
     *                    (uid order) at the cost of the adjacency bias above.
@@ -47,20 +46,70 @@ object Estimation {
       specs: Seq[ComparisonSpec],
       targetPairs: Long = 100000L,
       hashShuffle: Boolean = true,
-      seed: Long = 42L): Map[String, Array[Double]] = {
-    val tracker = new graft.util.CheckpointTracker(df.sparkSession)
-    try {
-      val pairs = uSamplePairs(df, uid, specs.map(_.column), targetPairs,
-        hashShuffle, seed, tracker)
-      estimateUFromPairs(pairs, specs)
-    } finally tracker.close()
-  }
+      seed: Long = 42L): Map[String, Array[Double]] =
+    estimateUFromPairs(uSamplePairs(df, uid, specs.map(_.column), targetPairs,
+      hashShuffle, seed), specs)
 
   /** The spec-independent half of [[estimateU]]: the deterministically sampled,
-    * ranked, offset-paired record pairs carrying `<attr>_l`/`<attr>_r` for every
-    * attribute. Build ONCE and reuse across trials whose comparison specs differ —
-    * the sample/sort/index/join pipeline depends only on (data, uid, targetPairs,
-    * seed), and rides `tracker`-rotated checkpoints until the caller closes it.
+    * ranked, offset-paired record pairs `uid_l`, `<attr>_l`…, `uid_r`, `<attr>_r`…
+    * as one local table. Build ONCE and reuse across trials whose comparison specs
+    * differ — it depends only on (data, uid, targetPairs, seed).
+    *
+    * The work is driver-sized, so it runs on the driver. One bounded probe,
+    * `limit(2·(targetPairs+1)+1)`, reads the pool without a count; only a pool past
+    * it is counted, seeded-sampled to ~1.2·(targetPairs+1) rows and the sample
+    * collected. The collected rows are ranked by `xxhash64(uid, seed)`, evaluated by
+    * Spark in the collecting projection (uids are unique, the sort stable). The
+    * `hashShuffle = false` oracle path collects the whole pool and ranks it by uid in
+    * Spark's string order, nulls first. Row `i` then pairs with row
+    * `(i + off) mod n` for `off = 1..offsets`; a single row has no partner.
+    */
+  def uSamplePairs(
+      df: DataFrame,
+      uid: String,
+      attrs: Seq[String],
+      targetPairs: Long,
+      hashShuffle: Boolean,
+      seed: Long): DataFrame = {
+    val spark = df.sparkSession
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val base = df.select(
+      (col(uid).cast("string").as("uid") +:
+        attrs.map(a => col(a).cast("string").as(a))): _*)
+    val rows: IndexedSeq[Row] =
+      if (!hashShuffle)
+        base.collect().toIndexedSeq
+          .sortBy(r => Option(r.getString(0)))(Ordering.Option(graft.util.Utf8Order))
+      else {
+        def ranked(d: DataFrame) = d.select(
+          (xxhash64(col("uid"), lit(seed)).as("_rank") +: base.columns.map(col)): _*)
+        val want = targetPairs + 1
+        val cap = math.min(2 * want, Int.MaxValue - 1L).toInt
+        val probe = ranked(base).limit(cap + 1).collect()
+        val drawn =
+          if (probe.length <= cap) probe
+          else {
+            val nAll = base.count()
+            ranked(base.sample(withReplacement = false, math.min(1.0, 1.2 * want / nAll),
+              seed)).collect()
+          }
+        drawn.toIndexedSeq.sortBy(_.getLong(0)).map(r => Row.fromSeq(r.toSeq.tail))
+      }
+    val n = rows.length.toLong
+    // a single row has no partner: 0 offsets (offset 1 mod 1 would pair it with itself)
+    val offsets = math.max(0L, math.min(n - 1, math.max(1L, targetPairs / math.max(n, 1L))))
+      .toInt
+    val pairs = for (off <- 1 to offsets; i <- rows.indices)
+      yield Row.fromSeq(rows(i).toSeq ++ rows((i + off) % rows.length).toSeq)
+    val schema = StructType(Seq("_l", "_r").flatMap(side =>
+      ("uid" +: attrs).map(c => StructField(c + side, StringType))))
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(pairs.asJava, schema)
+  }
+
+  /** [[uSamplePairs]] for callers that pass a checkpoint tracker: the builder holds
+    * no checkpoint of its own, so `tracker` is left untouched.
     */
   def uSamplePairs(
       df: DataFrame,
@@ -69,48 +118,8 @@ object Estimation {
       targetPairs: Long,
       hashShuffle: Boolean,
       seed: Long,
-      tracker: graft.util.CheckpointTracker): DataFrame = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.types._
-    val base = df.select(
-      (col(uid).cast("string").as("uid") +:
-        attrs.map(a => col(a).cast("string").as(a))): _*)
-    // Draw ~targetPairs rows BEFORE ranking: the rank is a total sort, and u needs
-    // only O(targetPairs) rows regardless of corpus size — at 100 TB sorting the full
-    // table to pair ~100k rows is the dominant (and pointless) cost. The sample is
-    // seeded (reproducible) and uniform, so the u estimator is statistically unchanged;
-    // the hashShuffle=false oracle path keeps the exact full-table pairing.
-    val nAll = base.count()
-    val want = math.min(nAll, targetPairs + 1)
-    val sampled =
-      if (hashShuffle && nAll > 2 * want)
-        base.sample(withReplacement = false, math.min(1.0, 1.2 * want / nAll), seed)
-      else base
-    val projected =
-      if (hashShuffle) sampled.orderBy(xxhash64(col("uid"), lit(seed)))
-      else sampled.orderBy("uid")
-    val n = if (sampled eq base) nAll else projected.count()
-    // a single row has no partner: 0 offsets (offset 1 mod 1 would pair it with itself)
-    val offsets = math.max(0L, math.min(n - 1, math.max(1L, targetPairs / math.max(n, 1L))))
-      .toInt
-
-    val indexed = tracker.rotate(spark.createDataFrame(
-      projected.rdd.zipWithIndex().map { case (row, idx) =>
-        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ idx)
-      },
-      StructType(projected.schema.fields :+ StructField("rn", LongType))))
-
-    val l = indexed.select(
-      (col("rn") +: col("uid").as("uid_l") +: attrs.map(a => col(a).as(s"${a}_l"))): _*)
-    val r = indexed.select(
-      (col("rn").as("rn_r") +: col("uid").as("uid_r") +: attrs.map(a => col(a).as(s"${a}_r"))): _*)
-
-    val paired = (1 to math.max(offsets, 1)).map { off =>
-      l.withColumn("rn_r", pmod(col("rn") + lit(off.toLong), lit(n)))
-        .join(r, "rn_r")
-    }.reduce(_ unionByName _)
-    if (offsets > 0) paired else paired.limit(0)
-  }
+      tracker: graft.util.CheckpointTracker): DataFrame =
+    uSamplePairs(df, uid, attrs, targetPairs, hashShuffle, seed)
 
   /** u[col][gamma] from a prebuilt pair table (see [[uSamplePairs]]). [[train]] takes
     * the same counts from its EM pattern pass instead.
@@ -461,18 +470,14 @@ object Estimation {
     val n = nRows.getOrElse(uSource.count())
     val lambda0 = prior(n)
     // a search loop training many candidate models passes the prebuilt sampled
-    // pair table (uPairs) — the sample/sort/index pipeline is spec-independent and
+    // pair table (uPairs) — the sample/rank/pair build is spec-independent and
     // re-running it per trial is pure waste. Either way u's gamma counts ride the
     // EM pattern pass (emSessions), not a pass of their own.
-    val (uSampled, sessions) = {
-      val tracker = new graft.util.CheckpointTracker(df.sparkSession)
-      try {
-        val pairs = uPairs.getOrElse(uSamplePairs(uSource, uid, specs.map(_.column),
-          uTargetPairs, uHashShuffle, seed = 42L, tracker))
-        emSessions(df, uid, specs, trainingRules.map(BlockingRule.parse), Right(pairs),
-          lambda0, Tol, 25, linkRight)
-      } finally tracker.close()
-    }
+    val (uSampled, sessions) = emSessions(df, uid, specs,
+      trainingRules.map(BlockingRule.parse),
+      Right(uPairs.getOrElse(uSamplePairs(uSource, uid, specs.map(_.column),
+        uTargetPairs, uHashShuffle, seed = 42L))),
+      lambda0, Tol, 25, linkRight)
 
     val mEstimates = scala.collection.mutable.Map[String, List[Array[Double]]]()
     val uEstimates = scala.collection.mutable.Map[String, List[Array[Double]]](

@@ -273,7 +273,7 @@ class LinkageSpec extends SparkSpec {
     val tracker = new graft.util.CheckpointTracker(spark)
     try {
       val pairs = tracker.rotate(Estimation.uSamplePairs(df, "id", Seq("a", "b"), 200L,
-        hashShuffle = true, seed = 42L, tracker))
+        hashShuffle = true, seed = 42L))
       val uSeparate = Estimation.estimateUFromPairs(pairs, specs)
       assert(uSeparate.values.exists(_.exists(_ > 1e-9)))
       Seq(Seq("l.blk = r.blk", "(l.a = r.a) OR (l.blk = r.blk)", "l.a = r.a"), Seq("a&b"))
@@ -349,6 +349,125 @@ class LinkageSpec extends SparkSpec {
     val u2 = Estimation.estimateU(df, "id", spec, targetPairs = 500)
     assert(math.abs(u1("c")(2) - 0.25) < 0.1, u1("c").mkString(","))
     assert(u1("c").sameElements(u2("c")))
+  }
+
+  /** The distributed u-pair construction the driver builder replaced: sample, range
+    * sort, `zipWithIndex`, checkpoint and one `rn ↔ (rn + off) mod n` equi-join per
+    * offset.
+    */
+  private def distributedUPairs(df: org.apache.spark.sql.DataFrame, uid: String,
+      attrs: Seq[String], targetPairs: Long, hashShuffle: Boolean, seed: Long,
+      tracker: graft.util.CheckpointTracker): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val base = df.select(
+      (col(uid).cast("string").as("uid") +: attrs.map(a => col(a).cast("string").as(a))): _*)
+    val nAll = base.count()
+    val want = math.min(nAll, targetPairs + 1)
+    val sampled =
+      if (hashShuffle && nAll > 2 * want)
+        base.sample(withReplacement = false, math.min(1.0, 1.2 * want / nAll), seed)
+      else base
+    val projected =
+      if (hashShuffle) sampled.orderBy(xxhash64(col("uid"), lit(seed)))
+      else sampled.orderBy("uid")
+    val n = if (sampled eq base) nAll else projected.count()
+    val offsets = math.max(0L, math.min(n - 1, math.max(1L, targetPairs / math.max(n, 1L))))
+      .toInt
+    val indexed = tracker.rotate(spark.createDataFrame(
+      projected.rdd.zipWithIndex().map { case (row, idx) =>
+        org.apache.spark.sql.Row.fromSeq(row.toSeq :+ idx)
+      },
+      StructType(projected.schema.fields :+ StructField("rn", LongType))))
+    val l = indexed.select(
+      (col("rn") +: col("uid").as("uid_l") +: attrs.map(a => col(a).as(s"${a}_l"))): _*)
+    val r = indexed.select(
+      (col("rn").as("rn_r") +: col("uid").as("uid_r") +: attrs.map(a => col(a).as(s"${a}_r"))): _*)
+    val paired = (1 to math.max(offsets, 1)).map { off =>
+      l.withColumn("rn_r", pmod(col("rn") + lit(off.toLong), lit(n))).join(r, "rn_r")
+    }.reduce(_ unionByName _)
+    if (offsets > 0) paired else paired.limit(0)
+  }
+
+  test("u pairs built on the driver equal the distributed construction's multiset") {
+    val attrs = Seq("a", "b")
+    val cols = ("uid" +: attrs).flatMap(c => Seq(s"${c}_l", s"${c}_r")).sorted
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def table(n: Int) = (0 until n)
+      .map(i => (s"u$i", if (i % 7 == 0) null else s"a${i % 5}", s"b${i % 3}"))
+      .toDF("id", "a", "b").repartition(3)
+    // (rows, targetPairs): several offsets; one offset; a pool past the 2·(target+1)
+    // probe (sampled on the hashed path); a single row (no pairs)
+    val cases = Seq((50, 200L), (40, 30L), (2000, 100L), (1, 4L))
+    val tracker = new graft.util.CheckpointTracker(spark)
+    try {
+      for ((n, target) <- cases; hashShuffle <- Seq(true, false)) {
+        val df = table(n)
+        val expected = rows(distributedUPairs(df, "id", attrs, target, hashShuffle, 42L,
+          tracker))
+        val got = rows(Estimation.uSamplePairs(df, "id", attrs, target, hashShuffle, 42L))
+        assert(got === expected, s"n=$n target=$target hashShuffle=$hashShuffle")
+        if (n == 1) assert(got.isEmpty)
+        else assert(got.nonEmpty)
+      }
+    } finally tracker.close()
+  }
+
+  /** The E4–E8 expression pipeline the driver rule expansion replaced, per OR-size `n`
+    * and folded over 1..k.
+    */
+  private def expressionORRules(countMap: Map[String, (Long, Long)], k: Int)
+      : Set[(String, Long)] = {
+    import graft.functions._
+    val base = Seq((1, countMap.keys.toSeq.sorted)).toDF("id", "rules")
+    def generate(n: Int) = {
+      val partials = base
+        .select(generate_combinations(lit(n), col("rules")).as("combinations"), col("rules"))
+        .withColumn("partial_count", estimate_squared_count_or(col("combinations"), countMap))
+        .orderBy(desc("partial_count")).limit(1000)
+      val combinations =
+        if (n > 1) partials.select(generate_partial_combinations(lit(n - 2),
+          col("combinations"), col("rules")).as("combinations"))
+        else partials
+      combinations.distinct().select(
+          to_splink_rule(col("combinations")).as("splink_rule"),
+          estimate_squared_count_or(col("combinations"), countMap).as("rule_squared_count"))
+        .orderBy(col("rule_squared_count").desc).limit(1000)
+    }
+    (1 to k).map(generate).reduce(_ union _).distinct()
+      .as[(String, Long)].collect().toSet
+  }
+
+  test("driver rule expansion equals the expression pipeline, in a defined order") {
+    def ordered(rules: Seq[(String, Long)]) =
+      rules === rules.sortBy(t => (-t._2, t._1))
+    val oracle = Map("a" -> (10L, 100L), "b" -> (20L, 400L), "c" -> (5L, 25L))
+    val rnd = new scala.util.Random(7)
+    // 60 rules: C(60, 2) = 1770 OR-pairs, so the top-1000 beams cut
+    val wide = (0 until 60).map(i =>
+      f"r$i%02d" -> (1L + rnd.nextInt(1000000), 1L + rnd.nextInt(1000000))).toMap
+    val pairCosts = wide.keys.toSeq.combinations(2)
+      .map(c => graft.expressions.EstimateSquaredCountOR.estimate(c, wide)).toSeq
+      .sorted(Ordering.Long.reverse)
+    // the cut is unambiguous: no tie straddles the 1000th cost
+    assert(pairCosts.size > 1000 && pairCosts(999) != pairCosts(1000))
+    for ((map, k) <- Seq((Map.empty[String, (Long, Long)], 2), (oracle, 2), (wide, 2),
+        (oracle, 3))) {
+      val driver = RuleGen.orRules(map, k)
+      assert(driver.toSet === expressionORRules(map, k), s"${map.size} rules, k=$k")
+      assert(driver.distinct.size === driver.size && ordered(driver))
+      val frame = RuleGen.generateORRules(spark, map, k).as[(String, Long)].collect().toSeq
+      assert(frame === driver)
+    }
+    assert(RuleGen.orRules(Map.empty, 2).isEmpty)
+    assert(RuleGen.orRules(wide, 2).size === 60 + 1000)
+    assert(RuleGen.orRules(oracle, 2) === Seq(
+      "(l.b = r.b)" -> 400L, "(l.a = r.a)" -> 100L, "(l.c = r.c)" -> 25L,
+      "(l.a = r.a) OR (l.c = r.c)" -> -1750L, "(l.b = r.b) OR (l.c = r.c)" -> -7500L,
+      "(l.a = r.a) OR (l.b = r.b)" -> -34000L))
+    // equal costs order by rule text
+    assert(RuleGen.orRules(Map("y" -> (1L, 5L), "x" -> (1L, 5L)), 1) ===
+      Seq("(l.x = r.x)" -> 5L, "(l.y = r.y)" -> 5L))
   }
 
   test("rule generation end-to-end produces plausibly-ordered candidate rules") {
