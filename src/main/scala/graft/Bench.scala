@@ -203,15 +203,15 @@ object Bench {
       .toSeq.sortBy(_._1)
     // the retime prior comes from this core count's record: BENCH_FULL.json holds
     // whichever core count ran last
-    val priorPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", {
-      val perCpu = s"BENCH_FULL_c$cpus.json"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(perCpu))) perCpu
-      else "BENCH_FULL.json"
-    })
-    System.err.println(s"[bench] retime prior: $priorPath" +
-      (if (priorPath == "BENCH_FULL.json")
-        s" (no BENCH_FULL_c$cpus.json; its core count may differ from $cpus)"
-      else ""))
+    val (priorPath, priorNote) = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
+      .map(_ -> "")
+      .getOrElse {
+        val perCpu = s"BENCH_FULL_c$cpus.json"
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(perCpu))) perCpu -> ""
+        else "BENCH_FULL.json" ->
+          s" (no $perCpu; its core count may differ from $cpus)"
+      }
+    System.err.println(s"[bench] retime prior: $priorPath$priorNote")
     val prior = priorTimings(priorPath)
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {

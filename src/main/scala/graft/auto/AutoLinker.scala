@@ -42,6 +42,11 @@ import graft.train.Estimation
   * levenshtein threshold ∈ {1..5}, jaccard ∈ [0.7,0.99], jaro_winkler ∈ [0.7,0.99];
   * blocking rule drawn from the generated candidates (Y3) filtered by
   * `comparison_size_limit`.
+  *
+  * `uDeterministicOrder` pairs the u sample in uid order instead of the salted hash
+  * order, so a SQL oracle can reproduce it. It is for oracle tests on driver-sized
+  * inputs: the uid order pairs the whole table on the driver, and with
+  * `uTargetPairs = min(4N, 100000)` it rejects inputs of more than 200002 rows.
   */
 object AutoLinker {
 

@@ -136,10 +136,9 @@ object RuleGen {
       n: Int,
       k: Int,
       attributes: Seq[String],
-      seed: Long = 42L,
-      rowCount: Option[Long] = None): DataFrame = {
+      seed: Long = 42L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    blockingRules(df, n, k, attributes, seed, rowCount).toDF("splink_rule", "rule_squared_count")
+    blockingRules(df, n, k, attributes, seed).toDF("splink_rule", "rule_squared_count")
   }
 }

@@ -38,7 +38,9 @@ object Estimation {
     * so the ranking and pairing stay O(targetPairs) whatever the corpus size.
     *
     * @param hashShuffle disable only for oracle tests that need a SQL-reproducible order
-    *                    (uid order) at the cost of the adjacency bias above.
+    *                    (uid order) at the cost of the adjacency bias above; the uid
+    *                    order pairs the whole table on the driver, so it takes at most
+    *                    2·(targetPairs + 1) rows.
     */
   def estimateU(
       df: DataFrame,
@@ -60,8 +62,9 @@ object Estimation {
     * it is counted, seeded-sampled to ~1.2·(targetPairs+1) rows and the sample
     * collected. The collected rows are ranked by `xxhash64(uid, seed)`, evaluated by
     * Spark in the collecting projection (uids are unique, the sort stable). The
-    * `hashShuffle = false` oracle path collects the whole pool and ranks it by uid in
-    * Spark's string order, nulls first. Row `i` then pairs with row
+    * `hashShuffle = false` oracle path collects the whole pool through the same probe
+    * and ranks it by uid in Spark's string order, nulls first; it is for driver-sized
+    * inputs and rejects a pool past the probe. Row `i` then pairs with row
     * `(i + off) mod n` for `off = 1..offsets`; a single row has no partner.
     */
   def uSamplePairs(
@@ -77,15 +80,18 @@ object Estimation {
     val base = df.select(
       (col(uid).cast("string").as("uid") +:
         attrs.map(a => col(a).cast("string").as(a))): _*)
+    val want = targetPairs + 1
+    val cap = math.min(2 * want, Int.MaxValue - 1L).toInt
     val rows: IndexedSeq[Row] =
-      if (!hashShuffle)
-        base.collect().toIndexedSeq
+      if (!hashShuffle) {
+        val all = base.limit(cap + 1).collect()
+        require(all.length <= cap, s"uid-ordered u pairing (hashShuffle = false) pairs " +
+          s"the whole pool on the driver: it takes at most 2·(targetPairs + 1) = $cap rows")
+        all.toIndexedSeq
           .sortBy(r => Option(r.getString(0)))(Ordering.Option(graft.util.Utf8Order))
-      else {
+      } else {
         def ranked(d: DataFrame) = d.select(
           (xxhash64(col("uid"), lit(seed)).as("_rank") +: base.columns.map(col)): _*)
-        val want = targetPairs + 1
-        val cap = math.min(2 * want, Int.MaxValue - 1L).toInt
         val probe = ranked(base).limit(cap + 1).collect()
         val drawn =
           if (probe.length <= cap) probe
@@ -109,8 +115,10 @@ object Estimation {
   }
 
   /** [[uSamplePairs]] for callers that pass a checkpoint tracker: the builder holds
-    * no checkpoint of its own, so `tracker` is left untouched.
+    * no checkpoint of its own, so `tracker` is left untouched. Kept for linkbench's
+    * replay; it goes with that replay (ROADMAP item 2).
     */
+  @deprecated("tracker is unused; call the 6-argument form", "0.1.0")
   def uSamplePairs(
       df: DataFrame,
       uid: String,

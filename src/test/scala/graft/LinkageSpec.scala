@@ -397,18 +397,25 @@ class LinkageSpec extends SparkSpec {
       .map(i => (s"u$i", if (i % 7 == 0) null else s"a${i % 5}", s"b${i % 3}"))
       .toDF("id", "a", "b").repartition(3)
     // (rows, targetPairs): several offsets; one offset; a pool past the 2·(target+1)
-    // probe (sampled on the hashed path); a single row (no pairs)
+    // probe (sampled on the hashed path, rejected by the uid-ordered one); a single
+    // row (no pairs)
     val cases = Seq((50, 200L), (40, 30L), (2000, 100L), (1, 4L))
     val tracker = new graft.util.CheckpointTracker(spark)
     try {
       for ((n, target) <- cases; hashShuffle <- Seq(true, false)) {
         val df = table(n)
-        val expected = rows(distributedUPairs(df, "id", attrs, target, hashShuffle, 42L,
-          tracker))
-        val got = rows(Estimation.uSamplePairs(df, "id", attrs, target, hashShuffle, 42L))
-        assert(got === expected, s"n=$n target=$target hashShuffle=$hashShuffle")
-        if (n == 1) assert(got.isEmpty)
-        else assert(got.nonEmpty)
+        if (!hashShuffle && n > 2 * (target + 1)) {
+          val e = intercept[IllegalArgumentException](
+            Estimation.uSamplePairs(df, "id", attrs, target, hashShuffle, 42L))
+          assert(e.getMessage.contains("2·(targetPairs + 1) = 202 rows"))
+        } else {
+          val expected = rows(distributedUPairs(df, "id", attrs, target, hashShuffle, 42L,
+            tracker))
+          val got = rows(Estimation.uSamplePairs(df, "id", attrs, target, hashShuffle, 42L))
+          assert(got === expected, s"n=$n target=$target hashShuffle=$hashShuffle")
+          if (n == 1) assert(got.isEmpty)
+          else assert(got.nonEmpty)
+        }
       }
     } finally tracker.close()
   }
