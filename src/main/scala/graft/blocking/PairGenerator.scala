@@ -3,6 +3,8 @@ package graft.blocking
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.ref_lit
+
 /** J1 — candidate-pair generation from blocking rules (reference semantics: Splink 3.9.4
   * blocking, invoked with the rules ARC passes at autolinker.py:519-521,545).
   *
@@ -16,7 +18,9 @@ import org.apache.spark.sql.functions._
   * with AQE, shuffled-hash; a small side is broadcast by Catalyst automatically);
   * the final `dropDuplicates` is one more hash shuffle on the pair key. Attribute
   * columns are carried through the join (suffixed `_l`/`_r`) so downstream gamma
-  * computation needs no extra join back to the inputs.
+  * computation needs no extra join back to the inputs. The block key is a set of
+  * fixed-position key columns picked from the carried ones, so branches of the same
+  * width generate the same code whatever their columns.
   */
 object PairGenerator {
 
@@ -50,6 +54,17 @@ object PairGenerator {
     val lSide = side(left, "_l", pmod(xxhash64(col("uid_l")), lit(saltFactor)))
     val rSide = side(right.getOrElse(left), "_r",
       explode(array((0 until saltFactor).map(lit): _*)))
+    val out = (lSide.columns ++ rSide.columns).filterNot(_ == "_salt").map(col).toSeq
+    // a branch of width w joins on the key columns `_k0 … _k{w−1}`, each picked from
+    // the carried columns by an index the generated code reads by reference
+    // (`ref_lit`): the key projection, the join and its inferred not-null filters
+    // then compile to the same classes whatever the branch's columns, so a search
+    // over many blocking rules reuses them instead of compiling a set per column
+    def keyed(df: DataFrame, branch: Seq[String], suffix: String) =
+      df.select((col("*") +: branch.zipWithIndex.map { case (c, i) =>
+        elt((ref_lit(carried.indexOf(c) + 1) +:
+          carried.map(a => col(s"$a$suffix"))): _*).as(s"_k$i")
+      }): _*)
     // salted pair joins are EXPANSION joins (tiny inputs, huge output, the gamma
     // ladder pipelined into the join stage), so join parallelism IS scoring
     // parallelism. Left alone the planner broadcasts one tiny side and streams the
@@ -57,20 +72,17 @@ object PairGenerator {
     // sides hash-repartitioned on (block key, salt) to defaultParallelism — a
     // numbered repartition AQE never coalesces — and a merge-join hint so the join
     // reuses exactly those exchanges.
-    def spread(df: DataFrame, branch: Seq[String], suffix: String) =
+    def spread(df: DataFrame, keys: Seq[String]) =
       if (!salted) df
       else df.repartition(left.sparkSession.sparkContext.defaultParallelism,
-        (branch.map(c => col(s"$c$suffix")) :+ col("_salt")): _*)
+        keys.map(col): _*)
     val joined = rules.flatMap(_.branches).distinct.map { branch =>
-      val l = spread(lSide, branch, "_l").alias("l")
-      val r = spread(rSide, branch, "_r").alias("r")
-      val keys = branch.map(c => col(s"l.${c}_l") === col(s"r.${c}_r")) ++
-        (if (salted) Seq(col("l._salt") === col("r._salt")) else Nil)
-      val cond =
-        if (right.isEmpty) keys.reduce(_ && _) && col("l.uid_l") < col("r.uid_r")
-        else keys.reduce(_ && _)
-      if (salted) l.hint("merge").join(r, cond, "inner").drop("_salt")
-      else l.join(r, cond, "inner")
+      val keyNames = branch.indices.map(i => s"_k$i") ++ (if (salted) Seq("_salt") else Nil)
+      val l = spread(keyed(lSide, branch, "_l"), keyNames).alias("l")
+      val r = spread(keyed(rSide, branch, "_r"), keyNames).alias("r")
+      val keys = keyNames.map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+      val cond = if (right.isEmpty) keys && col("l.uid_l") < col("r.uid_r") else keys
+      (if (salted) l.hint("merge") else l).join(r, cond, "inner").select(out: _*)
     }
     // one equi-join branch cannot emit duplicate pairs, salted or not (the l-side
     // salt is a function of uid_l) — skip the dedup shuffle

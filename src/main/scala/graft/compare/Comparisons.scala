@@ -3,7 +3,9 @@ package graft.compare
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{char_set_jaccard, jaro_winkler}
+import org.apache.spark.sql.graftbridge.Bridge
+
+import graft.expressions.Gamma
 import graft.model.ComparisonSpec
 
 /** J2 — per-column comparison levels over candidate pairs.
@@ -13,28 +15,16 @@ import graft.model.ComparisonSpec
   *   gamma = -1 either side null; 2 exact equality; 1 similarity within threshold
   *   (levenshtein <= t, jaccard >= t, jaro_winkler >= t); 0 otherwise.
   *
-  * All three ladders are single codegen-friendly `when` chains over `<col>_l`/`<col>_r`
-  * — they run once per candidate pair, the hot path at scale, with no shuffle.
+  * Each ladder is one [[graft.expressions.Gamma]] expression over `<col>_l`/`<col>_r`
+  * — it runs once per candidate pair, the hot path at scale, with no shuffle. Its
+  * metric and threshold reach generated code by reference, so trials that differ only
+  * in their comparison settings share one compiled plan.
   */
 object Comparisons {
 
-  def gammaColumn(spec: ComparisonSpec): Column = {
-    val l = col(s"${spec.column}_l")
-    val r = col(s"${spec.column}_r")
-    val within: Column = spec.metric match {
-      // banded DP over plain chars, −1 beyond the threshold: `>= 0` ≡ `distance <= t`.
-      // Spark's built-in (2- and 3-arg) pays UTF8String code-point walks per DP cell —
-      // measured 3.4s → 0.9s on the 890k-pair y17 gamma scan at t=3.
-      case "levenshtein" =>
-        graft.functions.bounded_levenshtein(l, r, spec.threshold.toInt) >= lit(0)
-      case "jaccard" => char_set_jaccard(l, r) >= lit(spec.threshold)
-      case "jaro_winkler" => jaro_winkler(l, r) >= lit(spec.threshold)
-    }
-    when(l.isNull || r.isNull, lit(-1))
-      .when(l === r, lit(2))
-      .when(within, lit(1))
-      .otherwise(lit(0))
-  }
+  def gammaColumn(spec: ComparisonSpec): Column =
+    Bridge.column(Gamma(Bridge.expression(col(s"${spec.column}_l")),
+      Bridge.expression(col(s"${spec.column}_r")), spec.metric, spec.threshold))
 
   /** Appends `gamma_<col>` for every comparison spec. */
   def withGammas(pairs: DataFrame, specs: Seq[ComparisonSpec]): DataFrame =

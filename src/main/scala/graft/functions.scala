@@ -65,11 +65,17 @@ object functions {
     Bridge.column(JaroWinkler(Bridge.expression(left), Bridge.expression(right)))
 
   /** J2 — banded Levenshtein: exact distance when ≤ threshold, −1 otherwise
-    * (codegen-enabled; O(t·len) per pair — the gamma-ladder hot path).
+    * (codegen-enabled; O(t·len) per pair — the kernel of the Levenshtein gamma).
     */
   def bounded_levenshtein(left: Column, right: Column, threshold: Int): Column =
     Bridge.column(BoundedLevenshtein(
       Bridge.expression(left), Bridge.expression(right), threshold))
+
+  /** A constant that generated code reads by reference instead of inlining it
+    * ([[RefLiteral]]): plans that differ only in such constants share one compiled
+    * class.
+    */
+  def ref_lit(value: Any): Column = Bridge.column(RefLiteral.of(value))
 
   /** J2 — character-set Jaccard similarity (codegen-enabled; DuckDB `jaccard()` semantics). */
   def char_set_jaccard(left: Column, right: Column): Column =

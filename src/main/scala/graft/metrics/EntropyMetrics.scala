@@ -40,12 +40,30 @@ object EntropyMetrics {
   /** Y9 — number of distinct non-null values per attribute column, in one aggregation
     * pass (the reference runs one groupBy-count job per column, autolinker.py:597-602
     * — same numbers, fewer jobs). 0 marks a column with no non-null value.
+    *
+    * The columns are stacked into (column index, value) rows and deduplicated by one
+    * grouping, then counted per index. Several `countDistinct`s would take Spark's
+    * distinct-aggregate rewrite, whose Expand order changes from call to call, so each
+    * call would compile fresh classes. Values sit in one slot per distinct column
+    * type, so each column keeps its own type's equality (no cast to a common type).
     */
   def distinctCounts(df: DataFrame, attributes: Seq[String]): Map[String, Long] = {
     require(attributes.nonEmpty, "distinctCounts needs at least one attribute column")
-    val row = df.agg(countDistinct(col(attributes.head)).cast("long"),
-      attributes.tail.map(c => countDistinct(col(c)).cast("long")): _*).collect()(0)
-    attributes.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
+    val typeOf = df.select(attributes.map(col): _*).schema.fields.map(_.dataType)
+    val types = typeOf.distinct
+    val slots = types.indices.map(j => s"_v$j")
+    val stacked = array(attributes.indices.map { i =>
+      struct((lit(i).as("_i") +: types.indices.map { j =>
+        (if (types(j) == typeOf(i)) col(attributes(i)) else lit(null).cast(types(j)))
+          .as(slots(j))
+      }): _*)
+    }: _*)
+    val counts = df.select(explode(stacked).as("_s")).select("_s.*")
+      .filter(slots.map(col(_).isNotNull).reduce(_ || _))
+      .distinct()
+      .groupBy("_i").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    attributes.zipWithIndex.map { case (c, i) => c -> counts.getOrElse(i, 0L) }.toMap
   }
 
   /** Y9 — adjusted entropy base: max #distinct values in any attribute column. */

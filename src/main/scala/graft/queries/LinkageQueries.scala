@@ -349,8 +349,9 @@ object LinkageQueries {
   private def log2(x: Double): Double = math.log(x) / math.log(2.0)
   private def d(x: Double): String = graft.util.Render.sqlDouble(x)
 
-  /** gamma CASE ladder in DuckDB SQL mirroring [[Comparisons.gammaColumn]], over
-    * arbitrary lhs/rhs SQL expressions.
+  /** gamma CASE ladder in DuckDB SQL mirroring [[graft.expressions.Gamma]] (the
+    * expression [[Comparisons.gammaColumn]] builds), over arbitrary lhs/rhs SQL
+    * expressions.
     */
   private[queries] def gammaPairSql(l: String, r: String, spec: ComparisonSpec): String = {
     val within = spec.metric match {

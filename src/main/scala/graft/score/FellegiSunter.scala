@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.blocking.{BlockingRule, PairGenerator}
 import graft.compare.Comparisons
+import graft.functions.ref_lit
 import graft.model.{ColumnParams, ComparisonSpec, TrainedModel}
 
 /** J6 — Fellegi-Sunter match weight / probability as pure column arithmetic over the
@@ -14,9 +15,11 @@ import graft.model.{ColumnParams, ComparisonSpec, TrainedModel}
   *   match_weight = log2(λ/(1−λ)) + Σ_cols log2(m[γ]/u[γ])   (γ = -1 contributes 0)
   *   match_probability = 2^w / (1 + 2^w)
   *
-  * The per-level log2(m/u) Bayes factors are folded into literal `when` ladders on the
-  * driver, so the whole scorer is one codegen'd projection — no joins, no shuffles, no
-  * UDF on the pair hot path.
+  * The per-level log2(m/u) Bayes factors are folded into one array literal per column
+  * on the driver, so the whole scorer is one codegen'd projection — no joins, no
+  * shuffles, no UDF on the pair hot path. The arrays and the prior reach generated code
+  * by reference, so models that differ only in their parameters share one compiled
+  * plan.
   */
 object FellegiSunter {
 
@@ -40,10 +43,11 @@ object FellegiSunter {
 
   /** Appends `match_weight` and `match_probability` to a gamma'd pair DataFrame.
     * `p = 1/(1+2^−w)` (≡ 2^w/(1+2^w)) references the weight once, for the same
-    * anti-inlining reason as [[bayesFactor]].
+    * anti-inlining reason as [[bayesFactor]]. The prior log-odds is a [[ref_lit]]: a
+    * plain literal would be inlined into the generated source, one class per λ.
     */
   def score(pairsWithGammas: DataFrame, model: TrainedModel): DataFrame = {
-    val prior = lit(log2(model.lambda / (1.0 - model.lambda)))
+    val prior = ref_lit(log2(model.lambda / (1.0 - model.lambda)))
     val weight = model.comparisons
       .map(c => bayesFactor(c.column, model.params(c.column)))
       .foldLeft(prior)(_ + _)

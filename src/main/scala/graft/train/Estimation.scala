@@ -297,7 +297,7 @@ object Estimation {
     * aggregation over ALL spec columns; the u pairs, when given, ride along tagged
     * `_rule_idx = -1`.
     */
-  private def patternTable(
+  private[graft] def patternTable(
       df: DataFrame,
       uid: String,
       specs: Seq[ComparisonSpec],

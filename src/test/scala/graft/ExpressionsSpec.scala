@@ -211,6 +211,70 @@ class ExpressionsSpec extends SparkSpec {
     assert(mismatches === 0)
   }
 
+  test("gamma matches the when ladder under interpreted and generated evaluation") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.expressions.{CharSetJaccard, Gamma, RefLiteral}
+    val l = BoundReference(0, StringType, nullable = true)
+    val r = BoundReference(1, StringType, nullable = true)
+    // the ladder as `when` chains over the similarity kernels, as gammas were built
+    // before they became one expression
+    def ladder(metric: String, t: Double): Expression = {
+      val within = metric match {
+        case "levenshtein" => GreaterThanOrEqual(BoundedLevenshtein(l, r, t.toInt), Literal(0))
+        case "jaccard" => GreaterThanOrEqual(CharSetJaccard(l, r), Literal(t))
+        case "jaro_winkler" => GreaterThanOrEqual(JaroWinkler(l, r), Literal(t))
+      }
+      CaseWhen(Seq(Or(IsNull(l), IsNull(r)) -> Literal(-1), EqualTo(l, r) -> Literal(2),
+        within -> Literal(1)), Literal(0))
+    }
+    def generated(e: Expression, row: InternalRow): Int =
+      GenerateUnsafeProjection.generate(Seq(e)).apply(row).getInt(0)
+    // each metric exactly at its threshold for ("kitten", "sitting") and one step
+    // either side: Levenshtein distance 3, character-set Jaccard 4/7, Jaro-Winkler
+    val jac = CharSetJaccard.similarity("kitten", "sitting")
+    val jw = JaroWinkler.similarity("kitten", "sitting")
+    val specs = Seq(2.0, 3.0, 4.0, 3.7).map("levenshtein" -> _) ++
+      Seq(math.nextDown(jac), jac, math.nextUp(jac), 0.7).map("jaccard" -> _) ++
+      Seq(math.nextDown(jw), jw, math.nextUp(jw), 0.7).map("jaro_winkler" -> _)
+    val inputs = Seq(
+      ("kitten", "sitting"), (null, "a"), ("a", null), (null, null), ("same", "same"),
+      ("", ""), ("", "a"), ("a", ""), ("a\uD83D\uDE00b", "a\uD83D\uDE00c"),
+      ("\uD83D\uDE00", "\uD83D\uDE01"), ("martha", "marhta"), ("abc", "xyz"))
+    val levels = for ((metric, t) <- specs; (a, b) <- inputs) yield {
+      val row = InternalRow(UTF8String.fromString(a), UTF8String.fromString(b))
+      val g = Gamma(l, r, metric, t)
+      val want = ladder(metric, t).eval(row)
+      assert(g.eval(row) === want, s"interpreted $metric $t ($a, $b)")
+      assert(generated(g, row) === want, s"generated $metric $t ($a, $b)")
+      assert(generated(ladder(metric, t), row) === want, s"ladder $metric $t ($a, $b)")
+      (metric, t, a, b) -> want
+    }
+    val byCase = levels.toMap
+    // at the threshold is within it; a step past it is not
+    assert(byCase(("levenshtein", 3.0, "kitten", "sitting")) === 1)
+    assert(byCase(("levenshtein", 2.0, "kitten", "sitting")) === 0)
+    assert(byCase(("jaccard", jac, "kitten", "sitting")) === 1)
+    assert(byCase(("jaccard", math.nextUp(jac), "kitten", "sitting")) === 0)
+    assert(byCase(("jaro_winkler", jw, "kitten", "sitting")) === 1)
+    assert(byCase(("jaro_winkler", math.nextUp(jw), "kitten", "sitting")) === 0)
+    assert(byCase(("levenshtein", 3.0, null, "a")) === -1)
+    assert(byCase(("jaccard", 0.7, "", "")) === 2)
+    // a non-BMP character is one Levenshtein step
+    assert(byCase(("levenshtein", 2.0, "\uD83D\uDE00", "\uD83D\uDE01")) === 1)
+    // the parameter leaf: the value under both evaluations
+    Seq(RefLiteral.of(0.25), RefLiteral.of(7), RefLiteral.of("x")).foreach { p =>
+      val generatedValue = GenerateUnsafeProjection.generate(Seq(p)).apply(InternalRow.empty)
+      assert(generatedValue.get(0, p.dataType) === p.eval(InternalRow.empty))
+      assert(!p.foldable && p.eval(InternalRow.empty) === Literal(p.value, p.dataType).value)
+    }
+    assert(RefLiteral.of(0.25).dataType === DoubleType && RefLiteral.of(7).dataType === IntegerType)
+    intercept[IllegalArgumentException](Gamma(l, r, "soundex", 1.0))
+  }
+
   test("token jaccard") {
     assert(TokenSetJaccard.similarity("a b c", "b c d") === 2.0 / 4.0)
     assert(TokenSetJaccard.similarity("a a b", "a b") === 1.0)

@@ -161,6 +161,44 @@ class LinkageSpec extends SparkSpec {
     assert(math.abs(out(0)._2 - math.pow(2, w0) / (1 + math.pow(2, w0))) < 1e-12)
   }
 
+  test("generated code does not depend on trial parameters") {
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    val people = Seq(
+      ("1", "anna", "smith", "york"), ("2", "ana", "smith", "yorke"),
+      ("3", "bert", "jones", "leeds"), ("4", "bert", "jonas", "leeds"),
+      ("5", "cara", null, "bath")).toDF("id", "first", "last", "city")
+    val left = people.filter(col("id") <= "3")
+    val right = people.filter(col("id") > "2")
+    // the whole-stage sources of the executed (adaptive) plan, with the per-plan
+    // stage ids normalized
+    def sources(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      df.collect()
+      codegenStringSeq(df.queryExecution.executedPlan)
+        .map(_._2.replaceAll("CodegenStage\\d+", "CodegenStage"))
+    }
+    // two trials: other thresholds, metrics, λ, m/u and a single-column blocking rule
+    // on another column
+    val trials = Seq(
+      (Seq(ComparisonSpec("first", "levenshtein", 2), ComparisonSpec("last", "jaro_winkler", 0.9),
+        ComparisonSpec("city", "jaccard", 0.8)), 0.01, "l.first = r.first", "first&last"),
+      (Seq(ComparisonSpec("first", "jaccard", 0.75), ComparisonSpec("last", "levenshtein", 1),
+        ComparisonSpec("city", "jaro_winkler", 0.85)), 0.2, "l.city = r.city", "last&city"))
+    val uPairs = Estimation.uSamplePairs(people, "id", Seq("first", "last", "city"), 10L,
+      hashShuffle = true, seed = 42L)
+    val plans = trials.zipWithIndex.map { case ((specs, lambda, rule, training), k) =>
+      val params = specs.map(s => s.column ->
+        ColumnParams(Array(0.1, 0.2, 0.7).map(_ + k * 0.01), Array(0.8, 0.15, 0.05))).toMap
+      val model = TrainedModel(lambda, specs, params, Seq(rule))
+      val predictions = FellegiSunter.predict(left, "id", model, right = Some(right))
+      val patterns = Estimation.patternTable(left, "id", specs,
+        Seq(BlockingRule.parse(training)), Seq(0), Some(uPairs), Some(right))
+      (sources(predictions), sources(patterns))
+    }
+    assert(plans(0)._1.nonEmpty && plans(0)._2.nonEmpty)
+    assert(plans(0)._1 === plans(1)._1, "predict")
+    assert(plans(0)._2 === plans(1)._2, "EM pattern pass")
+  }
+
   test("clusterStats: chain density, duplicate-edge canonicalization, singleton") {
     import graft.cluster.ConnectedComponents
     val recs = Seq("a", "b", "c", "d", "e", "f").toDF("uid")
