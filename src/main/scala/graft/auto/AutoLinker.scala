@@ -320,10 +320,57 @@ object AutoLinker {
     (1 to nTrials).map(_ => drawTrial(rnd, attrs, ruleChoices, Seq.empty, "tpe"))
   }
 
-  /** The trial loop shared by dedupe and link mode: set up (row count, candidate
-    * rules, the Y9 adjusted base, the u pairs) → per trial draw params → train →
+  /** The search's data-dependent setup: the row count N, each attribute's number of
+    * distinct non-null values (Y9) and the u pairs ([[Estimation.uSamplePairs]] at
+    * `targetPairs = min(4N, 100000)`), read from `records`, the cached table of every
+    * record. The u pool holds the same records, so one bounded probe of it,
+    * [[Estimation.uPoolProbe]] at [[Estimation.uPoolCap]]`(100000)` rows, serves all
+    * three: within the cap it holds every record, and N, the distinct counts and the
+    * pairing come from its rows on the driver. It is the probe the u pairing would
+    * read: for any N within it the pairing's own cap, 2·(min(4N, 100000) + 1), is at
+    * least N, and past it the caps are equal. Past the cap the table is counted, the
+    * distinct counts aggregated ([[EntropyMetrics.distinctCounts]]) and the pool
+    * sampled.
+    *
+    * @param cap tests pass 0 to force the distributed path
+    */
+  private[graft] def searchSetup(
+      records: DataFrame,
+      uidCol: String,
+      attrs: Seq[String],
+      hashShuffle: Boolean,
+      cap: Int = Estimation.uPoolCap(MaxUPairs)): Setup = {
+    val probe = Estimation.uPoolProbe(records, uidCol, attrs, USeed, cap).collect()
+    val local = probe.length <= cap
+    val nRows = if (local) probe.length.toLong else records.count()
+    // λ0 = 1/N: an empty input has no prior and nothing to link
+    require(nRows > 0, "auto-link needs at least one input row")
+    val uTargetPairs = math.min(nRows * 4, MaxUPairs)
+    def uPairs = Estimation.uPairsFromProbe(records, uidCol, attrs, probe, cap,
+      uTargetPairs, hashShuffle, USeed, Some(nRows))
+    if (local) {
+      // probe rows: _rank, uid, then the attributes as strings
+      val distinct = attrs.indices.map { i =>
+        attrs(i) -> probe.iterator.map(_.getString(2 + i)).filter(_ != null).toSet.size.toLong
+      }.toMap
+      Setup(nRows, distinct, uPairs)
+    } else onDriverThreads(2) { implicit ec =>
+      val distinct = Future(EntropyMetrics.distinctCounts(records, attrs))
+      val pairs = Future(uPairs)
+      Setup(nRows, await(distinct), await(pairs))
+    }
+  }
+
+  private[graft] case class Setup(nRows: Long, distinct: Map[String, Long], uPairs: DataFrame)
+
+  private val MaxUPairs = 100000L
+  private val USeed = 42L
+
+  /** The trial loop shared by dedupe and link mode: set up ([[searchSetup]], then the
+    * candidate rules and the Y9 adjusted base) → per trial draw params → train →
     * predict → cluster → unsupervised metric (+ supervised metrics when a label is
-    * given). `clusterBase` holds every record (the union of both tables in link mode).
+    * given). `clusterBase` holds every record (the union of both tables in link mode),
+    * cached.
     */
   private def runSearch(
       trainDf: DataFrame,
@@ -340,28 +387,22 @@ object AutoLinker {
       trueLabelCol: Option[String],
       uDeterministicOrder: Boolean): Result = {
 
-    val nRows = clusterBase.count()
-    // λ0 = 1/N: an empty input has no prior and nothing to link
-    require(nRows > 0, "auto-link needs at least one input row")
-    val uTargetPairs = math.min(nRows * 4, 100000L)
+    val Setup(nRows, distinct, uPairsLocal) =
+      searchSetup(clusterBase, uidCol, attrs, hashShuffle = !uDeterministicOrder)
     val rnd = new Random(seed)
     var best: Option[(Trial, DataFrame, DataFrame)] = None
     val past = scala.collection.mutable.ArrayBuffer[Trial]()
     val tracker = new graft.util.CheckpointTracker(trainDf.sparkSession)
     try {
-    // The three setup stages read only the counted, cached input and not each
-    // other, so they overlap on driver threads (one after another they left cores
-    // idle). The u pair table is spec-independent: built on the driver and
-    // checkpointed once for the whole search, so each trial's u counts read
-    // ~uTargetPairs checkpointed rows.
-    val (rules, distinct, uPairs) = onDriverThreads(3) { implicit ec =>
+    // rule generation reads the cached input, the u pairs' checkpoint only the
+    // driver-built table: they overlap on driver threads. The u pair table is
+    // spec-independent: checkpointed once for the whole search, so each trial's u
+    // counts read at most 100000 checkpointed pairs.
+    val (rules, uPairs) = onDriverThreads(2) { implicit ec =>
       val rules = Future(candidateRuleOverride.getOrElse(
         candidateRules(clusterBase, nRows, attrs, comparisonSizeLimit, seed)))
-      val distinct = Future(EntropyMetrics.distinctCounts(clusterBase, attrs))
-      val pairs = Future(tracker.rotate(Estimation.uSamplePairs(
-        PairGenerator.recordPool(trainDf, linkRight), uidCol, attrs, uTargetPairs,
-        hashShuffle = !uDeterministicOrder, seed = 42L)))
-      (await(rules), await(distinct), await(pairs))
+      val pairs = Future(tracker.rotate(uPairsLocal))
+      (await(rules), await(pairs))
     }
     val adjustedBase = distinct.values.max.toInt
     // a rule on a column without a non-null value pairs nothing (SQL `=` never
@@ -381,7 +422,7 @@ object AutoLinker {
     def runTrial(specs: Seq[ComparisonSpec], rule: String, trainingRules: Seq[String])
         : (Trial, DataFrame, DataFrame) = {
       val model = Estimation.train(trainDf, uidCol, specs, Seq(rule), trainingRules,
-        uTargetPairs = uTargetPairs, linkRight = linkRight, uPairs = Some(uPairs),
+        linkRight = linkRight, uPairs = Some(uPairs),
         nRows = Some(nRows))
       val predictions = FellegiSunter.predict(trainDf, uidCol, model, right = linkRight)
       val (clusters, metric) = clusterAndScore(clusterBase, uidCol, predictions,

@@ -47,8 +47,7 @@ object PairGenerator {
     val salted = saltFactor > 1
     val carried = (attributes ++ rules.flatMap(_.columns)).distinct
     def side(df: DataFrame, suffix: String, salt: Column) = {
-      val projected = df.select((col(uid).cast("string").as(s"uid$suffix") +:
-        carried.map(a => col(a).cast("string").as(s"$a$suffix"))): _*)
+      val projected = carriedSide(df, uid, carried, suffix)
       if (salted) projected.withColumn("_salt", salt) else projected
     }
     val lSide = side(left, "_l", pmod(xxhash64(col("uid_l")), lit(saltFactor)))
@@ -89,6 +88,57 @@ object PairGenerator {
     if (joined.size == 1) joined.head
     else joined.reduce(_ unionByName _).dropDuplicates("uid_l", "uid_r")
   }
+
+  /** The candidate pairs of several rules at once, each tagged with its rule's
+    * `_rule_idx`: the `(_rule_idx, rule)` pairs of `rules` give the tags. Output
+    * columns: `_rule_idx`, then [[pairs]]' columns for `attributes`. A pair counts
+    * once per rule that blocks it: pairs two OR branches of one rule both block are
+    * kept once, pairs two rules block once per rule.
+    *
+    * One join per key width: each side is exploded once per (rule, branch) of that
+    * width, into the branch's tag `_b` and its key columns `_k0 … _k{w−1}`, and the
+    * sides join on them. The (tag, rule, key column) table reaches generated code by
+    * reference ([[ref_lit]]), so batches of the same widths compile to the same
+    * classes whatever their rules.
+    */
+  def rulePairs(
+      left: DataFrame,
+      right: Option[DataFrame],
+      uid: String,
+      attributes: Seq[String],
+      rules: Seq[(Int, BlockingRule)]): DataFrame = {
+    val carried = (attributes ++ rules.flatMap(_._2.columns)).distinct
+    val branches = rules.flatMap { case (i, r) => r.branches.distinct.map(i -> _) }
+    val lSide = carriedSide(left, uid, carried, "_l")
+    val rSide = carriedSide(right.getOrElse(left), uid, carried, "_r")
+    val out = col("l._rule_idx") +: (lSide.columns ++ rSide.columns).toSeq.map(col)
+    val joined = branches.indices.groupBy(b => branches(b)._2.size).toSeq.sortBy(_._1)
+      .map { case (w, bs) =>
+        // one row per branch of width w: its tag, its rule, its key column indices
+        val table = ref_lit(bs.map(b => (Seq(b, branches(b)._1) ++
+          branches(b)._2.map(c => carried.indexOf(c) + 1)).toArray).toArray)
+        def keyed(df: DataFrame, suffix: String) = {
+          val e = df.select(col("*"), explode(table).as("_e"))
+          e.select((df.columns.map(col) ++ Seq(col("_e")(0).as("_b"),
+            col("_e")(1).as("_rule_idx")) ++ (0 until w).map(j =>
+            elt((col("_e")(2 + j) +: carried.map(a => col(s"$a$suffix"))): _*)
+              .as(s"_k$j"))).toSeq: _*)
+        }
+        val keys = ("_b" +: (0 until w).map(j => s"_k$j"))
+          .map(k => col(s"l.$k") === col(s"r.$k")).reduce(_ && _)
+        val cond = if (right.isEmpty) keys && col("l.uid_l") < col("r.uid_r") else keys
+        keyed(lSide, "_l").alias("l").join(keyed(rSide, "_r").alias("r"), cond)
+          .select(out: _*)
+      }
+    val all = joined.reduce(_ unionByName _)
+    if (rules.forall(_._2.branches.distinct.size == 1)) all
+    else all.dropDuplicates("_rule_idx", "uid_l", "uid_r")
+  }
+
+  /** One side of a pair join: the uid and the carried columns as strings, suffixed. */
+  private def carriedSide(df: DataFrame, uid: String, carried: Seq[String], suffix: String) =
+    df.select((col(uid).cast("string").as(s"uid$suffix") +:
+      carried.map(a => col(a).cast("string").as(s"$a$suffix"))): _*)
 
   /** Dedupe-mode [[pairs]]. */
   def dedupePairs(df: DataFrame, uid: String, attributes: Seq[String],

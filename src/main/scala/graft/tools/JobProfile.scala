@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * callsite) and a one-line summary (wall, rows, jobs, stages, task-s; the gap
   * between wall and task-s over cores is scheduler/launch overhead; `compiles` and
   * `compile-s` are the whole-stage codegen classes compiled during the run and their
-  * compile seconds, JVM-wide); run 2+ is JIT-warm.
+  * compile seconds, JVM-wide; `cache_entries` is the codegen cache's entry count
+  * after the run, out of `spark.sql.codegen.cache.maxEntries`); run 2+ is JIT-warm.
   */
 object JobProfile {
 
@@ -74,6 +75,7 @@ object JobProfile {
       val wall = (System.nanoTime() - t0) / 1e9
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
+      val cacheEntries = org.apache.spark.sql.graftbridge.Bridge.codegenCacheEntries
       graft.util.Caching.releaseAll()
       spark.sqlContext.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
@@ -88,7 +90,7 @@ object JobProfile {
       val taskS = js.map(_.taskMs).sum / 1000.0
       System.err.println(f"[jobprofile] $name run $r: $wall%.3f s wall, rows=$rows " +
         f"jobs=${js.size} stages=${stages.get} task-s=$taskS%.2f " +
-        f"compiles=$compiles compile-s=$compileS%.2f")
+        f"compiles=$compiles cache_entries=$cacheEntries compile-s=$compileS%.2f")
       js.foreach { j =>
         val w = (j.ended - j.started).toDouble / 1000
         System.err.println(f"[jobprofile]   job ${j.id}%4d ${w}%7.3f s wall ${j.taskMs / 1000.0}%8.2f task-s ${j.tasks}%5d tasks  ${j.site}")

@@ -33,9 +33,10 @@ object Estimation {
     * Rows are ranked by a salted hash of the uid (a deterministic shuffle — adjacent
     * rows of sorted input files are correlated, and pairing them would inflate u with
     * true matches), then row `i` is paired with rows `i+offset (mod N)` for
-    * `offset = 1..ceil(targetPairs/N)` — reproducible and uniformly spread. Tables
-    * larger than ~2·targetPairs are seeded-sampled down to ~targetPairs rows first,
-    * so the ranking and pairing stay O(targetPairs) whatever the corpus size.
+    * `offset = 1..max(1, floor(targetPairs/N))` (at most N − 1) — reproducible and
+    * uniformly spread. Tables larger than ~2·targetPairs are seeded-sampled down to
+    * ~targetPairs rows first, so the ranking and pairing stay O(targetPairs) whatever
+    * the corpus size.
     *
     * @param hashShuffle disable only for oracle tests that need a SQL-reproducible order
     *                    (uid order) at the cost of the adjacency bias above; the uid
@@ -57,15 +58,8 @@ object Estimation {
     * as one local table. Build ONCE and reuse across trials whose comparison specs
     * differ — it depends only on (data, uid, targetPairs, seed).
     *
-    * The work is driver-sized, so it runs on the driver. One bounded probe,
-    * `limit(2·(targetPairs+1)+1)`, reads the pool without a count; only a pool past
-    * it is counted, seeded-sampled to ~1.2·(targetPairs+1) rows and the sample
-    * collected. The collected rows are ranked by `xxhash64(uid, seed)`, evaluated by
-    * Spark in the collecting projection (uids are unique, the sort stable). The
-    * `hashShuffle = false` oracle path collects the whole pool through the same probe
-    * and ranks it by uid in Spark's string order, nulls first; it is for driver-sized
-    * inputs and rejects a pool past the probe. Row `i` then pairs with row
-    * `(i + off) mod n` for `off = 1..offsets`; a single row has no partner.
+    * The work is driver-sized, so it runs on the driver: [[uPoolProbe]] reads the
+    * pool at [[uPoolCap]]`(targetPairs)` rows, and [[uPairsFromProbe]] pairs it.
     */
   def uSamplePairs(
       df: DataFrame,
@@ -74,34 +68,75 @@ object Estimation {
       targetPairs: Long,
       hashShuffle: Boolean,
       seed: Long): DataFrame = {
+    val cap = uPoolCap(targetPairs)
+    uPairsFromProbe(df, uid, attrs, uPoolProbe(df, uid, attrs, seed, cap).collect(), cap,
+      targetPairs, hashShuffle, seed)
+  }
+
+  /** The rows u pairing reads in full: 2·(targetPairs + 1). */
+  private[graft] def uPoolCap(targetPairs: Long): Int =
+    math.min(2 * (targetPairs + 1), Int.MaxValue - 1L).toInt
+
+  /** The u pool as [[uPairsFromProbe]] reads it: `_rank = xxhash64(uid, seed)`, then
+    * the uid and `attrs` as strings.
+    */
+  private def uPool(df: DataFrame, uid: String, attrs: Seq[String], seed: Long)
+      : DataFrame = {
+    val base = df.select((col(uid).cast("string").as("uid") +:
+      attrs.map(a => col(a).cast("string").as(a))): _*)
+    base.select((xxhash64(col("uid"), lit(seed)).as("_rank") +: base.columns.map(col)): _*)
+  }
+
+  /** The u pool's bounded probe: at most `cap + 1` rows of [[uPool]], one collect with
+    * no count. The limit runs as the collect, outside generated code, as long as `df`
+    * is not a union (Spark pushes a limit into a union's branches, and a pushed
+    * limit's generated code carries a counter name unique to the plan): read a
+    * union's records from its cached table.
+    */
+  private[graft] def uPoolProbe(
+      df: DataFrame,
+      uid: String,
+      attrs: Seq[String],
+      seed: Long,
+      cap: Int): DataFrame =
+    uPool(df, uid, attrs, seed).limit(cap + 1)
+
+  /** [[uSamplePairs]] from the collected [[uPoolProbe]] of `df` at `cap`. A probe
+    * within the cap is the whole pool. A pool past it is counted (unless `count` is
+    * given), seeded-sampled to ~1.2·(targetPairs+1) rows and the sample collected.
+    * The rows are ranked by `_rank` (uids are unique, the sort stable). The
+    * `hashShuffle = false` oracle path ranks the whole pool by uid in Spark's string
+    * order, nulls first; it is for driver-sized inputs and rejects a pool past the
+    * probe. Row `i` then pairs with row `(i + off) mod n` for `off = 1..offsets`; a
+    * single row has no partner.
+    */
+  private[graft] def uPairsFromProbe(
+      df: DataFrame,
+      uid: String,
+      attrs: Seq[String],
+      probe: Array[org.apache.spark.sql.Row],
+      cap: Int,
+      targetPairs: Long,
+      hashShuffle: Boolean,
+      seed: Long,
+      count: Option[Long] = None): DataFrame = {
     val spark = df.sparkSession
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val base = df.select(
-      (col(uid).cast("string").as("uid") +:
-        attrs.map(a => col(a).cast("string").as(a))): _*)
-    val want = targetPairs + 1
-    val cap = math.min(2 * want, Int.MaxValue - 1L).toInt
-    val rows: IndexedSeq[Row] =
-      if (!hashShuffle) {
-        val all = base.limit(cap + 1).collect()
-        require(all.length <= cap, s"uid-ordered u pairing (hashShuffle = false) pairs " +
-          s"the whole pool on the driver: it takes at most 2·(targetPairs + 1) = $cap rows")
-        all.toIndexedSeq
-          .sortBy(r => Option(r.getString(0)))(Ordering.Option(graft.util.Utf8Order))
-      } else {
-        def ranked(d: DataFrame) = d.select(
-          (xxhash64(col("uid"), lit(seed)).as("_rank") +: base.columns.map(col)): _*)
-        val probe = ranked(base).limit(cap + 1).collect()
-        val drawn =
-          if (probe.length <= cap) probe
-          else {
-            val nAll = base.count()
-            ranked(base.sample(withReplacement = false, math.min(1.0, 1.2 * want / nAll),
-              seed)).collect()
-          }
-        drawn.toIndexedSeq.sortBy(_.getLong(0)).map(r => Row.fromSeq(r.toSeq.tail))
+    val drawn =
+      if (probe.length <= cap) probe
+      else {
+        require(hashShuffle, s"uid-ordered u pairing (hashShuffle = false) pairs the " +
+          s"whole pool on the driver: it takes at most 2·(targetPairs + 1) = $cap rows")
+        val nAll = count.getOrElse(df.count())
+        val fraction = math.min(1.0, 1.2 * (targetPairs + 1) / nAll)
+        uPool(df.sample(withReplacement = false, fraction, seed), uid, attrs, seed).collect()
       }
+    val rows: IndexedSeq[Row] =
+      (if (hashShuffle) drawn.toIndexedSeq.sortBy(_.getLong(0))
+       else drawn.toIndexedSeq
+         .sortBy(r => Option(r.getString(1)))(Ordering.Option(graft.util.Utf8Order)))
+        .map(r => Row.fromSeq(r.toSeq.tail))
     val n = rows.length.toLong
     // a single row has no partner: 0 offsets (offset 1 mod 1 would pair it with itself)
     val offsets = math.max(0L, math.min(n - 1, math.max(1L, targetPairs / math.max(n, 1L))))
@@ -293,9 +328,9 @@ object Estimation {
   }
 
   /** The tagged agreement-pattern table of the `active` rules in one Spark pass:
-    * each rule's pairs carry its index as `_rule_idx` through a single unioned gamma
-    * aggregation over ALL spec columns; the u pairs, when given, ride along tagged
-    * `_rule_idx = -1`.
+    * the rules' pairs come from one join ([[PairGenerator.rulePairs]]) keyed by the
+    * rule index `_rule_idx`, and feed a single gamma aggregation over ALL spec
+    * columns; the u pairs, when given, ride along tagged `_rule_idx = -1`.
     */
   private[graft] def patternTable(
       df: DataFrame,
@@ -307,10 +342,10 @@ object Estimation {
       linkRight: Option[DataFrame]): DataFrame = {
     // the gamma ladders read only the compared columns' two sides
     val sides = specs.flatMap(s => Seq(col(s"${s.column}_l"), col(s"${s.column}_r")))
-    def tag(pairs: DataFrame, i: Int) = pairs.select((lit(i).as("_rule_idx") +: sides): _*)
-    val tagged = active.map { i =>
-      tag(PairGenerator.pairs(df, linkRight, uid, specs.map(_.column), Seq(rules(i))), i)
-    } ++ uPairs.map(tag(_, URows))
+    val tagged = Some(active).filter(_.nonEmpty).map(a => PairGenerator.rulePairs(df,
+        linkRight, uid, specs.map(_.column), a.map(i => i -> rules(i)))
+      .select((col("_rule_idx") +: sides): _*)).toSeq ++
+      uPairs.map(_.select((lit(URows).as("_rule_idx") +: sides): _*))
     val gammaCols = specs.map(s => col(s"gamma_${s.column}"))
     Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
       .groupBy((col("_rule_idx") +: gammaCols): _*)
@@ -459,7 +494,7 @@ object Estimation {
     * ([[emSessions]]), so u costs no Spark pass of its own.
     *
     * `linkRight` switches to link mode (Splink link_only): u pairs come from
-    * [[PairGenerator.recordPool]], EM pairs from [[PairGenerator.pairs]].
+    * [[PairGenerator.recordPool]], EM pairs from [[PairGenerator.rulePairs]].
     */
   def train(
       df: DataFrame,

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Spark 4 removed the public `new Column(Expression)` constructor; Column now
@@ -51,6 +52,21 @@ object Bridge {
   def checkpointedRddIds(df: org.apache.spark.sql.DataFrame): Set[Int] = {
     import org.apache.spark.sql.execution.LogicalRDD
     df.queryExecution.logical.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+  }
+
+  /** The live entry count of Spark's JVM-wide codegen cache (`CodeGenerator.cache`, a
+    * private field, read by reflection). It holds `spark.sql.codegen.cache.maxEntries`
+    * classes (100 by default), so a working set near that size evicts its own plans.
+    */
+  def codegenCacheEntries: Long = {
+    val cache = CodegenCache.invoke(CodeGenerator)
+    cache.asInstanceOf[org.apache.spark.util.NonFateSharingCache[_, _]].size
+  }
+
+  private lazy val CodegenCache = {
+    val m = CodeGenerator.getClass.getDeclaredMethod("cache")
+    m.setAccessible(true)
+    m
   }
 
   /** Register a SQL function on a LIVE session (`sessionState` is `private[sql]`;

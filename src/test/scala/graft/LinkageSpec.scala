@@ -197,6 +197,29 @@ class LinkageSpec extends SparkSpec {
     assert(plans(0)._1.nonEmpty && plans(0)._2.nonEmpty)
     assert(plans(0)._1 === plans(1)._1, "predict")
     assert(plans(0)._2 === plans(1)._2, "EM pattern pass")
+
+    // the one-join EM pattern pass of two different sets of three training rules
+    val specs = trials.head._1
+    val ruleSets = Seq(Seq("first&last", "last&city", "first&city"),
+      Seq("city&last", "first&city", "last&first"))
+    val ruleSources = ruleSets.map(rules => sources(Estimation.patternTable(left, "id", specs,
+      rules.map(BlockingRule.parse), rules.indices, Some(uPairs), Some(right))))
+    assert(ruleSources(0).nonEmpty)
+    assert(ruleSources(0) === ruleSources(1), "EM pattern pass over three training rules")
+
+    // the link-mode setup probes, built twice: the u pool over the cached union of the
+    // two tables and the schema match's value probe over the raw tables. A limit
+    // pushed into a union's branches would name its counter by a JVM-wide id.
+    val records = left.unionByName(right).cache()
+    val probes = (1 to 2).map(_ => (
+      sources(Estimation.uPoolProbe(records, "id", Seq("first", "last", "city"), 42L,
+        Estimation.uPoolCap(100000L))),
+      sources(graft.schemamatch.SchemaMatch.valueProbe(left, right, Seq("first", "last"),
+        Seq("last", "city"), 10))))
+    records.unpersist()
+    assert(probes(0)._1.nonEmpty && probes(0)._2.nonEmpty)
+    assert(probes(0)._1 === probes(1)._1, "u pool probe")
+    assert(probes(0)._2 === probes(1)._2, "schema match value probe")
   }
 
   test("clusterStats: chain density, duplicate-edge canonicalization, singleton") {
@@ -328,6 +351,50 @@ class LinkageSpec extends SparkSpec {
     } finally tracker.close()
   }
 
+  test("one-join pattern table equals the per-rule union it replaced, both modes") {
+    // the per-rule construction: one PairGenerator.pairs join per rule, tagged and
+    // unioned with the u pairs before the gamma aggregation
+    def perRule(df: org.apache.spark.sql.DataFrame, specs: Seq[ComparisonSpec],
+        rules: Seq[BlockingRule], uPairs: org.apache.spark.sql.DataFrame,
+        right: Option[org.apache.spark.sql.DataFrame]) = {
+      val sides = specs.flatMap(s => Seq(col(s"${s.column}_l"), col(s"${s.column}_r")))
+      val tagged = rules.indices.map { i =>
+        PairGenerator.pairs(df, right, "id", specs.map(_.column), Seq(rules(i)))
+          .select((lit(i).as("_rule_idx") +: sides): _*)
+      } :+ uPairs.select((lit(-1).as("_rule_idx") +: sides): _*)
+      Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
+        .groupBy((col("_rule_idx") +: specs.map(s => col(s"gamma_${s.column}"))): _*)
+        .agg(count(lit(1)).as("cnt"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // `n` is null on every row; `a` repeats, `b` splits the a-blocks
+    val df = (0 until 24).map(i => (s"u$i", s"a${i % 4}", s"b${i % 3}", null: String))
+      .toDF("id", "a", "b", "n")
+    val specs = Seq(ComparisonSpec("a", "levenshtein", 1), ComparisonSpec("b", "jaccard", 0.8),
+      ComparisonSpec("n", "jaro_winkler", 0.9))
+    // an AND rule; an OR rule whose branches block overlapping pairs (kept once); a rule
+    // on the all-null column (blocks nothing); a width-1 rule next to the width-2 ones
+    val rules = Seq("a&b", "(l.a = r.a) OR (l.b = r.b)", "a&n", "l.b = r.b")
+      .map(BlockingRule.parse)
+    val (l, r) = (df.filter(col("id") < "u2"), df.filter(col("id") >= "u2"))
+    val uPairs = Estimation.uSamplePairs(df, "id", Seq("a", "b", "n"), 40L,
+      hashShuffle = true, seed = 42L)
+    for ((left, right) <- Seq((df, None), (l, Some(r)))) {
+      val mode = if (right.isEmpty) "dedupe" else "link"
+      val got = rows(Estimation.patternTable(left, "id", specs, rules, rules.indices,
+        Some(uPairs), right))
+      assert(got === rows(perRule(left, specs, rules, uPairs, right)), mode)
+      assert(got.exists(_.startsWith("1|")) && !got.exists(_.startsWith("2|")), mode)
+    }
+    // a one-attribute input: the single width-1 rule
+    val one = Seq(ComparisonSpec("a", "levenshtein", 1))
+    val oneRule = Seq(BlockingRule.parse("l.a = r.a"))
+    val oneU = Estimation.uSamplePairs(df, "id", Seq("a"), 40L, hashShuffle = true, 42L)
+    assert(rows(Estimation.patternTable(df, "id", one, oneRule, Seq(0), Some(oneU), None)) ===
+      rows(perRule(df, one, oneRule, oneU, None)))
+  }
+
   test("EM single-iteration update matches the closed form at double precision") {
     // 5 records, 2 blocks, 4 pairs → agreement patterns (γa,γb): (2,2)×1, (0,0)×2,
     // (2,1)×1. The expected values below are the Fellegi–Sunter EM equations written
@@ -456,6 +523,40 @@ class LinkageSpec extends SparkSpec {
         }
       }
     } finally tracker.close()
+  }
+
+  test("search setup from the u pool probe equals the distributed setup") {
+    import graft.auto.AutoLinker
+    import graft.metrics.EntropyMetrics
+    val attrs = Seq("a", "nul", "one")
+    // `nul` holds no value, `one` a single one; `a` has 5 values and some nulls
+    val df = (0 until 60)
+      .map(i => (s"u$i", if (i % 7 == 0) null else s"a${i % 5}", null: String, "x"))
+      .toDF("id", "a", "nul", "one").repartition(3).cache()
+    def pairs(p: org.apache.spark.sql.DataFrame) = p.collect().map(_.toSeq.mkString("|")).toSeq
+    try {
+      val local = AutoLinker.searchSetup(df, "id", attrs, hashShuffle = true)
+      val dist = AutoLinker.searchSetup(df, "id", attrs, hashShuffle = true, cap = 0)
+      assert(local.nRows === 60L && dist.nRows === 60L)
+      assert(local.distinct === Map("a" -> 5L, "nul" -> 0L, "one" -> 1L))
+      assert(dist.distinct === local.distinct)
+      assert(EntropyMetrics.distinctCounts(df, attrs) === local.distinct)
+      assert(pairs(local.uPairs).nonEmpty)
+      assert(pairs(dist.uPairs) === pairs(local.uPairs))
+      assert(pairs(local.uPairs) === pairs(Estimation.uSamplePairs(df, "id", attrs, 240L,
+        hashShuffle = true, seed = 42L)))
+      // the uid-ordered pairing reads the whole pool from the probe, and rejects a
+      // pool past it
+      assert(pairs(AutoLinker.searchSetup(df, "id", attrs, hashShuffle = false).uPairs) ===
+        pairs(Estimation.uSamplePairs(df, "id", attrs, 240L, hashShuffle = false, 42L)))
+      intercept[IllegalArgumentException](
+        AutoLinker.searchSetup(df, "id", attrs, hashShuffle = false, cap = 0))
+      // an empty input has nothing to link, on either path
+      Seq(Estimation.uPoolCap(100000L), 0).foreach { cap =>
+        intercept[IllegalArgumentException](
+          AutoLinker.searchSetup(df.limit(0), "id", attrs, hashShuffle = true, cap = cap))
+      }
+    } finally df.unpersist()
   }
 
   /** The E4–E8 expression pipeline the driver rule expansion replaced, per OR-size `n`

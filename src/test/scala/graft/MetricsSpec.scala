@@ -306,6 +306,18 @@ class MetricsSpec extends SparkSpec {
     assert(SchemaMatch.greedyMapping(left, right, left.columns, right.columns) === expected)
   }
 
+  test("schema match on the driver equals the distributed pairing counts") {
+    // (a, c) and (a, d) tie at 4 matches and the names break the tie, which leaves d
+    // to b. Cleaning folds "X-1" and "x1" together; nulls match nothing.
+    val left = Seq(("x1", "p"), ("X-1", "p"), ("y", null), (null, "q")).toDF("a", "b")
+    val right = Seq(("x1", "x1", 1), ("x1", "x1", 2), ("z", "p", 3)).toDF("c", "d", "e")
+    val expected = SchemaMatch.greedyMapping(left, right, left.columns, right.columns, 0)
+    assert(SchemaMatch.greedyMapping(left, right, left.columns, right.columns) === expected)
+    assert(expected === Seq(("a", "c", 4L), ("b", "d", 2L)))
+    // a probe past the cap falls back to the distributed counts
+    assert(SchemaMatch.greedyMapping(left, right, left.columns, right.columns, 3) === expected)
+  }
+
   test("maxDistinct and auto-link accept a single attribute column") {
     val rnd = new scala.util.Random(13)
     val names = (0 until 30).map(_ => (1 to 8).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString)
